@@ -1,11 +1,35 @@
 package graft
 import java.nio.file.{Files, Paths}
 object Bench {
+  /** The core count of a drive from SPARK_GRAFT_CPUS: unset or "*"
+    * (Spark's every-core master) is the machine's core count, a
+    * positive integer is itself, anything else fails. */
+  private[graft] def cpusOf(setting: Option[String]): Int =
+    setting.map(_.trim) match {
+      case None | Some("*") => Runtime.getRuntime.availableProcessors
+      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(sys.error(
+        s"SPARK_GRAFT_CPUS must be a positive integer or '*', got '$v'"))
+    }
+
+  /** The floors of a floors file (`{"query@cpus": seconds, …}`) that
+    * judge a drive at `cpus` cores. An untagged key is a 32-core floor;
+    * a tagged key wins over an untagged one for the same query. */
+  private[graft] def floorsAt(json: String, cpus: Int): Map[String, Double] = {
+    val entries = "\"([^\"@]+)(?:@([0-9]+))?\":\\s*([0-9.]+)".r
+      .findAllMatchIn(json)
+      .map(m => (m.group(1), Option(m.group(2)), m.group(3).toDouble))
+      .filter { case (_, tag, _) => tag.fold(32)(_.toInt) == cpus }
+      .toSeq
+    (entries.filter(_._2.isEmpty) ++ entries.filter(_._2.isDefined))
+      .map { case (name, _, floor) => name -> floor }.toMap
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core (driver contract: local[32] on the 32-cpu box)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+    // default to every core (driver contract: local[32] on the 32-cpu box);
+    // an integer from here on: the JSON artifacts write it as a bare
+    // number and it keys the floors
+    val cpus = cpusOf(sys.env.get("SPARK_GRAFT_CPUS"))
     // load indicator (VERDICT r15 item 2c): capture /proc/loadavg at
     // sweep start and end so a contended window is attributable from
     // the artifact alone, without a re-run
@@ -13,7 +37,7 @@ object Bench {
       try Files.readString(Paths.get("/proc/loadavg")).trim
       catch { case _: Throwable => "" }
     val loadStart = loadavg()
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local(cpus.toString)
     // untimed warmup: JIT + codegen + parquet footer caches otherwise
     // land entirely on the alphabetically-first query (d01 measured
     // ~4.5 s of which ~4 s was first-query warmup, not the operator)
@@ -163,14 +187,16 @@ object Bench {
     // sf0.1, so cross-core comparison guarantees spurious rechecks).
     // A drive at a core count with no recorded floors simply runs
     // unguarded; its artifact seeds the floors for the next round.
+    // Untagged legacy keys are 32-core floors (every pre-r16 official
+    // drive was; tools/update_floors.py migrates them the same way), a
+    // tagged key wins over an untagged one for the same query, and the
+    // artifact records how many floors matched — zero is then visible
+    // instead of looking like a guarded drive.
     val floorsPath =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_FLOORS", "bench_floors.json")
     val floors: Map[String, Double] =
       if (!Files.exists(Paths.get(floorsPath))) Map.empty
-      else ("\"([^\"@]+)@" + java.util.regex.Pattern.quote(cpus) +
-          "\":([0-9.]+)").r
-        .findAllMatchIn(Files.readString(Paths.get(floorsPath)))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      else floorsAt(Files.readString(Paths.get(floorsPath)), cpus)
     lastFam = ""
     val guarded = results.map { r =>
       floors.get(r.name) match {
@@ -235,6 +261,7 @@ object Bench {
     val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""timing":"min_of_runs","total_cold":${fmt(totalCold)},""" +
       s""""total_sweep":${fmt(totalSweep)},"cpus":$cpus,""" +
+      s""""floors_matched":${floors.size},""" +
       s""""load_start":"$loadStart","load_end":"$loadEnd",""" +
       s""""queries":$qs,"runs":$runs,"contended":$contended,""" +
       s""""isolated":$isolated,"floor_rechecks":$floorRechecked,""" +
@@ -254,7 +281,7 @@ object Bench {
     val summary =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
       s""""timing":"min_of_runs","queries":$slow,"failed":$failed,""" +
-      s""""n":${guarded.size},"cpus":$cpus,""" +
+      s""""n":${guarded.size},"cpus":$cpus,"floors_matched":${floors.size},""" +
       s""""load_start":"$loadStart","load_end":"$loadEnd",""" +
       s""""queries_full":"$out","sf":"$sfDir"}"""
     // Shutdown ORDER matters for the official artifact: the r13 record
@@ -263,10 +290,13 @@ object Bench {
     // RpcEnvStoppedException wall. Quiesce the streaming machinery
     // FIRST (stop any stray active query, then the StateStore
     // maintenance task + loaded providers), THEN stop Spark, THEN print.
+    // Only non-fatal teardown noise is absorbed: a fatal error (OOM,
+    // interrupt) ends the process without the summary line, so a drive
+    // that died cannot read as a clean one.
     try {
       graft.Sessions.quiesceStreaming(spark)
       spark.stop()
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(_) => () }
     println(summary)
   }
 }

@@ -22,27 +22,15 @@ object Sessions {
   def local(cpus: String): SparkSession = {
     val shuffleParts =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val b = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffleParts)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    // §2.2 probe knob (r16, VERDICT item 3 — adjudicating the r15
-    // 8-core-beats-32 inversion): when set (e.g. "64m"), AQE sizes
-    // post-shuffle partitions by BYTES — parallelismFirst=false with
-    // this advisory target — instead of coalescing only down to the
-    // default parallelism. This is the same knob a cluster sizes by
-    // input bytes (guide §2.2/§9); OFF by default pending the
-    // measured verdict (PERF.md r16) so bench comparability holds.
-    sys.env.get("SPARK_GRAFT_AQE_ADVISORY").foreach { sz =>
-      b.config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-          "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", sz)
-    }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   /** Quiesce streaming machinery BEFORE `spark.stop()` in a main that

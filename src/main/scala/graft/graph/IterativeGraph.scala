@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftExpressionBridge.localCheckpointPartitioned
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixed-iteration graph algorithms as pure DataFrame
@@ -12,13 +13,29 @@ import org.apache.spark.sql.functions._
   * to Catalyst and their tol-based stopping makes outputs
   * platform-sensitive. A FIXED iteration count over DataFrame joins is
   * (a) bit-deterministic → DuckDB-oracle-checkable, and (b) fully
-  * visible to Catalyst/AQE — each superstep is a shuffled equi-join +
-  * partial agg that inherits skew handling and broadcast decisions.
+  * visible to Catalyst/AQE — each superstep is a keyed equi-join +
+  * aggregate that inherits skew handling and broadcast decisions.
   * `localCheckpoint` per superstep cuts the exponential lineage.
   *
-  * At 1000-executor scale each superstep keys by dst — the same shuffle
-  * a Pregel aggregateMessages does — so this form loses nothing
-  * structurally while staying in Tungsten row format end-to-end.
+  * SUPERSTEP SHAPE of the driver loops (PageRank, BFS/SSSP, walks):
+  * the graph side is an artifact built ONCE per session ([[graft.Memo]],
+  * keyed by the edge frame's [[graft.Memo.planKey]]) and hash-partitioned
+  * by its join key (`src`) into the session's shuffle-partition count;
+  * it never moves again. The PageRank and BFS/SSSP state (ranks,
+  * distances) stays partitioned by vertex id into the same count, so
+  * the state ⋈ graph join is narrow (a `shuffle_hash` hint over
+  * co-partitioned sides — no exchange, no broadcast of the edge side),
+  * and each superstep ends in ONE exchange (`repartition(n, id)` of its
+  * messages) and one checkpoint that keeps that partitioning
+  * (`localCheckpointPartitioned`; plain `localCheckpoint` forgets it
+  * under AQE). A walk frontier has no
+  * vertex key — its one exchange per hop moves it to its current node.
+  * Under AQE every exchange and every broadcast is its own job, and on
+  * small stages the per-job overhead, not compute, is the superstep's
+  * cost — so the job count per superstep is the figure this shape
+  * minimizes. An explicit `repartition(n, key)` is never coalesced by
+  * AQE, which is what keeps the two sides' partitionings equal from
+  * superstep to superstep.
   */
 object IterativeGraph {
 
@@ -30,28 +47,80 @@ object IterativeGraph {
     graft.Caches.cached(edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"))))
 
+  /** The partition count of every superstep artifact and state frame:
+    * the session's shuffle-partition count. Co-partitioned sides join
+    * without an exchange only when both use the same count. */
+  private def parts(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** A session-memoized graph artifact hash-partitioned by `src` into
+    * [[parts]] partitions; `kind` names what `build` derives from the
+    * edge frame. Keyed by the edge frame's canonicalized-plan digest
+    * ([[graft.Memo.planKey]]): semantic twins — and only those — share
+    * an entry, so an equivalent edge frame built by another query reuses
+    * the artifact instead of persisting a second one. Released at Memo
+    * family boundaries like every non-table entry. */
+  private def bySrc(edges: DataFrame, kind: String)(
+      build: => DataFrame): DataFrame = {
+    val n = parts(edges.sparkSession)
+    graft.Memo.df(edges.sparkSession,
+        s"$kind|${graft.Memo.planKey(edges)}|$n") {
+      build.repartition(n, col("src"))
+    }
+  }
+
   /** PageRank, `iters` synchronous supersteps:
     * r₀ = 1; r₊(v) = resetProb + (1−resetProb)·Σ_{u→v} r(u)/outdeg(u).
     * Unnormalized (GraphFrames/GraphX convention — scores sum ≈ N);
     * dangling mass is dropped, isolated vertices stay at resetProb.
-    * Output: (id, rank). */
+    * Output: (id, rank).
+    *
+    * Scale shape: the (src, dst, outdeg) edge artifact builds once per
+    * session, partitioned by src; each superstep is a narrow join of
+    * the id-partitioned ranks against it, then `repartition(n, id)` →
+    * aggregate → checkpoint — one exchange (the messages) per
+    * superstep. Every current rank row enters the aggregate as a
+    * flagged zero message, so only vertex ids survive and a vertex
+    * with no in-edges still gets its row, without a join back to
+    * `vertices`. */
   def pageRankFixed(vertices: DataFrame, edges: DataFrame, iters: Int,
-      resetProb: Double = 0.15): DataFrame = {
-    val v = vertices.select("id")
-    val out = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = graft.Caches.cached(edges.select("src", "dst").join(out, "src"))
-    var ranks = v.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") / col("outdeg")).as("in_sum"))
-      ranks = v.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(resetProb) + lit(1 - resetProb) * coalesce(col("in_sum"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint()
+      resetProb: Double = 0.15): DataFrame =
+    pageRankLoop(vertices, pageRankEdges(edges),
+      col("rank") / col("outdeg"), iters, resetProb)
+
+  /** The (src, dst, outdeg) artifact [[pageRankFixed]] iterates over. */
+  private[graft] def pageRankEdges(edges: DataFrame): DataFrame =
+    bySrc(edges, "pageRankEdges") {
+      val out = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      edges.select("src", "dst").join(out, "src")
     }
+
+  /** The PageRank driver loop over a src-partitioned edge artifact;
+    * `msg` is the mass one edge carries, over the artifact's columns
+    * and the source's `rank`. */
+  private def pageRankLoop(vertices: DataFrame, e: DataFrame, msg: Column,
+      iters: Int, resetProb: Double): DataFrame = {
+    val n = parts(vertices.sparkSession)
+    var ranks = vertices.select(col("id"), lit(1.0).as("rank"))
+      .repartition(n, col("id"))
+    for (_ <- 1 to iters)
+      ranks = localCheckpointPartitioned(pageRankStep(e, ranks, msg, resetProb))
     ranks
+  }
+
+  /** One PageRank superstep before its checkpoint: `ranks` is the
+    * id-partitioned state, `e` the src-partitioned edge artifact. */
+  private[graft] def pageRankStep(e: DataFrame, ranks: DataFrame,
+      msg: Column, resetProb: Double): DataFrame = {
+    val msgs = e
+      .join(ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
+      .select(col("dst").as("id"), msg.as("m"), lit(0).as("__v"))
+    msgs.unionAll(ranks.select(col("id"), lit(0.0).as("m"), lit(1).as("__v")))
+      .repartition(parts(e.sparkSession), col("id"))
+      .groupBy("id").agg(sum("m").as("in_sum"), max("__v").as("__v"))
+      .filter(col("__v") === 1)
+      .select(col("id"),
+        (lit(resetProb) + lit(1 - resetProb) * col("in_sum")).as("rank"))
   }
 
   /** Synchronous label propagation, `iters` supersteps, DETERMINISTIC:
@@ -92,28 +161,19 @@ object IterativeGraph {
     * [[pageRankFixed]] (unnormalized, dangling mass dropped); on the
     * customer→part graph the weight is the average order quantity, so
     * rank flows toward heavily-bought parts rather than merely
-    * often-bought ones. Same superstep shuffle shape as the unweighted
-    * form; output rounds at the caller (the g15 weighted-sum
+    * often-bought ones. Same superstep shape as the unweighted form
+    * (its (src, dst, weight, outw) artifact memoizes the same way);
+    * output rounds at the caller (the g15 weighted-sum
     * precedent: iterated double sums order-differ in the last ulp
     * across engines). Output: (id, rank). */
   def pageRankWeightedFixed(vertices: DataFrame, edges: DataFrame,
       iters: Int, resetProb: Double = 0.15): DataFrame = {
-    val v = vertices.select("id")
-    val outW = edges.groupBy("src").agg(sum("weight").as("outw"))
-    val e = graft.Caches.cached(
-      edges.select("src", "dst", "weight").join(outW, "src"))
-    var ranks = v.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("rank") * col("weight") / col("outw")).as("in_sum"))
-      ranks = v.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(resetProb) + lit(1 - resetProb) * coalesce(col("in_sum"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint()
+    val e = bySrc(edges, "pageRankWeightedEdges") {
+      val outW = edges.groupBy("src").agg(sum("weight").as("outw"))
+      edges.select("src", "dst", "weight").join(outW, "src")
     }
-    ranks
+    pageRankLoop(vertices, e, col("rank") * col("weight") / col("outw"),
+      iters, resetProb)
   }
 
   /** HITS (hubs & authorities), `iters` synchronous supersteps with L2
@@ -171,27 +231,13 @@ object IterativeGraph {
     * frontier relaxation over symmetrized edges: dist₀(src)=0;
     * dist₊(v) = min(dist(v), min over neighbours + 1). Deterministic
     * integer math → SQL-oracle-checkable (g13); the distance-only twin
-    * of PropertyGraph.bfs (which materializes paths). Output:
-    * (id, dist) for vertices reached within `iters` hops. */
-  def bfsDistances(edges: DataFrame, sourceId: Long, iters: Int): DataFrame = {
-    val sym = symmetrize(edges)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var dist = Seq((sourceId, 0)).toDF("id", "dist")
-    for (i <- 1 to iters) {
-      // relax only the CURRENT frontier (dist = i−1): vertices reached
-      // earlier already relaxed their neighbours when they were the
-      // frontier, so re-expanding them costs a join for nothing —
-      // BFS level order guarantees identical distances either way
-      val relaxed = sym
-        .join(dist.filter(col("dist") === i - 1).withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
-      dist = dist.unionAll(relaxed)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint()
-    }
-    dist
-  }
+    * of PropertyGraph.bfs (which materializes paths). The unit-cost
+    * case of [[ssspWeighted]]'s rounds: with unit costs the improved
+    * frontier of a round is exactly the newly reached BFS level.
+    * Output: (id, dist) for vertices reached within `iters` hops. */
+  def bfsDistances(edges: DataFrame, sourceId: Long, iters: Int): DataFrame =
+    relaxRounds(symmetrizedCosts(edges, "bfsEdges", lit(1L)), sourceId, iters)
+      .select(col("id"), col("dist").cast("int").as("dist"))
 
   /** Single-source WEIGHTED shortest distances: `iters` synchronous
     * Bellman–Ford rounds over symmetrized positive-integer-cost edges —
@@ -206,34 +252,54 @@ object IterativeGraph {
     * contributed that same dist+cost the round it was set, and the
     * min-merge keeps the contribution — identical output to full
     * relaxation, one frontier-sized join per superstep instead of an
-    * all-reached one. At cluster scale the frontier join shuffles on
-    * src (the edge table's natural key) and the min-merge on id; both
-    * partial-aggregate map-side. */
+    * all-reached one.
+    *
+    * Scale shape: the symmetrized (src, dst, w) edges build once per
+    * session, partitioned by src. A round joins the id-partitioned
+    * frontier against them narrowly, then ONE aggregation over the
+    * old distances (tagged as old) plus the relaxed ones yields the new
+    * distance and the improved flag together (min over the old-tagged
+    * rows vs the new min) — one exchange and one checkpoint per round;
+    * the next frontier is a filter on that checkpoint. */
   def ssspWeighted(edges: DataFrame, sourceId: Long, iters: Int,
-      costCol: String): DataFrame = {
-    val sym = graft.Caches.cached(
-      edges.select(col("src"), col("dst"), col(costCol).cast("long").as("w"))
+      costCol: String): DataFrame =
+    relaxRounds(symmetrizedCosts(edges, s"ssspEdges|$costCol",
+      col(costCol).cast("long")), sourceId, iters)
+
+  /** Both directions of every edge as (src, dst, w), the [[bySrc]]
+    * artifact [[relaxRounds]] iterates over. */
+  private def symmetrizedCosts(edges: DataFrame, kind: String,
+      w: Column): DataFrame =
+    bySrc(edges, kind) {
+      edges.select(col("src"), col("dst"), w.as("w"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
-          col(costCol).cast("long").as("w"))))
-    val spark = edges.sparkSession
+          w.as("w")))
+    }
+
+  /** `iters` improved-frontier Bellman–Ford rounds from `sourceId` over
+    * a src-partitioned (src, dst, w) artifact. Output: (id, dist). */
+  private def relaxRounds(sym: DataFrame, sourceId: Long,
+      iters: Int): DataFrame = {
+    val spark = sym.sparkSession
     import spark.implicits._
-    var dist = Seq((sourceId, 0L)).toDF("id", "dist")
-    var frontier = dist
+    val n = parts(spark)
+    var state = Seq((sourceId, 0L, true)).toDF("id", "dist", "improved")
+      .repartition(n, col("id"))
     for (_ <- 1 to iters) {
       val relaxed = sym
-        .join(frontier.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val merged = dist.unionAll(relaxed)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      frontier = merged
-        .join(dist.select(col("id"), col("dist").as("__old")), Seq("id"), "left")
-        .filter(col("__old").isNull || col("dist") < col("__old"))
-        .select("id", "dist")
-        .localCheckpoint()
-      dist = merged
+        .join(state.filter(col("improved"))
+          .select(col("id").as("src"), col("dist")).hint("shuffle_hash"), "src")
+        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"),
+          lit(null).cast("long").as("__old"))
+      state = localCheckpointPartitioned(
+        state.select(col("id"), col("dist"), col("dist").as("__old"))
+          .unionAll(relaxed)
+          .repartition(n, col("id"))
+          .groupBy("id").agg(min("dist").as("dist"), min("__old").as("__old"))
+          .select(col("id"), col("dist"),
+            (col("__old").isNull || col("dist") < col("__old")).as("improved")))
     }
-    dist
+    state.select("id", "dist")
   }
 
   /** HyperBall / ANF sketches (Boldi & Vigna 2013; Palmer et al.'s
@@ -690,65 +756,73 @@ object IterativeGraph {
     * of DeepWalk/node2vec: fixed-length walks over the symmetrized
     * graph, emitted as node-id sequences for sequence-model training.
     * The "random" next hop is a content-hashed index into the
-    * neighbor list RANKED by dst — md5(salt|walk_id|step) mod degree —
+    * neighbor list SORTED by dst — md5(salt|walk_id|step) mod degree —
     * so the corpus is a pure function of (graph, starts, salt): no
     * RNG, reproducible across engines/runs/partitionings, and a fresh
     * salt yields a fresh epoch of walks (the epochShuffle convention).
     *
-    * Scale shape: the ranked adjacency + degree tables build once
-    * (one vertex-keyed window over the edge list, cached); each of the
-    * `steps` supersteps is ONE keyed join of the |starts|-sized
-    * frontier against them — the frontier never grows, and the edge
-    * list never re-materializes (the g21 lesson). Starts with no
-    * edges emit nothing (a walk needs a first hop).
+    * Scale shape: the [[adjacencyLists]] artifact builds once per
+    * session; each of the `steps` supersteps is ONE keyed lookup of the
+    * |starts|-sized frontier against it (the frontier's exchange by its
+    * current node is the superstep's only data movement) — the
+    * frontier never grows, and the edge list never re-materializes
+    * (the g21 lesson). Starts with no edges emit nothing (a walk needs
+    * a first hop).
     * Output: (walk_id, seq) — seq the space-joined node-id path of
     * `steps`+1 nodes. */
-  /** Ranked adjacency + degree tables for the walk family — a pure
-    * function of the edge list, built by every g26–g31 query, so it
-    * memoizes at session scope like the edge list itself (the
-    * materialized-view move a production deployment makes: the
-    * adjacency IS the serving artifact of a walk engine). Keyed by
-    * the edge frame's canonicalized-plan MD5 ([[graft.Memo.planKey]]):
-    * semantic twins — and only those — share the entry, so a
-    * non-Memo'd caller with an equivalent edge frame reuses the
-    * cached pair instead of leaking a fresh persisted one, and two
-    * different live edge frames can never collide (identity hash
-    * codes, used here before r11, are not unique and can be reused
-    * after GC). Released at Memo family boundaries like every
-    * non-table entry. */
-  private def rankedAdjacency(edges: DataFrame): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    graft.Memo.obj(edges.sparkSession,
-      s"walkAdj|${graft.Memo.planKey(edges)}") {
-      val adj = symmetrize(edges).distinct().withColumn("rnk",
-        row_number().over(Window.partitionBy("src").orderBy("dst"))).persist()
-      val deg = adj.groupBy("src").agg(count(lit(1)).as("deg")).persist()
-      (adj, deg)
-    }
-  }
-
   def walkCorpus(edges: DataFrame, starts: DataFrame, steps: Int,
       salt: String): DataFrame = {
     require(steps > 0, "steps must be positive")
-    val (adj, deg) = rankedAdjacency(edges)
-    var state = starts.select(col("id").cast("long").as("walk_id"))
-      .join(deg.select(col("src").as("walk_id")), Seq("walk_id"), "left_semi")
-      .select(col("walk_id"), col("walk_id").as("cur"),
-        col("walk_id").cast("string").as("seq"))
-    for (i <- 1 to steps) {
-      val pick = (conv(substring(md5(concat_ws("|", lit(salt),
-          col("walk_id"), lit(i))), 1, 8), 16, 10).cast("long")
-        % col("deg")) + 1
-      state = state
-        .join(deg.withColumnRenamed("src", "cur"), Seq("cur"))
-        .withColumn("__pick", pick)
-        .join(adj.select(col("src").as("cur"), col("dst"),
-          col("rnk").as("__pick")), Seq("cur", "__pick"))
-        .select(col("walk_id"), col("dst").as("cur"),
-          concat_ws(" ", col("seq"), col("dst").cast("string")).as("seq"))
-    }
+    val adj = adjacencyLists(edges)
+    var state = walkStarts(starts)
+    for (i <- 1 to steps)
+      state = withNeighbours(state, adj)
+        .withColumn("__next", uniformPick(salt, i))
+        .select(col("walk_id"), col("__next").as("cur"), extendSeq)
     state.select("walk_id", "seq")
   }
+
+  /** Every vertex's neighbours in the symmetrized graph as one
+    * ascending, duplicate-free array — (src, nb), memoized and
+    * partitioned by src like a [[bySrc]] artifact (the grouping runs
+    * over the src-partitioned pairs, so the build shuffles once). The
+    * walk family's serving artifact: a pure function of the edge list,
+    * built by every g26–g31 query, so it memoizes at session scope like
+    * the edge list itself, and a hop reads a neighbour's rank as its
+    * array index instead of through a per-vertex window. */
+  private def adjacencyLists(edges: DataFrame): DataFrame = {
+    val n = parts(edges.sparkSession)
+    graft.Memo.df(edges.sparkSession,
+        s"walkAdj|${graft.Memo.planKey(edges)}|$n") {
+      edges.select(col("src"), col("dst"))
+        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .repartition(n, col("src"))
+        .groupBy("src").agg(array_sort(collect_set(col("dst"))).as("nb"))
+    }
+  }
+
+  private def walkStarts(starts: DataFrame): DataFrame =
+    starts.select(col("id").cast("long").as("walk_id"))
+      .select(col("walk_id"), col("walk_id").as("cur"),
+        col("walk_id").cast("string").as("seq"))
+
+  /** The frontier joined to its current node's neighbour list: `cur`
+    * becomes `src`, and `nb` is added. Walks at a node with no list
+    * drop. */
+  private def withNeighbours(state: DataFrame, adj: DataFrame): DataFrame =
+    state.withColumnRenamed("cur", "src").hint("shuffle_hash").join(adj, "src")
+
+  private def hashBits(salt: String, step: Int): Column =
+    conv(substring(md5(concat_ws("|", lit(salt), col("walk_id"),
+      lit(step))), 1, 8), 16, 10).cast("long")
+
+  /** The 1-based `(md5 mod degree) + 1`-th neighbour of `nb`. */
+  private def uniformPick(salt: String, step: Int): Column =
+    element_at(col("nb"),
+      ((hashBits(salt, step) % size(col("nb"))) + 1).cast("int"))
+
+  private val extendSeq: Column =
+    concat_ws(" ", col("seq"), col("__next").cast("string")).as("seq")
 
   /** node2vec-BIASED deterministic walk corpus (g28) — the
     * second-order extension of [[walkCorpus]] (Grover & Leskovec
@@ -766,56 +840,75 @@ object IterativeGraph {
     * (0.5, 0.25, …) — then u, every cumulative sum, and u·total are
     * exact in both engines' doubles (u has ≤32 significand bits;
     * weights are multiples of 2⁻ᵏ), and the > comparison can never
-    * split across engines while 32 + log₂(2ᵏ·deg) < 53.
+    * split across engines while 32 + log₂(2ᵏ·deg) < 53. Both the total
+    * and the running sums are folded in rank order.
     *
-    * Scale shape: same superstep frontier joins as walkCorpus plus,
-    * per hop, one (prev, dst)-keyed join against the cached adjacency
-    * for the distance-1 test and a walk-local window over ≤deg(cur)
-    * candidate rows — linear in frontier×degree, and the edge list
-    * never re-materializes. */
+    * Scale shape: the same [[adjacencyLists]] artifact and one keyed
+    * lookup per hop as walkCorpus; the previous node's list rides in
+    * the frontier row (it was the current list one hop earlier), so a
+    * hop needs no second lookup. The pick is two folds over the sorted
+    * current list: one for the total weight, one for the running sum
+    * and the first rank past u·total. The distance-1 test is a hash
+    * intersection of the two lists, walked in step with the fold —
+    * linear in deg(cur) + deg(prev), with no window and no
+    * per-candidate row. */
   def node2vecWalks(edges: DataFrame, starts: DataFrame, steps: Int,
       returnWeight: Double, outWeight: Double, salt: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(steps > 0, "steps must be positive")
     require(returnWeight > 0 && outWeight > 0, "weights must be positive")
-    val (adj, deg) = rankedAdjacency(edges)
-    def hashBits(step: Int) =
-      conv(substring(md5(concat_ws("|", lit(salt), col("walk_id"),
-        lit(step))), 1, 8), 16, 10).cast("long")
+    val adj = adjacencyLists(edges)
     // hop 1: uniform over cur's neighbors — walkCorpus's arithmetic
-    var state = starts.select(col("id").cast("long").as("walk_id"))
-      .join(deg.select(col("src").as("walk_id")), Seq("walk_id"), "left_semi")
-      .select(col("walk_id"), col("walk_id").as("cur"),
-        col("walk_id").cast("string").as("seq"))
-      .join(deg.withColumnRenamed("src", "cur"), Seq("cur"))
-      .withColumn("__pick", (hashBits(1) % col("deg")) + 1)
-      .join(adj.select(col("src").as("cur"), col("dst"),
-        col("rnk").as("__pick")), Seq("cur", "__pick"))
-      .select(col("walk_id"), col("cur").as("prev"), col("dst").as("cur"),
-        concat_ws(" ", col("seq"), col("dst").cast("string")).as("seq"))
-    val isNbr = adj.select(col("src").as("prev"), col("dst"),
-      lit(1).as("__nb"))
-    for (i <- 2 to steps) {
-      val cand = state
-        .join(adj.withColumnRenamed("src", "cur"), Seq("cur"))
-        .join(isNbr, Seq("prev", "dst"), "left")
-        .withColumn("__w",
-          when(col("dst") === col("prev"), lit(returnWeight))
-            .when(col("__nb").isNotNull, lit(1.0))
-            .otherwise(lit(outWeight)))
-      val byWalk = Window.partitionBy("walk_id")
-      val byRnk = byWalk.orderBy("rnk")
-      state = cand
-        .withColumn("__cum", sum("__w").over(byRnk))
-        .withColumn("__tot", sum("__w").over(byWalk))
-        .withColumn("__u", hashBits(i).cast("double") / lit(4294967296.0))
-        .filter(col("__cum") > col("__u") * col("__tot"))
-        .withColumn("__rn", row_number().over(byRnk))
-        .filter(col("__rn") === 1)
-        .select(col("walk_id"), col("cur").as("prev"), col("dst").as("cur"),
-          concat_ws(" ", col("seq"), col("dst").cast("string")).as("seq"))
-    }
+    var state = withNeighbours(walkStarts(starts), adj)
+      .withColumn("__next", uniformPick(salt, 1))
+      .select(col("walk_id"), col("src").as("prev"), col("nb").as("pnb"),
+        col("__next").as("cur"), extendSeq)
+    for (i <- 2 to steps)
+      state = node2vecHop(state, adj, i, returnWeight, outWeight, salt)
     state.select("walk_id", "seq")
+  }
+
+  /** One biased node2vec hop (step `i` ≥ 2) of a (walk_id, prev, pnb,
+    * cur, seq) frontier, `pnb` being prev's neighbour list. The lists
+    * and thresholds enter each fold through its start value, so they
+    * are evaluated once per walk, never per candidate. */
+  private def node2vecHop(state: DataFrame, adj: DataFrame, i: Int,
+      returnWeight: Double, outWeight: Double, salt: String): DataFrame = {
+    // the common neighbours of cur and prev, in nb's (ascending) order;
+    // `j` walks it in step with the fold over nb
+    def weighed(acc: Column, x: Column): (Column, Column) = {
+      val hit = coalesce(get(acc.getField("c"), acc.getField("j")) === x,
+        lit(false))
+      (acc.getField("j") + hit.cast("int"),
+        when(x === col("prev"), lit(returnWeight))
+          .when(hit, lit(1.0)).otherwise(lit(outWeight)))
+    }
+    val total = aggregate(col("nb"),
+      struct(lit(0).as("j"), lit(0.0).as("s"),
+        array_intersect(col("nb"), col("pnb")).as("c")),
+      (acc, x) => {
+        val (j, w) = weighed(acc, x)
+        struct(j.as("j"), (acc.getField("s") + w).as("s"),
+          acc.getField("c").as("c"))
+      })
+    val u = hashBits(salt, i).cast("double") / lit(4294967296.0)
+    val pick = aggregate(col("nb"),
+      struct(lit(0).as("j"), lit(0.0).as("cum"),
+        lit(null).cast("long").as("pick"), col("__t.c").as("c"),
+        (u * col("__t.s")).as("thr")),
+      (acc, x) => {
+        val (j, w) = weighed(acc, x)
+        val cum = acc.getField("cum") + w
+        struct(j.as("j"), cum.as("cum"),
+          when(acc.getField("pick").isNull && cum > acc.getField("thr"), x)
+            .otherwise(acc.getField("pick")).as("pick"),
+          acc.getField("c").as("c"), acc.getField("thr").as("thr"))
+      },
+      acc => acc.getField("pick"))
+    withNeighbours(state, adj)
+      .withColumn("__t", total)
+      .withColumn("__next", pick)
+      .select(col("walk_id"), col("src").as("prev"), col("nb").as("pnb"),
+        col("__next").as("cur"), extendSeq)
   }
 
   /** Skip-gram (center, context) pair counts from a walk corpus
@@ -1016,7 +1109,8 @@ object IterativeGraph {
     * engines/runs/partitionings.
     *
     * Scale shape: the noise distribution is VOCABULARY-sized (its
-    * global-order cumsum window is the centroid-table pattern), and
+    * node-order cumsum is two-level: node-range blocks summed by a
+    * block-keyed window plus the prefix of the few block totals), and
     * the interval probe is a BUCKETED EQUI-join: interval rows
     * explode over the ~1 bucket of mass-width total/|vocab| they
     * span (≈2 rows per node), draws hash-join on
@@ -1042,12 +1136,29 @@ object IterativeGraph {
       .select(explode(split(col("seq"), " ")).as("__n"))
       .select(col("__n").cast("long").as("node"))
       .groupBy("node").agg(count(lit(1)).as("c")))
-    val dist = counts.withColumn("cum",
-      sum("c").over(Window.orderBy("node")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val stats = counts.agg(sum("c"), count(lit(1))).head
+    val stats = counts.agg(sum("c"), count(lit(1)), min("node"), max("node")).head
     val total = stats.getLong(0)
     val width = math.max(1L, total / math.max(1L, stats.getLong(1)))
+    // cum = the inclusive running mass in node order, built two-level
+    // (the io11 offset construction): node-range blocks, monotone in
+    // node, each summed by a block-keyed window, plus the exclusive
+    // prefix of the block totals — a blocks×blocks join of a table
+    // with at most parts(spark) rows, so no window ever runs over one
+    // global partition
+    val lo = stats.getLong(2)
+    val nBlocks = parts(walks.sparkSession).toLong
+    val blockW = (stats.getLong(3) - lo) / nBlocks + 1
+    val blocked = counts.withColumn("__k", expr(s"(node - $lo) div $blockW"))
+    val blockMass = blocked.groupBy("__k").agg(sum("c").as("__m"))
+    val offsets = blockMass
+      .join(blockMass.select(col("__k").as("__k2"), col("__m").as("__m2")),
+        col("__k2") < col("__k"), "left")
+      .groupBy("__k").agg(coalesce(sum("__m2"), lit(0L)).as("__off"))
+    val dist = blocked
+      .withColumn("__in", sum("c").over(Window.partitionBy("__k").orderBy("node")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .join(broadcast(offsets), "__k")
+      .select(col("node"), col("c"), (col("__off") + col("__in")).as("cum"))
     val distBucketed = dist.withColumn("__b", explode(sequence(
       ((col("cum") - col("c")) / lit(width)).cast("long"),
       ((col("cum") - 1) / lit(width)).cast("long"))))

@@ -330,9 +330,11 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     * cluster at the origin row and the whole layout is integer math —
     * reproducible across engines (a seeded force simulation is
     * platform-float-sensitive; a plotting client that wants physics
-    * can still run it on this export). The global ordering window is
-    * bounded by 2·sampleN rows BY CONSTRUCTION (sample-bounded, like
-    * MMR's k-bound) — it never sees the full graph. Output:
+    * can still run it on this export). The ordering is bounded by
+    * 2·sampleN rows BY CONSTRUCTION (sample-bounded, like MMR's
+    * k-bound) — it never sees the full graph — and is computed as a
+    * degree-keyed rank plus per-degree offsets, never as one global
+    * window. Output:
     * (id, degree, x, y), one row per sampled vertex. */
   def layoutGrid(sampleN: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -344,10 +346,21 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
         .groupBy("id").agg(count(lit(1)).as("degree")))
     val n = deg.count() // bounded by 2·sampleN — one cheap action
     val w = math.max(1L, math.ceil(math.sqrt(n.toDouble)).toLong)
+    // position in (degree DESC, id) order, two-level (the io11 offset
+    // construction): the rank within the vertex's degree, keyed by
+    // degree, plus the count of vertices with a higher degree — a
+    // join of the per-degree counts with themselves, so no window
+    // runs over one global partition
+    val perDegree = deg.groupBy("degree").agg(count(lit(1)).as("__n"))
+    val offsets = perDegree
+      .join(perDegree.select(col("degree").as("__d2"), col("__n").as("__n2")),
+        col("__d2") > col("degree"), "left")
+      .groupBy("degree").agg(coalesce(sum("__n2"), lit(0L)).as("__off"))
     deg
-      .withColumn("__pos",
-        (row_number().over(Window.orderBy(col("degree").desc, col("id"))) - 1)
-          .cast("long"))
+      .withColumn("__rn",
+        row_number().over(Window.partitionBy("degree").orderBy(col("id"))))
+      .join(broadcast(offsets), "degree")
+      .withColumn("__pos", (col("__off") + col("__rn") - 1).cast("long"))
       .select(col("id"), col("degree"),
         (col("__pos") % w).as("x"), expr(s"__pos div $w").as("y"))
   }

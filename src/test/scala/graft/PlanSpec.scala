@@ -671,4 +671,48 @@ class PlanSpec extends SparkSpec {
     // and the names round-trip: the table is listed and re-readable
     assert(spark.catalog.tableExists("graft_planspec_part"))
   }
+
+  /** Shuffle and broadcast exchanges of the final (post-AQE) plan,
+    * query stages included. The cached plans under an
+    * InMemoryTableScan are not its children, so an artifact's own
+    * build exchange is not counted. */
+  private def exchangesOf(df: DataFrame): (Int, Int) = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val all = nodes(df.queryExecution.executedPlan)
+    (all.count(_.isInstanceOf[ShuffleExchangeLike]),
+      all.count(_.isInstanceOf[BroadcastExchangeLike]))
+  }
+
+  test("a PageRank superstep plans one exchange and no broadcast: the state join is narrow") {
+    import graft.graph.{IterativeGraph, PropertyGraph}
+    val g = PropertyGraph.customerPartGraph(spark, sf)
+    val e = IterativeGraph.pageRankEdges(g.edges)
+    val ranks = org.apache.spark.sql.GraftExpressionBridge.localCheckpointPartitioned(
+      g.vertices.select(col("id"), lit(1.0).as("rank"))
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("id")))
+    val step = IterativeGraph.pageRankStep(e, ranks,
+      col("rank") / col("outdeg"), 0.15)
+    assert(exchangesOf(step) == ((1, 0)),
+      s"expected only the message exchange:\n${step.queryExecution.executedPlan}")
+  }
+
+  test("node2vec hops plan one exchange each: no window, no broadcast") {
+    import graft.graph.{IterativeGraph, PropertyGraph}
+    val g = PropertyGraph.customerPartGraph(spark, sf)
+    val starts = g.vertices.filter(col("id") % 50 === 7).select("id")
+    val walks = IterativeGraph.node2vecWalks(g.edges, starts, steps = 3,
+      returnWeight = 0.5, outWeight = 0.25, salt = "walk")
+    val (shuffles, broadcasts) = exchangesOf(walks)
+    val plan = walks.queryExecution.executedPlan.toString
+    assert(shuffles == 3 && broadcasts == 0 && !plan.contains("Window"),
+      s"expected one frontier exchange per hop:\n$plan")
+  }
 }
