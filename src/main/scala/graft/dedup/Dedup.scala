@@ -468,7 +468,7 @@ object Dedup {
   /** Reload the persisted hash index: (text_hash, first_id, hp). */
   def readHashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/hashes")
+    graft.Fs.readParquet(spark, s"$path/hashes")
 
   /** Ingest a batch against the persisted hash index — the production
     * EXACT-dedup loop: (a) dedup WITHIN the batch (min-id row per
@@ -538,27 +538,19 @@ object Dedup {
       .select("text_hash", "first_id")
       .write.mode("append").parquet(s"$path/tombstones")
 
-  private def tombstonesOf(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = s"$path/tombstones"
-    if (graft.Fs.exists(spark, p)) Some(spark.read.parquet(p)) else None
-  }
-
   /** The index minus its tombstones — what the serve path consults.
     * The tombstone side is a tiny broadcast anti-join on the full
     * (text_hash, first_id) key [[tombstoneHashIndex]] resolved, so a
     * post-delete re-admission of the same content (same hash, new
     * first_id) stays live; the index files are untouched. */
   def liveHashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val idx = readHashIndex(spark, path)
-    tombstonesOf(spark, path) match {
-      case Some(ts) =>
-        idx.join(broadcast(ts.select("text_hash", "first_id").distinct()),
-          Seq("text_hash", "first_id"), "left_anti")
-      case None => idx
-    }
-  }
+      path: String): DataFrame =
+    hashIndexMinus(spark, path, graft.Fs.tombstones(spark, path))
+
+  private def hashIndexMinus(spark: org.apache.spark.sql.SparkSession,
+      path: String, ts: Option[DataFrame]): DataFrame =
+    graft.Fs.minusTombstones(readHashIndex(spark, path), ts,
+      "text_hash", "first_id")
 
   /** [[ingestAgainstHashIndex]] with the anti-join taken against the
     * LIVE index (tombstones honored): a re-submission of deleted
@@ -593,8 +585,9 @@ object Dedup {
     * rows. */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    if (tombstonesOf(spark, path).isEmpty) return
-    val live = liveHashIndex(spark, path).localCheckpoint()
+    val ts = graft.Fs.tombstones(spark, path)
+    if (ts.isEmpty) return
+    val live = hashIndexMinus(spark, path, ts).localCheckpoint()
     live.withColumn("hp", substring(col("text_hash"), 1, 1))
       .repartition(col("hp"))
       .write.mode("overwrite").partitionBy("hp")
@@ -795,12 +788,12 @@ object Dedup {
   /** Reload the persisted signature table: (id, mh_0..mh_{H−1}). */
   def readMinhashSignatures(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/signatures")
+    graft.Fs.readParquet(spark, s"$path/signatures")
 
   /** Reload the persisted band table: (id, bh, band). */
   def readMinhashBands(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/bands")
+    graft.Fs.readParquet(spark, s"$path/bands")
 
   /** Ingest a batch against the persisted MinHash index — the
     * production NEAR-dup loop (d26's exact-content mechanics lifted to
@@ -907,19 +900,6 @@ object Dedup {
     deleteIds.select(col(idCol).cast("long").as("id"))
       .write.mode("append").parquet(s"$path/tombstones")
 
-  private def minhashTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = s"$path/tombstones"
-    if (graft.Fs.exists(spark, p)) Some(spark.read.parquet(p)) else None
-  }
-
-  private def minusTombstones(df: DataFrame, ts: Option[DataFrame]): DataFrame =
-    ts match {
-      case Some(t) => df.join(broadcast(t.select("id").distinct()),
-        Seq("id"), "left_anti")
-      case None => df
-    }
-
   /** [[ingestAgainstMinhashIndex]] with both index artifacts taken
     * LIVE (tombstones honored): near-duplicates of deleted docs admit
     * again; everything else behaves identically. */
@@ -939,22 +919,23 @@ object Dedup {
       path: String, numHashes: Int, bands: Int, minJaccard: Double,
       prepared: MinhashBatch): DataFrame = {
     val spark = batch.sparkSession
-    val ts = minhashTombstones(spark, path)
+    val ts = graft.Fs.tombstones(spark, path)
     ingestAgainstMinhashFrames(batch, idCol, path, numHashes,
       bands, minJaccard,
-      minusTombstones(readMinhashBands(spark, path), ts),
-      minusTombstones(readMinhashSignatures(spark, path), ts), prepared)
+      graft.Fs.minusTombstones(readMinhashBands(spark, path), ts, "id"),
+      graft.Fs.minusTombstones(readMinhashSignatures(spark, path), ts, "id"),
+      prepared)
   }
 
   /** Fold tombstones into both artifacts and clear them. */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val ts = minhashTombstones(spark, path)
+    val ts = graft.Fs.tombstones(spark, path)
     if (ts.isEmpty) return
-    val sigs = minusTombstones(readMinhashSignatures(spark, path), ts)
-      .localCheckpoint()
-    val bnds = minusTombstones(readMinhashBands(spark, path), ts)
-      .localCheckpoint()
+    val sigs = graft.Fs.minusTombstones(readMinhashSignatures(spark, path),
+      ts, "id").localCheckpoint()
+    val bnds = graft.Fs.minusTombstones(readMinhashBands(spark, path),
+      ts, "id").localCheckpoint()
     sigs.write.mode("overwrite").parquet(s"$path/signatures")
     bnds.repartition(col("band"))
       .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
@@ -1042,7 +1023,7 @@ object Dedup {
       sk.select(col("id").as(idAs) +:
         (0 until 4).map(i => col(s"band$i").as(s"$pre$i")) :+
         posexplode(array(bandNames.map(col): _*)).as(Seq("band", "bh")): _*)
-    val idx = banded(spark.read.parquet(path), "id_i", "i")
+    val idx = banded(graft.Fs.readParquet(spark, path), "id_i", "i")
     val bsk = banded(graft.Caches.cached(
       simhashPortable(batch, idCol, textCol)), "id_b", "b")
     val hamming = (0 until 4)
@@ -1251,7 +1232,7 @@ object Dedup {
   /** Reload the persisted benchmark gram set: (ng) rows. */
   def readGramIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"$path/grams").select("ng")
+    graft.Fs.readParquet(spark, s"$path/grams").select("ng")
 
   /** Decontaminate a batch against the PERSISTED gram index — the d15
     * semantics served from the artifact ([[writeGramIndex]]): corpus

@@ -108,7 +108,7 @@ object VectorSearch {
     * collect — k-bounded by contract, like the MMR step fetch. */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, Seq[(Int, Array[Float])]) =
-    (spark.read.parquet(s"$path/assignments"),
+    (graft.Fs.readParquet(spark, s"$path/assignments"),
       readIvfIndexCentroids(spark, path))
 
   /** TRAINED-build persisted round trip: build the spherical KMeans
@@ -159,26 +159,18 @@ object VectorSearch {
     deleteIds.select(col(idCol).cast("long").as("neighbor_id"))
       .write.mode("append").parquet(s"$path/tombstones")
 
-  private def ivfTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = s"$path/tombstones"
-    if (graft.Fs.exists(spark, p)) Some(spark.read.parquet(p)) else None
-  }
-
   /** The assignment frame minus tombstoned vectors — what the serve
     * path scores. The tombstone side is delete-batch-sized and
     * broadcast; list-directory pruning is untouched (the anti-join
     * sits above the partitioned scan). */
   def readLiveIvfAssignments(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val assigned = spark.read.parquet(s"$path/assignments")
-    ivfTombstones(spark, path) match {
-      case Some(ts) =>
-        assigned.join(broadcast(ts.select("neighbor_id").distinct()),
-          Seq("neighbor_id"), "left_anti")
-      case None => assigned
-    }
-  }
+      path: String): DataFrame =
+    liveAssignments(spark, path, graft.Fs.tombstones(spark, path))
+
+  private def liveAssignments(spark: org.apache.spark.sql.SparkSession,
+      path: String, ts: Option[DataFrame]): DataFrame =
+    graft.Fs.minusTombstones(
+      graft.Fs.readParquet(spark, s"$path/assignments"), ts, "neighbor_id")
 
   /** Fold tombstones into the list files and clear them: rewrite
     * `assignments` as the live rows (localCheckpoint first — the
@@ -189,8 +181,9 @@ object VectorSearch {
     * rewrite keeps the proof simple. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, listCol: String = "cluster"): Unit = {
-    if (ivfTombstones(spark, path).isEmpty) return
-    val live = readLiveIvfAssignments(spark, path).localCheckpoint()
+    val ts = graft.Fs.tombstones(spark, path)
+    if (ts.isEmpty) return
+    val live = liveAssignments(spark, path, ts).localCheckpoint()
     live.repartition(col(listCol))
       .write.mode("overwrite").partitionBy(listCol)
       .parquet(s"$path/assignments")
@@ -227,7 +220,7 @@ object VectorSearch {
   def readIvfIndexCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Int, Array[Float])] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/centroids")
+    graft.Fs.readParquet(spark, s"$path/centroids")
       .select(col("part"), col("centroid"))
       .as[(Int, Seq[Float])].collect().sortBy(_._1)
       .map { case (i, v) => (i, v.toArray) }.toSeq
@@ -293,7 +286,7 @@ object VectorSearch {
   def readPqCodebooks(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Seq[Array[Float]]] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/codebooks")
+    graft.Fs.readParquet(spark, s"$path/codebooks")
       .select(col("j"), col("ci"), col("code"))
       .as[(Int, Int, Seq[Float])].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -316,7 +309,7 @@ object VectorSearch {
     val coded = Similarity.ivfPqEncodeAssign(corpus, cents, dim, m, kCodes, pqSeed)
     writeIvfPqIndex(coded, cents.zipWithIndex.map(_.swap), books, path)
     val spark = queries.sparkSession
-    val loaded = spark.read.parquet(s"$path/assignments")
+    val loaded = graft.Fs.readParquet(spark, s"$path/assignments")
     Similarity.ivfPqServe(queries, loaded,
       readIvfIndexCentroids(spark, path).map(_._2),
       readPqCodebooks(spark, path), topK, nprobe, dim, m)

@@ -272,26 +272,38 @@ object Sources {
     // the pre-txn 2-column footers with the 4-column (app, batch) ones;
     // footer-sampling a random file would resolve columns by luck
     if (graft.Fs.exists(spark, p))
-      Some(spark.read.option("mergeSchema", "true").parquet(p))
+      Some(graft.Fs.readParquet(spark, Seq(p), mergeSchema = true))
     else None
   }
 
+  /** The manifest's (version, commit) rows in scan order, fetched once
+    * per call — version-count-sized driver work. The latest version
+    * and a version's commit set both derive from these rows, so an
+    * operation needing both scans the manifest once. Empty when the
+    * table doesn't exist yet. */
+  private def manifestRows(spark: SparkSession,
+      path: String): Seq[(Int, String)] = {
+    import spark.implicits._
+    manifestOf(spark, path)
+      .map(_.select("version", "commit").as[(Int, String)].collect().toSeq)
+      .getOrElse(Nil)
+  }
+
+  private def latestOf(rows: Seq[(Int, String)]): Int =
+    rows.map(_._1).maxOption.getOrElse(0)
+
+  private def commitsAt(rows: Seq[(Int, String)], v: Int): Seq[String] =
+    rows.collect { case (`v`, c) => c }
+
   /** Latest committed version (0 when the table doesn't exist yet). */
   def snapshotLatestVersion(spark: SparkSession, path: String): Int =
-    manifestOf(spark, path)
-      .map(_.agg(org.apache.spark.sql.functions.max("version"))
-        .head.getInt(0))
-      .getOrElse(0)
+    latestOf(manifestRows(spark, path))
 
   /** Number of commit dirs version `v` unions — the small-file count
     * an auto-compaction trigger (sw27) watches. Version-count-sized
     * driver work, like every manifest fetch. */
-  def snapshotCommitDirs(spark: SparkSession, path: String, v: Int): Int = {
-    import org.apache.spark.sql.functions.col
-    manifestOf(spark, path)
-      .map(_.filter(col("version") === v).count().toInt)
-      .getOrElse(0)
-  }
+  def snapshotCommitDirs(spark: SparkSession, path: String, v: Int): Int =
+    commitsAt(manifestRows(spark, path), v).size
 
   /** Atomically PUBLISH version `v`'s manifest rows — THE commit
     * point of the optimistic-concurrency protocol: the rows land as
@@ -388,27 +400,46 @@ object Sources {
   def snapshotCommit(df: DataFrame, path: String,
       overwrite: Boolean = false, statsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Int = {
+    val spark = df.sparkSession
+    if (alreadyCommitted(spark, path, txn))
+      return snapshotLatestVersion(spark, path)
+    commitAfter(df, path, overwrite, statsCols, txn,
+      manifestRows(spark, path))
+  }
+
+  // guard on column presence: a table whose manifest predates the
+  // txn columns entirely (all 2-column footers) simply has no
+  // markers — the idempotence check degrades to "not committed"
+  private def alreadyCommitted(spark: SparkSession, path: String,
+      txn: Option[(String, Long)]): Boolean = txn.exists { case (app, batch) =>
+    import org.apache.spark.sql.functions.col
+    manifestOf(spark, path).exists(m =>
+      m.columns.contains("app") && m.columns.contains("batch") &&
+        m.filter(col("app") === app && col("batch") === batch)
+          .limit(1).count() > 0)
+  }
+
+  /** [[snapshotCommit]] after the idempotence check: `seen` is the
+    * manifest as the caller last read it, so the first attempt
+    * targets the version after `seen` without another manifest scan
+    * (a caller that derived `df` from `seen` — merge, optimize —
+    * thereby commits against exactly the state it read). A lost race
+    * re-reads the manifest: that re-read is the concurrency protocol. */
+  private def commitAfter(df: DataFrame, path: String, overwrite: Boolean,
+      statsCols: Seq[String], txn: Option[(String, Long)],
+      seen: Seq[(Int, String)]): Int = {
     import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     import spark.implicits._
-    // guard on column presence: a table whose manifest predates the
-    // txn columns entirely (all 2-column footers) simply has no
-    // markers — the idempotence check degrades to "not committed"
-    def alreadyCommitted: Boolean = txn.exists { case (app, batch) =>
-      manifestOf(spark, path).exists(m =>
-        m.columns.contains("app") && m.columns.contains("batch") &&
-          m.filter(col("app") === app && col("batch") === batch)
-            .limit(1).count() > 0)
-    }
-    if (alreadyCommitted) return snapshotLatestVersion(spark, path)
-    var v = snapshotLatestVersion(spark, path) + 1
+    var rows = seen
+    var v = latestOf(rows) + 1
     val dirName = newCommitDirName(v)
     df.write.mode(SaveMode.Overwrite).parquet(s"$path/data/$dirName")
     if (statsCols.nonEmpty) {
       // zone-map stats describe the FILES, so they are computed from
       // the written dir (one column-pruned scan), not from `df` — a
       // nondeterministic input can't desynchronize stats from data
-      val written = spark.read.parquet(s"$path/data/$dirName")
+      val written = graft.Fs.readParquet(spark, s"$path/data/$dirName")
       val aggs = statsCols.flatMap(c => Seq(
         org.apache.spark.sql.functions.min(col(c).cast("double")).as(s"__mn_$c"),
         org.apache.spark.sql.functions.max(col(c).cast("double")).as(s"__mx_$c")))
@@ -423,15 +454,13 @@ object Sources {
     var attempt = 0
     while (true) {
       val prior: Seq[String] =
-        if (overwrite || v == 1) Seq.empty
-        else manifestOf(spark, path).get.filter(col("version") === v - 1)
-          .select("commit").as[String].collect().toSeq
+        if (overwrite || v == 1) Seq.empty else commitsAt(rows, v - 1)
       // carried-over rows get no txn marker: the marker belongs to the
       // commit it deduplicates, and it stays on that commit's own rows
-      val rows = prior.map(c => (v, c, None: Option[String],
+      val entries = prior.map(c => (v, c, None: Option[String],
           None: Option[Long])) :+
         (v, dirName, txn.map(_._1), txn.map(_._2))
-      if (casManifest(rows.toDF("version", "commit", "app", "batch"),
+      if (casManifest(entries.toDF("version", "commit", "app", "batch"),
           path, v)) return v
       // lost the race: version v belongs to another committer
       require(!overwrite,
@@ -441,13 +470,14 @@ object Sources {
       attempt += 1
       require(attempt <= 1000,
         s"gave up after $attempt commit conflicts on $path")
-      if (alreadyCommitted) {
+      if (alreadyCommitted(spark, path, txn)) {
         // a twin writer replaying the same (appId, batchId) won — this
         // attempt's data dir is now an orphan; reclaim it eagerly
         graft.Fs.deleteRecursive(spark, s"$path/data/$dirName")
         return snapshotLatestVersion(spark, path)
       }
-      v = snapshotLatestVersion(spark, path) + 1
+      rows = manifestRows(spark, path)
+      v = latestOf(rows) + 1
     }
     -1 // unreachable
   }
@@ -470,12 +500,14 @@ object Sources {
     * honestly. Returns the new version. */
   def snapshotOptimize(spark: SparkSession, path: String,
       targetFiles: Int = 1, statsCols: Seq[String] = Nil): Int = {
-    val latest = snapshotLatestVersion(spark, path)
+    val rows = manifestRows(spark, path)
+    val latest = latestOf(rows)
     require(latest > 0, s"no snapshot table at $path")
-    // pin rows before committing back under the table root being read
-    val cur = snapshotRead(spark, path, latest)
-      .coalesce(targetFiles).localCheckpoint()
-    snapshotCommit(cur, path, overwrite = true, statsCols = statsCols)
+    // no pin: the commit writes a fresh, uniquely named commit dir, so
+    // it never overwrites the files this plan scans
+    val cur = readCommits(spark, path, commitsAt(rows, latest))
+      .coalesce(targetFiles)
+    commitAfter(cur, path, overwrite = true, statsCols, None, rows)
   }
 
   /** RESTORE the table to an earlier version (io23 — Delta RESTORE /
@@ -514,7 +546,7 @@ object Sources {
     import spark.implicits._
     val p = s"$path/constraints"
     if (!graft.Fs.exists(spark, p)) Seq.empty
-    else spark.read.parquet(p).as[(String, String)].collect().toSeq.sorted
+    else graft.Fs.readParquet(spark, p).as[(String, String)].collect().toSeq.sorted
   }
 
   /** Commit with CHECK enforcement (io22): ONE aggregation pass counts
@@ -572,15 +604,16 @@ object Sources {
       keyCol: String, deleteCol: String,
       statsCols: Seq[String] = Nil): Int = {
     import org.apache.spark.sql.functions.col
-    val latest = snapshotLatestVersion(spark, path)
+    val rows = manifestRows(spark, path)
+    val latest = latestOf(rows)
     require(latest > 0, s"no snapshot table at $path")
-    val cur = snapshotRead(spark, path, latest)
+    val cur = readCommits(spark, path, commitsAt(rows, latest))
     val next = cur
       .join(changes.select(keyCol), Seq(keyCol), "left_anti")
       .unionByName(changes.filter(!col(deleteCol)).drop(deleteCol))
-    // pin rows before committing back under the table root being read
-    snapshotCommit(next.localCheckpoint(), path, overwrite = true,
-      statsCols = statsCols)
+    // no pin: the commit writes a fresh, uniquely named commit dir, so
+    // it never overwrites the files this plan scans
+    commitAfter(next, path, overwrite = true, statsCols, None, rows)
   }
 
   /** CLUSTERED optimize (io18) — io17's compaction without its
@@ -628,7 +661,7 @@ object Sources {
     require(dirs.nonEmpty, "optimize of an empty table")
     if (statsCols.nonEmpty) {
       val rows = dirs.flatMap { d =>
-        val written = spark.read.parquet(s"$path/data/$dirName/$d")
+        val written = graft.Fs.readParquet(spark, s"$path/data/$dirName/$d")
         val aggs = statsCols.flatMap(c => Seq(
           org.apache.spark.sql.functions.min(col(c).cast("double")).as(s"__mn_$c"),
           org.apache.spark.sql.functions.max(col(c).cast("double")).as(s"__mx_$c")))
@@ -656,7 +689,7 @@ object Sources {
 
   private def statsOf(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = s"$path/stats"
-    if (graft.Fs.exists(spark, p)) Some(spark.read.parquet(p)) else None
+    if (graft.Fs.exists(spark, p)) Some(graft.Fs.readParquet(spark, p)) else None
   }
 
   /** ZONE-MAP pruned snapshot read (io16) — the data-skipping half of
@@ -677,11 +710,9 @@ object Sources {
   def snapshotReadPruned(spark: SparkSession, path: String, asOf: Int,
       column: String, lo: Double, hi: Double): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val commits = manifestOf(spark, path)
-      .getOrElse(sys.error(s"no snapshot table at $path"))
-      .filter(col("version") === asOf)
-      .select("commit").as[String].collect().toIndexedSeq
+    val rows = manifestRows(spark, path)
+    if (rows.isEmpty) sys.error(s"no snapshot table at $path")
+    val commits = commitsAt(rows, asOf)
     require(commits.nonEmpty, s"unknown snapshot version $asOf at $path")
     val ranges: Map[String, (Option[Double], Option[Double])] =
       statsOf(spark, path).map(_.filter(col("column") === column)
@@ -702,9 +733,9 @@ object Sources {
     val df =
       if (kept.isEmpty)
         // every dir pruned: preserve the schema, scan nothing
-        spark.read.parquet(commitDir(path, commits.head))
+        readCommits(spark, path, commits.take(1))
           .filter(org.apache.spark.sql.functions.lit(false))
-      else spark.read.parquet(kept.map(c => commitDir(path, c)): _*).filter(pred)
+      else readCommits(spark, path, kept).filter(pred)
     (df, kept.size, commits.size)
   }
 
@@ -729,18 +760,18 @@ object Sources {
 
   def snapshotRead(spark: SparkSession, path: String,
       version: Int, mergeSchema: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import spark.implicits._
-    val commits = manifestOf(spark, path)
-      .getOrElse(sys.error(s"no snapshot table at $path"))
-      .filter(col("version") === version)
-      .select("commit").as[String].collect()
+    val rows = manifestRows(spark, path)
+    if (rows.isEmpty) sys.error(s"no snapshot table at $path")
+    val commits = commitsAt(rows, version)
     require(commits.nonEmpty, s"unknown snapshot version $version at $path")
-    val reader =
-      if (mergeSchema) spark.read.option("mergeSchema", "true")
-      else spark.read
-    reader.parquet(commits.map(c => commitDir(path, c)).toIndexedSeq: _*)
+    readCommits(spark, path, commits, mergeSchema)
   }
+
+  /** One scan over the given commit entries' data dirs. */
+  private def readCommits(spark: SparkSession, path: String,
+      commits: Seq[String], mergeSchema: Boolean = false): DataFrame =
+    graft.Fs.readParquet(spark, commits.map(c => commitDir(path, c)),
+      mergeSchema)
 
   /** SHALLOW CLONE (io24 — Delta CLONE): create a new snapshot table
     * at `dstPath` whose version 1 REFERENCES the source's latest
@@ -757,14 +788,13 @@ object Sources {
     * escape hatch. */
   def snapshotClone(spark: SparkSession, srcPath: String,
       dstPath: String): Int = {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val v = snapshotLatestVersion(spark, srcPath)
+    val rows = manifestRows(spark, srcPath)
+    val v = latestOf(rows)
     require(v > 0, s"no snapshot table at $srcPath")
     require(snapshotLatestVersion(spark, dstPath) == 0,
       s"$dstPath is already a snapshot table")
-    val commits = manifestOf(spark, srcPath).get
-      .filter(col("version") === v).select("commit").as[String].collect().toSeq
+    val commits = commitsAt(rows, v)
     // ref: entries must be CWD-independent: a relative srcPath would
     // bake the current working directory into the clone's manifest and
     // break its reads from any other session. Qualify against the

@@ -192,32 +192,26 @@ object Retrieval {
     deleteIds.select(col(idCol).cast("long").as("doc_id")).distinct()
       .write.mode("append").parquet(s"$path/tombstones")
 
-  private def postingsTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = s"$path/tombstones"
-    if (graft.Fs.exists(spark, p)) Some(spark.read.parquet(p)) else None
-  }
-
-  private def minusDocTombstones(df: DataFrame,
-      ts: Option[DataFrame]): DataFrame = ts match {
-    case Some(t) => df.join(broadcast(t.select("doc_id").distinct()),
-      Seq("doc_id"), "left_anti")
-    case None => df
-  }
-
   /** The live postings / doclens — what the serve path scans: the
     * artifacts minus the tombstoned docs (tiny broadcast anti-join;
     * files untouched). */
   def livePostings(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    minusDocTombstones(
-      spark.read.parquet(s"$path/postings").drop("tp"),
-      postingsTombstones(spark, path))
+    postingsMinus(spark, path, graft.Fs.tombstones(spark, path))
 
   def liveDoclens(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    minusDocTombstones(spark.read.parquet(s"$path/doclens"),
-      postingsTombstones(spark, path))
+    doclensMinus(spark, path, graft.Fs.tombstones(spark, path))
+
+  private def postingsMinus(spark: org.apache.spark.sql.SparkSession,
+      path: String, ts: Option[DataFrame]): DataFrame =
+    graft.Fs.minusTombstones(
+      graft.Fs.readParquet(spark, s"$path/postings").drop("tp"), ts, "doc_id")
+
+  private def doclensMinus(spark: org.apache.spark.sql.SparkSession,
+      path: String, ts: Option[DataFrame]): DataFrame =
+    graft.Fs.minusTombstones(
+      graft.Fs.readParquet(spark, s"$path/doclens"), ts, "doc_id")
 
   /** BM25 top-k served FROM the persisted index: identical scoring
     * plan to [[bm25TopK]] with the corpus-sized tokenize+agg replaced
@@ -226,9 +220,11 @@ object Retrieval {
     * serve equals a rebuild from the retained corpus exactly. */
   def bm25TopKFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, qidCol: String, qtextCol: String,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    scoreBm25(graft.Caches.cached(livePostings(spark, path)),
-      liveDoclens(spark, path), queries, qidCol, qtextCol, k, k1, b)
+      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val ts = graft.Fs.tombstones(spark, path)
+    scoreBm25(graft.Caches.cached(postingsMinus(spark, path, ts)),
+      doclensMinus(spark, path, ts), queries, qidCol, qtextCol, k, k1, b)
+  }
 
   /** Fold tombstones into both artifacts and clear them: rewrite as
     * the live rows (localCheckpoint first — the rewrite overwrites
@@ -237,9 +233,10 @@ object Retrieval {
     * tombstoned rows; the full rewrite keeps the proof simple. */
   def compactPostingsIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    if (postingsTombstones(spark, path).isEmpty) return
-    val post = livePostings(spark, path).localCheckpoint()
-    val dls = liveDoclens(spark, path).localCheckpoint()
+    val ts = graft.Fs.tombstones(spark, path)
+    if (ts.isEmpty) return
+    val post = postingsMinus(spark, path, ts).localCheckpoint()
+    val dls = doclensMinus(spark, path, ts).localCheckpoint()
     post.withColumn("tp", tokPart(col("tok")))
       .repartition(col("tp"))
       .write.mode("overwrite").partitionBy("tp").parquet(s"$path/postings")
