@@ -25,7 +25,10 @@ object ScratchDirs {
     dir
   }
 
-  private def deleteDir(dir: String): Unit =
+  /** Remove `dir` and everything under it, best-effort (a missing dir
+    * or a failed delete is not an error): the one local walk-and-delete
+    * for scratch, staging and checkpoint dirs. */
+  private[graft] def deleteDir(dir: String): Unit =
     try {
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._

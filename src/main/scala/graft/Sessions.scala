@@ -17,6 +17,15 @@ import org.apache.spark.sql.SparkSession
   *    shuffles super-linear — exactly the knob a cluster deployment
   *    sizes by input bytes (spark.sql.files.maxPartitionBytes + AQE
   *    target size do it automatically there).
+  *  - `spark.hadoop.fs.file.impl` and
+  *    `spark.hadoop.fs.AbstractFileSystem.file.impl`: the `file:`
+  *    scheme's `FileSystem` and `FileContext` classes. The target
+  *    machines have no native `libhadoop`, so Hadoop's local
+  *    filesystem forks a `chmod` for every file and directory it
+  *    creates and a `readlink` for every `FileContext` rename
+  *    (streaming checkpoints, the snapshot CAS manifest); the
+  *    classes in LocalFileSystems.scala make both calls in-process,
+  *    with the same results and the same `.crc` checksums.
   */
 object Sessions {
   def local(cpus: String): SparkSession = {
@@ -28,6 +37,9 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ScratchDirs.deleteDir
+
 /** Executes a FINITE Structured Streaming pipeline end-to-end and
   * returns its materialized result — the bridge that lets the
   * streaming operators participate in the batch-oriented driver
@@ -46,19 +48,6 @@ object StreamRunner {
   // (per-run deletion would defeat the reuse).
   private val stagedInputs =
     scala.collection.mutable.Map[(SparkSession, String), String]()
-
-  private def deleteDir(dir: String): Unit =
-    try {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val root = Paths.get(dir)
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
 
   // one hook for the JVM: staged dirs would otherwise accumulate one
   // set per pid across repeated sweeps until the tmp volume fills
@@ -282,17 +271,7 @@ object StreamRunner {
         .start()
       q.awaitTermination()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    try {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val r = Paths.get(root)
-      if (Files.exists(r)) {
-        val walk = Files.walk(r)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    deleteDir(root)
   }
 
   /** Streaming UPSERT ingest via `foreachBatch` — the
@@ -346,17 +325,7 @@ object StreamRunner {
     // materialize before reclaiming the version dirs
     val result = current.map(p => spark.read.parquet(p).localCheckpoint())
       .getOrElse(batch.limit(0))
-    try {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val r = Paths.get(root)
-      if (Files.exists(r)) {
-        val walk = Files.walk(r)
-        try walk.iterator().asScala.toSeq.reverseIterator
-          .foreach(p => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
+    deleteDir(root)
     result
   }
 }
