@@ -18,25 +18,17 @@ object Caches {
   private val tracked =
     new java.util.IdentityHashMap[SparkSession, ArrayBuffer[DataFrame]]()
 
-  /** Persist `df` and register it for a later [[clear]]. */
+  /** Persist `df` and register it for a later [[clear]]. Registry
+    * entries of stopped sessions are dropped on the way. */
   private[graft] def cached(df: DataFrame): DataFrame = {
-    register(df)
+    tracked.synchronized {
+      val it = tracked.entrySet().iterator()
+      while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
+      var buf = tracked.get(df.sparkSession)
+      if (buf == null) { buf = ArrayBuffer.empty; tracked.put(df.sparkSession, buf) }
+      buf += df
+    }
     df.persist()
-  }
-
-  /** Register an ALREADY-persisted frame for a later [[clear]].
-    * Currently only [[cached]] goes through here — the iterative loops
-    * `localCheckpoint` their supersteps instead (those blocks are
-    * reclaimed by the ContextCleaner once unreferenced, not by
-    * [[clear]]) and route their persisted EDGE frames through
-    * [[cached]]. Kept public-to-package as the seam for any operator
-    * that persists with a custom StorageLevel. */
-  private[graft] def register(df: DataFrame): Unit = tracked.synchronized {
-    val it = tracked.entrySet().iterator()
-    while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
-    var buf = tracked.get(df.sparkSession)
-    if (buf == null) { buf = ArrayBuffer.empty; tracked.put(df.sparkSession, buf) }
-    buf += df
   }
 
   /** Unpersist every intermediate registered by this session's library

@@ -131,10 +131,10 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     }
     // EdgePartition2D (default): √p-grid vertex-cut partitioning
     // bounds each vertex's replication across edge partitions by 2√p,
-    // which is what every Pregel superstep ships — measured
-    // (tools.LpProbe, sf0.1) label propagation 10.8→6.3 s at p=8 vs
-    // the arrival-order layout; the win grows with p (16.8→6.9 s at
-    // p=16), i.e. with cluster scale. Applied to the RAW edge RDD
+    // which is what every Pregel superstep ships — measured (PERF.md
+    // "Round 6: bench reproducibility", sf0.1) label propagation
+    // 10.8→6.3 s at p=8 vs the arrival-order layout; the win grows
+    // with p (16.8→6.9 s at p=16), i.e. with cluster scale. Applied to the RAW edge RDD
     // BEFORE Graph construction — Graph(...).partitionBy(...) would
     // cache BOTH the arrival-order and the re-partitioned EdgeRDD at
     // MEMORY_AND_DISK for the session (2× edge storage).
@@ -222,7 +222,7 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
     // Materialize the graph ONCE (the GraphX-cache analog): without
     // this, the vertex/edge build pipelines re-execute every
     // superstep and again per shapePaths join — measured 7.0 s → 3.5 s
-    // on the sf0.1 customer-part graph (BfsProbe).
+    // on the sf0.1 customer-part graph (PERF.md "Round-7 changes").
     val vtx = vertices.localCheckpoint()
     val edg = canonicalEdges
     val targets = vtx.filter(toCond).select(col("id").as("__end"))

@@ -90,18 +90,24 @@ object VectorSearch {
       centroids: Seq[(Int, Array[Float])], path: String): Unit = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    assigned.withColumn(listCol, col(listCol).cast("int"))
-      // repartition by list BEFORE the partitioned write: without it,
-      // every write task emits one file per list it touches — at 1000
-      // executors that is tasks x nlist small files; with it, each
-      // list's rows land in whole output partitions (one keyed
-      // shuffle, paid once at build time in a build-once index)
-      .repartition(col(listCol))
-      .write.mode("overwrite").partitionBy(listCol)
-      .parquet(s"$path/assignments")
+    writeLists(assigned, listCol, "overwrite", path)
     centroids.map { case (i, v) => (i, v.toSeq) }.toDF("part", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
   }
+
+  /** Write (mode `mode`) assignment rows to `path/assignments`,
+    * PARTITIONED BY the int list column `listCol` — the one layout
+    * every IVF build, append and compaction writes. Repartition by list
+    * BEFORE the partitioned write: without it, every write task emits
+    * one file per list it touches — at 1000 executors that is tasks x
+    * nlist small files; with it, each list's rows land in whole output
+    * partitions (one keyed shuffle per write). */
+  private def writeLists(rows: DataFrame, listCol: String, mode: String,
+      path: String): Unit =
+    rows.withColumn(listCol, col(listCol).cast("int"))
+      .repartition(col(listCol))
+      .write.mode(mode).partitionBy(listCol)
+      .parquet(s"$path/assignments")
 
   /** Load a persisted IVF index: the assignment frame (as stored) and
     * the centroid values. The centroid fetch is an nlist-row driver
@@ -135,11 +141,8 @@ object VectorSearch {
   def appendToIvfIndex(newVecs: DataFrame, path: String): Unit = {
     val spark = newVecs.sparkSession
     val cents = readIvfIndexCentroids(spark, path)
-    Similarity.assignFixed(newVecs, cents.map(_._2))
-      .withColumn("cluster", col("cluster").cast("int"))
-      .repartition(col("cluster"))
-      .write.mode("append").partitionBy("cluster")
-      .parquet(s"$path/assignments")
+    writeLists(Similarity.assignFixed(newVecs, cents.map(_._2)), "cluster",
+      "append", path)
   }
 
   // ---- index deletes: tombstones + compaction (s29) ---------------
@@ -183,10 +186,8 @@ object VectorSearch {
       path: String, listCol: String = "cluster"): Unit = {
     val ts = graft.Fs.tombstones(spark, path)
     if (ts.isEmpty) return
-    val live = liveAssignments(spark, path, ts).localCheckpoint()
-    live.repartition(col(listCol))
-      .write.mode("overwrite").partitionBy(listCol)
-      .parquet(s"$path/assignments")
+    writeLists(liveAssignments(spark, path, ts).localCheckpoint(), listCol,
+      "overwrite", path)
     graft.Fs.deleteRecursive(spark, s"$path/tombstones")
   }
 
@@ -273,12 +274,9 @@ object VectorSearch {
     * encode+assign as the build. */
   def appendToIvfPqIndex(newVecs: DataFrame, path: String, dim: Int): Unit = {
     val spark = newVecs.sparkSession
-    Similarity.ivfPqEncodeAssignWith(newVecs,
+    writeLists(Similarity.ivfPqEncodeAssignWith(newVecs,
         readIvfIndexCentroids(spark, path).map(_._2), dim,
-        readPqCodebooks(spark, path))
-      .repartition(col("cluster"))
-      .write.mode("append").partitionBy("cluster")
-      .parquet(s"$path/assignments")
+        readPqCodebooks(spark, path)), "cluster", "append", path)
   }
 
   /** Codebooks of a persisted IVF-PQ index (m·k-row driver fetch —
@@ -312,7 +310,7 @@ object VectorSearch {
     val loaded = graft.Fs.readParquet(spark, s"$path/assignments")
     Similarity.ivfPqServe(queries, loaded,
       readIvfIndexCentroids(spark, path).map(_._2),
-      readPqCodebooks(spark, path), topK, nprobe, dim, m)
+      readPqCodebooks(spark, path), topK, nprobe)
   }
 
   /** TRAINED per-subspace PQ codebooks — the production answer to the
@@ -418,9 +416,9 @@ object VectorSearch {
     * against the cached assignment.
     *
     * Measured at sf0.1 (2 000 × 64-d vectors, k = 10, spherical
-    * build, tools.IvfProbe): nlist 16 → recall 0.235 / 0.425 / 0.645
-    * / 0.845 / 0.905 at nprobe 1 / 2 / 4 / 8 / 10; nlist 8 → 0.94 at
-    * nprobe 6. The raw-vector build measured 0.215 / 0.395 / 0.585 /
+    * build; PERF.md "Round-7 IVF recall sweep"): nlist 16 → recall
+    * 0.235 / 0.425 / 0.645 / 0.845 / 0.905 at nprobe 1 / 2 / 4 / 8 /
+    * 10; nlist 8 → 0.94 at nprobe 6. The raw-vector build measured 0.215 / 0.395 / 0.585 /
     * 0.845 at nprobe 1 / 2 / 4 / 8. These synthetic embeddings are
     * ISOTROPIC — no cluster structure, IVF's worst case — so the
     * pruning ratio is poor by construction; a real embedding corpus
@@ -447,25 +445,7 @@ object VectorSearch {
         e.count()
         e
       })
-    val q = queries.toDF("query_id", "qv")
-    nprobes.map { np =>
-      val qProbed = q.withColumn("part",
-        explode(probeParts(col("qv"), centroids, np)))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("cos").desc, col("neighbor_id"))
-      val apx = qProbed.join(assigned, Seq("part"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("cos", round(Similarity.cosine(col("qv"), col("cv")), 6))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id")
-      Similarity.recallAudit(exact, apx, k)
-        .agg(count(lit(1)).as("n_queries"), sum("n_hits").as("total_hits"),
-          min("n_hits").as("min_hits"))
-        .select(lit(np.toLong).as("nprobe"), col("n_queries"),
-          col("total_hits"), col("min_hits"),
-          round(col("total_hits") / (col("n_queries") * k.toDouble), 4)
-            .as("avg_recall"))
-    }.reduce(_ unionByName _)
+    Similarity.recallSweep(exact, k, "nprobe", nprobes)(np =>
+      serveTrained(queries, assigned, centroids, k, np))
   }
 }

@@ -731,8 +731,8 @@ object GraphQueries {
   private def BfsIters = 3
   private def SsspIters = 4
   private def AnfIters = 3
-  // lgK sized by MEASUREMENT (tools.AnfProbe) against the 5-bit
-  // PACKED register kit (graft.functions.PackedHll — r13 replaced the
+  // lgK sized by MEASUREMENT (PERF.md "Round-14: the g34 100× bar")
+  // against the 5-bit PACKED register kit (graft.functions.PackedHll — r13 replaced the
   // Datasketches superstep after the 100× probe showed the
   // heapify+Union merge path CPU-bound). The estimate error is
   // DETERMINISTIC (fixed splitmix64 register hash + Ertl estimator),

@@ -204,7 +204,7 @@ object MlQueries {
         dim = 64, m = 4, k = 16, seed = 11L)
       def row(name: String, books: Seq[Seq[Array[Float]]], nprobe: Int) =
         Similarity.residualRerankRecall(q, emb, cents, books,
-            shortK = 100, k = 5, dim = 64, nprobe = nprobe)
+            shortK = 100, k = 5, nprobe = nprobe)
           .select(lit(name).as("variant"), col("*"))
       row("a_resid_fixed_fullprobe", fixedBooks, 16)
         .unionByName(row("b_resid_trained_fullprobe", trainedBooks, 16))

@@ -95,7 +95,7 @@ object PipelineQueries {
     Similarity.ivfPqServe(q.select("vec_id", "embedding"), codedLive,
         graft.ml.VectorSearch.readIvfIndexCentroids(s, path).map(_._2),
         graft.ml.VectorSearch.readPqCodebooks(s, path),
-        topK = 20, nprobe = IvfProbes, dim = 64, m = PqM)
+        topK = 20, nprobe = IvfProbes)
       .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
   }
 
@@ -1110,7 +1110,7 @@ object PipelineQueries {
           s.read.parquet(s"$path/assignments"),
           graft.ml.VectorSearch.readIvfIndexCentroids(s, path).map(_._2),
           graft.ml.VectorSearch.readPqCodebooks(s, path),
-          topK = 5, nprobe = IvfProbes, dim = 64, m = PqM)
+          topK = 5, nprobe = IvfProbes)
         .orderBy("query_id", "rank")
     },
       Some(ivfPqOracle(dim = 64, nlist = IvfLists, nprobe = IvfProbes,

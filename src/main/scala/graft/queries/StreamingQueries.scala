@@ -559,8 +559,7 @@ object StreamingQueries {
             s.read.parquet(s"$path/assignments"),
             graft.ml.VectorSearch.readIvfIndexCentroids(s, path).map(_._2),
             graft.ml.VectorSearch.readPqCodebooks(s, path),
-            topK = 5, nprobe = PipelineQueries.IvfProbes, dim = 64,
-            m = PipelineQueries.PqM)
+            topK = 5, nprobe = PipelineQueries.IvfProbes)
           .orderBy("query_id", "rank")
       },
       Some(PipelineQueries.ivfPqOracle(dim = 64,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.FloatVector.dotF
+import graft.functions.TopK
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -12,13 +13,23 @@ import graft.functions.FloatVector.dotF
   *    (graft.functions.FloatDot) — one tight loop per pair, no
   *    intermediate arrays, whole-stage codegen preserved.
   *  - `bruteForceTopK`: exact baseline — broadcast the (small) query
-  *    side, score all corpus rows, per-query top-k via window. One pass
-  *    over the corpus, no shuffle of the corpus itself.
+  *    side, score all corpus rows, per-query top-k via the map-side
+  *    TopK combine. One pass over the corpus, no shuffle of the corpus
+  *    itself.
   *  - `lshCosineTopK`: random-hyperplane LSH — candidates share a
   *    signature-band bucket; shuffle is O(rows × bands) instead of
   *    O(queries × corpus). The 100 TB path.
-  *  - IVF (inverted-file) variant lives in graft.ml.VectorSearch (needs
-  *    KMeans centroids).
+  *  - IVF with FIXED seeded centroids, PQ and SQ8 compression, and the
+  *    composed IVF-PQ index (raw and residual codes) live here, every
+  *    one oracle-checkable; the KMeans-trained IVF and the persisted
+  *    index layout live in graft.ml.VectorSearch.
+  *
+  * Each vector-search step exists once and every build, serve and
+  * sweep calls that copy: [[distArr]] (centroid/code distances),
+  * [[argmin]] (IVF list and PQ code assignment), [[probeClusters]]
+  * (probe selection), [[pqAdcDistColumn]] (ADC distance),
+  * [[exactDist]] (exact Euclidean distance), [[topKBy]] (per-query
+  * top-k tail) and [[recallSummary]] (recall-audit summary row).
   *
   * All-pairs/top-k operators precompute each row's norm ONCE and reuse
   * it across every pair — the norm is O(dim) work identical to the dot
@@ -51,6 +62,26 @@ object Similarity {
       .agg(sum(coalesce(col("__hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", round(col("n_hits") / k.toDouble, 4))
 
+  /** [[recallAudit]] collapsed to one row: (key…, n_queries,
+    * total_hits, min_hits, avg_recall) — integer counts plus one
+    * single-division ratio, so the row hashes identically on any
+    * engine. */
+  private def recallSummary(exact: DataFrame, approx: DataFrame,
+      k: Int, key: Column*): DataFrame =
+    recallAudit(exact, approx, k)
+      .agg(count(lit(1)).as("n_queries"), sum("n_hits").as("total_hits"),
+        min("n_hits").as("min_hits"))
+      .select(key ++ Seq(col("n_queries"), col("total_hits"), col("min_hits"),
+        round(col("total_hits") / (col("n_queries") * k.toDouble), 4)
+          .as("avg_recall")): _*)
+
+  /** One [[recallSummary]] row per sweep point `p` of `approx(p)`
+    * against `exact`, keyed by column `key` = p. */
+  private[graft] def recallSweep(exact: DataFrame, k: Int, key: String,
+      points: Seq[Int])(approx: Int => DataFrame): DataFrame =
+    points.map(p => recallSummary(exact, approx(p), k, lit(p.toLong).as(key)))
+      .reduce(_ unionByName _)
+
   /** IVF probe-count recall sweep — pins the recall/latency trade-off
     * instead of assuming it: for each candidate `nprobe`, run
     * [[ivfFixedTopK]] and audit it against the exact brute-force
@@ -63,15 +94,8 @@ object Similarity {
       dim: Int, nlist: Int, nprobes: Seq[Int], seed: Long): DataFrame = {
     val exact = graft.Caches.cached(
       bruteForceTopK(queries, corpus, k).select("query_id", "neighbor_id"))
-    nprobes.map { np =>
-      recallAudit(exact, ivfFixedTopK(queries, corpus, k, dim, nlist, np, seed), k)
-        .agg(count(lit(1)).as("n_queries"), sum("n_hits").as("total_hits"),
-          min("n_hits").as("min_hits"))
-        .select(lit(np.toLong).as("nprobe"), col("n_queries"),
-          col("total_hits"), col("min_hits"),
-          round(col("total_hits") / (col("n_queries") * k.toDouble), 4)
-            .as("avg_recall"))
-    }.reduce(_ unionByName _)
+    recallSweep(exact, k, "nprobe", nprobes)(np =>
+      ivfFixedTopK(queries, corpus, k, dim, nlist, np, seed))
   }
 
   /** Matryoshka truncation audit — recall@k of brute-force search
@@ -90,16 +114,8 @@ object Similarity {
       bruteForceTopK(queries, corpus, k).select("query_id", "neighbor_id"))
     def sliced(df: DataFrame, d: Int) =
       df.select(col(df.columns(0)), slice(col(df.columns(1)), 1, d))
-    dims.map { d =>
-      recallAudit(exact,
-          bruteForceTopK(sliced(queries, d), sliced(corpus, d), k), k)
-        .agg(count(lit(1)).as("n_queries"), sum("n_hits").as("total_hits"),
-          min("n_hits").as("min_hits"))
-        .select(lit(d.toLong).as("dim"), col("n_queries"),
-          col("total_hits"), col("min_hits"),
-          round(col("total_hits") / (col("n_queries") * k.toDouble), 4)
-            .as("avg_recall"))
-    }.reduce(_ unionByName _)
+    recallSweep(exact, k, "dim", dims)(d =>
+      bruteForceTopK(sliced(queries, d), sliced(corpus, d), k))
   }
 
   /** Per-label embedding-norm hygiene report (Tukey fences): Q1/Q3 by
@@ -175,6 +191,42 @@ object Similarity {
   private[graft] def safeCos(dot: Column, na: Column, nb: Column): Column =
     when(na * nb > 0, dot / (na * nb)).otherwise(lit(0.0))
 
+  /** Exact cosine of a (qv, qn) × (cv, cn) scored pair, 6dp. */
+  private def exactCos: Column =
+    round(safeCos(dotF(col("qv"), col("cv")), col("qn"), col("cn")), 6)
+
+  /** Queries and corpus framed for [[exactDist]]: (query_id, qv, qq)
+    * and (neighbor_id, cv, cc), squared norms computed once per row. */
+  private def euclidSides(queries: DataFrame,
+      corpus: DataFrame): (DataFrame, DataFrame) = (
+    queries.toDF("query_id", "qv").withColumn("qq", dotF(col("qv"), col("qv"))),
+    corpus.toDF("neighbor_id", "cv").withColumn("cc", dotF(col("cv"), col("cv"))))
+
+  /** Exact Euclidean distance of a [[euclidSides]] pair via the
+    * expansion ‖q−c‖ = √(q·q − 2·q·c + c·c), clamped at 0 and rounded
+    * to 6dp — the SAME identity the DuckDB oracle evaluates, so rounded
+    * distances match bit-for-bit. */
+  private def exactDist: Column = round(
+    sqrt(greatest(col("qq") - lit(2.0) * dotF(col("qv"), col("cv")) + col("cc"),
+      lit(0.0))), 6)
+
+  /** Per-query top-k of a scored (query_id, neighbor_id, `score`)
+    * frame via the map-side-combining TopK Aggregator — ≤ k rows per
+    * query per partition ride the shuffle — ties by neighbor id.
+    * `nearest` ranks ascending (distances): TopK keeps the LARGEST
+    * scores, so the score goes in negated and comes out through `abs`,
+    * not unary minus — -(-0.0) would emit -0.0 for zero distances.
+    * Output: (query_id, neighbor_id, `score`, rank). */
+  private def topKBy(scored: DataFrame, k: Int, score: String,
+      nearest: Boolean = false): DataFrame =
+    scored.groupBy("query_id")
+      .agg(TopK.topK(k)(col("neighbor_id"),
+        if (nearest) -col(score) else col(score)).as("nn"))
+      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
+      .select(col("query_id"), col("nb.id").as("neighbor_id"),
+        (if (nearest) abs(col("nb.score")) else col("nb.score")).as(score),
+        (col("r0") + 1).cast("int").as("rank"))
+
   /** Exact top-k cosine neighbors for every query row — the LABELED
     * exact baseline (the scale paths are [[lshCosineTopK]] and
     * graft.ml.VectorSearch's IVF).
@@ -188,48 +240,27 @@ object Similarity {
     * Output: (query_id, neighbor_id, cos, rank).
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    import graft.functions.TopK
     val q = queries.toDF("query_id", "qv")
       .withColumn("qn", norm(col("qv")))
     val c = corpus.toDF("neighbor_id", "cv")
       .withColumn("cn", norm(col("cv")))
-    broadcast(q).crossJoin(c)
+    topKBy(broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(safeCos(dotF(col("qv"), col("cv")), col("qn"), col("cn")), 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("neighbor_id"), col("cos")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        col("nb.score").as("cos"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("cos", exactCos), k, "cos")
   }
 
   /** Exact top-k EUCLIDEAN neighbors — the oracle-checkable exact twin
     * of spark.ml's BRP-LSH (m06). Same scale shape as
     * [[bruteForceTopK]]: broadcast queries, one corpus pass, map-side
-    * top-k combine. Distance via the expansion
-    * ‖q−c‖ = √(q·q − 2·q·c + c·c) with per-row squared norms computed
-    * once — three codegen'd dots total, and the SAME identity the
-    * DuckDB oracle evaluates, so rounded distances match bit-for-bit.
+    * top-k combine. Distance is [[exactDist]] with per-row squared
+    * norms computed once — three codegen'd dots total.
     * Output: (query_id, neighbor_id, dist, rank), ascending distance,
     * ties by neighbor id. */
   def euclideanTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    import graft.functions.TopK
-    val q = queries.toDF("query_id", "qv")
-      .withColumn("qq", dotF(col("qv"), col("qv")))
-    val c = corpus.toDF("neighbor_id", "cv")
-      .withColumn("cc", dotF(col("cv"), col("cv")))
-    broadcast(q).crossJoin(c)
+    val (q, c) = euclidSides(queries, corpus)
+    topKBy(broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("dist", round(
-        sqrt(greatest(col("qq") - lit(2.0) * dotF(col("qv"), col("cv")) + col("cc"),
-          lit(0.0))), 6))
-      .groupBy("query_id")
-      // negate: TopK keeps the LARGEST scores; nearest = smallest dist
-      .agg(TopK.topK(k)(col("neighbor_id"), -col("dist")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        // abs, not unary minus: -(-0.0) would emit -0.0 for zero dists
-        abs(col("nb.score")).as("dist"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("dist", exactDist), k, "dist", nearest = true)
   }
 
   /** Deterministic pseudo-random unit hyperplanes (driver-side seeded
@@ -266,7 +297,6 @@ object Similarity {
     */
   def lshCosineTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       dim: Int, nBits: Int = 32, bands: Int = 8, seed: Long = 42L): DataFrame = {
-    import graft.functions.TopK
     require(nBits % bands == 0)
     val rows = nBits / bands
     val planes = hyperplanes(dim, nBits, seed)
@@ -289,15 +319,10 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
 
-    cand
+    topKBy(cand
       .join(broadcast(q.select("query_id", "qv", "qn")), Seq("query_id"))
       .join(c.select("neighbor_id", "cv", "cn"), Seq("neighbor_id"))
-      .withColumn("cos", round(safeCos(dotF(col("qv"), col("cv")), col("qn"), col("cn")), 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("neighbor_id"), col("cos")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        col("nb.score").as("cos"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("cos", exactCos), k, "cos")
   }
 
   /** IVF (inverted-file) ANN with FIXED seeded centroids — the
@@ -341,9 +366,7 @@ object Similarity {
     val cents = hyperplanes(dim, nlist, seed)
     val a = corpus.toDF("neighbor_id", "cv", "attr")
       .withColumn("cn", norm(col("cv")))
-      .withColumn("cluster",
-        array_position(distArr(col("cv"), cents),
-          array_min(distArr(col("cv"), cents))).cast("int"))
+      .withColumn("cluster", argmin(distArr(col("cv"), cents)))
     ivfServe(queries, a.filter(keep).drop("attr"), cents, k, nprobe)
   }
 
@@ -398,44 +421,46 @@ object Similarity {
       .select(col("neighbor_id").as("id"), col("cv").as("v"), col("cluster"))
   }
 
-  /** dist²(v, cent_j) up to the common ‖v‖² term (rank-invariant):
-    * −2·v·cent_j + centᵀcent_j — cheapest scan-stage form. */
-  private def distArr(vec: Column, cents: Seq[Array[Float]]): Column = {
-    val cSelf = cents.map(c => c.map(x => x.toDouble * x).sum)
-    array(cents.indices.map(j =>
-      lit(-2.0) * dotF(vec, lit(cents(j))) + lit(cSelf(j))): _*)
-  }
+  /** dist²(v, c_j) up to the common ‖v‖² term (rank-invariant):
+    * −2·v·c_j + c_jᵀc_j for each centroid (or PQ code) c_j — the
+    * cheapest scan-stage form, vectors shipped as literals. */
+  private def distArr(vec: Column, cents: Seq[Array[Float]]): Column =
+    array(cents.map(c =>
+      lit(-2.0) * dotF(vec, lit(c)) + lit(c.map(x => x.toDouble * x).sum)): _*)
+
+  /** 1-based index of the first minimum of `arr` — the deterministic
+    * argmin tie-break on both engines. */
+  private def argmin(arr: Column): Column =
+    array_position(arr, array_min(arr)).cast("int")
 
   /** Scan-stage argmin assignment of corpus rows to centroid lists —
     * the IVF BUILD: (neighbor_id, cv, cn, cluster 1-based). No
-    * shuffle, no explode: one L2-expansion distance per centroid,
-    * centroids shipped as literals; first-index-of-minimum is the
-    * deterministic tie-break on both engines. */
+    * shuffle, no explode: one L2-expansion distance per centroid. */
   private[graft] def assignFixed(corpus: DataFrame,
       cents: Seq[Array[Float]]): DataFrame =
     corpus.toDF("neighbor_id", "cv")
       .withColumn("cn", norm(col("cv")))
-      .withColumn("cluster",
-        array_position(distArr(col("cv"), cents),
-          array_min(distArr(col("cv"), cents))).cast("int"))
+      .withColumn("cluster", argmin(distArr(col("cv"), cents)))
 
   /** The `nprobe` nearest 1-based cluster ids of a query vector under
-    * [[assignFixed]]'s distance (−2·q·c + c·c, rank ties by centroid
-    * index) as a PURE SCAN-STAGE expression — array_sort of
-    * (d, cluster) structs, sliced to nprobe. No window, no shuffle, so
-    * it runs unchanged on a STREAMING frame (the sw11 admission path);
-    * the ranking is identical to [[ivfServe]]'s windowed probe
-    * (ORDER BY d, j ≡ lexicographic struct order, cluster = j+1
-    * monotone in j). */
+    * [[assignFixed]]'s distance, rank ties by centroid index — the
+    * probe of every IVF serve here, as a PURE SCAN-STAGE expression:
+    * array_sort of (d, cluster) structs, sliced to nprobe. No window,
+    * no shuffle, so it also runs unchanged on a STREAMING frame (the
+    * sw11 admission path). Equivalent to a row_number window over
+    * (d, j) per query (lexicographic struct order, cluster = j+1
+    * monotone in j); PropertySpec pins that equivalence. */
   private[graft] def probeClusters(qv: Column, cents: Seq[Array[Float]],
       nprobe: Int): Column = {
-    val scored = array(cents.indices.map { j =>
-      val cc = cents(j).map(x => x.toDouble * x).sum
-      struct((lit(-2.0) * dotF(qv, lit(cents(j))) + lit(cc)).as("d"),
-        lit(j + 1).as("cluster"))
-    }: _*)
+    val scored = transform(distArr(qv, cents),
+      (d, j) => struct(d.as("d"), (j + 1).as("cluster")))
     transform(slice(array_sort(scored), 1, nprobe), s => s.getField("cluster"))
   }
+
+  /** Each query row of (query_id, qv, …) once per probed cluster. */
+  private def probed(queries: DataFrame, cents: Seq[Array[Float]],
+      nprobe: Int): DataFrame =
+    queries.withColumn("cluster", explode(probeClusters(col("qv"), cents, nprobe)))
 
   /** IVF SERVE over an (neighbor_id, cv, cn, cluster) assignment frame
     * plus centroid values: probe each query's `nprobe` nearest lists,
@@ -446,25 +471,11 @@ object Similarity {
     * reloaded inputs". */
   private[graft] def ivfServe(queries: DataFrame, assigned: DataFrame,
       cents: Seq[Array[Float]], k: Int, nprobe: Int): DataFrame = {
-    import graft.functions.TopK
-    val probes = queries.toDF("query_id", "qv")
-      .withColumn("qn", norm(col("qv")))
-      .select(col("query_id"), col("qv"), col("qn"),
-        posexplode(distArr(col("qv"), cents)).as(Seq("j", "d")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d"), col("j"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qn"),
-        (col("j") + 1).cast("int").as("cluster"))
-
-    broadcast(probes).join(assigned, Seq("cluster"))
+    val probes = probed(queries.toDF("query_id", "qv")
+      .withColumn("qn", norm(col("qv"))), cents, nprobe)
+    topKBy(broadcast(probes).join(assigned, Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(safeCos(dotF(col("qv"), col("cv")), col("qn"), col("cn")), 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("neighbor_id"), col("cos")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        col("nb.score").as("cos"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("cos", exactCos), k, "cos")
   }
 
   /** Embedding near-dup pairs via hyperplane-LSH banding — the
@@ -629,7 +640,6 @@ object Similarity {
     * oracle replays scores bit-for-bit. Output: (query_id,
     * neighbor_id, score, rank), score descending, id tie-break. */
   def sq8AdcTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    import graft.functions.TopK
     val c = graft.Caches.cached(
       quantizeInt8(corpus, "vec_id", "embedding")
         .select(col("vec_id").as("neighbor_id"), col("scale").as("sc"),
@@ -640,15 +650,10 @@ object Similarity {
     val intDot = aggregate(
       zip_with(col("qq"), col("qc"), (a, b) => a.cast("long") * b),
       lit(0L), _ + _)
-    broadcast(q).crossJoin(c)
+    topKBy(broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("score",
-        round((col("sq") * col("sc")) * intDot.cast("double"), 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("neighbor_id"), col("score")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        col("nb.score").as("score"), (col("r0") + 1).cast("int").as("rank"))
+        round((col("sq") * col("sc")) * intDot.cast("double"), 6)), k, "score")
   }
 
   /** Fixed seeded PQ codebooks: `m` subspaces × `k` code vectors of
@@ -687,24 +692,17 @@ object Similarity {
     * seeded path above delegates here. */
   private[graft] def pqEncodeWith(df: DataFrame, idCol: String,
       vecCol: String, dim: Int, books: Seq[Seq[Array[Float]]]): DataFrame = {
-    val m = books.length
-    val sub = dim / m
     // vectors stay float arrays: FloatDot widens per-element to double
     // internally (the exact arithmetic the oracle's CAST-to-double
     // list_sum replays)
-    def subv(j: Int): Column = slice(col("__v"), j * sub + 1, sub)
-    // per-subspace distances up to the common x·x term (argmin-safe)
-    def distArr(j: Int): Column = array(books(j).map { c =>
-      lit(-2.0) * dotF(subv(j), lit(c)) + lit(c.map(x => x.toDouble * x).sum)
-    }: _*)
-    val codes = array((0 until m).map(j =>
-      array_position(distArr(j), array_min(distArr(j))).cast("int")): _*)
+    val v = col("__v")
     // true squared error per subspace = min(dist) + x_j·x_j; summed in
     // j order so the oracle's list_sum reproduces the same fold
-    val errs = array((0 until m).map(j =>
-      array_min(distArr(j)) + dotF(subv(j), subv(j))): _*)
+    val errs = array(pqDists(v, books).zip(subvecs(v, books)).map {
+      case (d, x) => array_min(d) + dotF(x, x)
+    }: _*)
     df.select(col(idCol), col(vecCol).as("__v"))
-      .withColumn("codes", codes)
+      .withColumn("codes", pqCodesColumn(v, books))
       .withColumn("mse", aggregate(errs, lit(0.0), _ + _) / lit(dim))
       .withColumnRenamed("__v", "v")
   }
@@ -721,37 +719,17 @@ object Similarity {
     * adc_dist, rank), ascending distance, ties by neighbor id. */
   def pqAdcTopK(queries: DataFrame, corpusCodes: DataFrame, topK: Int,
       dim: Int, m: Int = 4, k: Int = 16, seed: Long = 11L): DataFrame =
-    pqAdcTopKWith(queries, corpusCodes, topK, dim, pqCodebooks(dim, m, k, seed))
+    pqAdcTopKWith(queries, corpusCodes, topK, pqCodebooks(dim, m, k, seed))
 
   /** [[pqAdcTopK]] against EXPLICIT codebooks (trained or seeded). */
   private[graft] def pqAdcTopKWith(queries: DataFrame, corpusCodes: DataFrame,
-      topK: Int, dim: Int, books: Seq[Seq[Array[Float]]]): DataFrame = {
-    import graft.functions.TopK
-    val m = books.length
-    val sub = dim / m
+      topK: Int, books: Seq[Seq[Array[Float]]]): DataFrame = {
     val q = queries.toDF("query_id", "qv") // float arrays (see pqEncode)
     val c = corpusCodes.toDF("neighbor_id", "codes")
-    def subq(j: Int): Column = slice(col("qv"), j * sub + 1, sub)
-    def codeAt(j: Int): Column = element_at(col("codes"), j + 1)
-    // ‖q_j − c‖² with the selected code's dot/self-dot looked up from
-    // literal arrays (q_j·c recomputed per pair — dim·1 flops; the
-    // classic per-query LUT is an optimization the oracle can't see)
-    def distJ(j: Int): Column = {
-      val codeArr = typedLit(books(j).map(_.toSeq))
-      val selfArr = typedLit(books(j).map(_.map(x => x.toDouble * x).sum))
-      dotF(subq(j), subq(j)) -
-        lit(2.0) * dotF(subq(j), element_at(codeArr, codeAt(j))) +
-        element_at(selfArr, codeAt(j))
-    }
-    val dist = (0 until m).map(distJ).reduce(_ + _)
-    broadcast(q).crossJoin(c)
+    topKBy(broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("d", round(dist, 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(topK)(col("neighbor_id"), -col("d")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        abs(col("nb.score")).as("adc_dist"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("adc_dist", round(pqAdcDistColumn(col("qv"), books), 6)),
+      topK, "adc_dist", nearest = true)
   }
 
   /** COMPOSED IVF-PQ build — one scan stage over the corpus emitting
@@ -789,16 +767,14 @@ object Similarity {
     graft.Caches.cached(
       pqEncodeWith(corpus.toDF("neighbor_id", "cv"), "neighbor_id", "cv",
           dim, books)
-        .withColumn("cluster",
-          array_position(distArr(col("v"), cents),
-            array_min(distArr(col("v"), cents))).cast("int"))
+        .withColumn("cluster", argmin(distArr(col("v"), cents)))
         .select("neighbor_id", "codes", "cluster"))
 
   /** COMPOSED IVF-PQ serve over a (neighbor_id, codes, cluster) coded
     * assignment frame: each query probes its `nprobe` nearest lists
     * (same ranking as [[ivfServe]]), and candidates WITHIN those lists
-    * are scored by the PQ asymmetric distance ([[pqAdcTopK]]'s per-
-    * subspace expression against codebook literals) — never by their
+    * are scored by the PQ asymmetric distance ([[pqAdcDistColumn]]
+    * against codebook literals) — never by their
     * float vectors, which the index doesn't even store. The serve scan
     * therefore reads m bytes-ish per candidate AND touches only
     * ~nprobe/nlist of the corpus: the memory×pruning composition a
@@ -813,35 +789,12 @@ object Similarity {
     * distance, ties by neighbor id. */
   private[graft] def ivfPqServe(queries: DataFrame, coded: DataFrame,
       cents: Seq[Array[Float]], books: Seq[Seq[Array[Float]]],
-      topK: Int, nprobe: Int, dim: Int, m: Int): DataFrame = {
-    import graft.functions.TopK
-    val sub = dim / m
-    val probes = queries.toDF("query_id", "qv")
-      .select(col("query_id"), col("qv"),
-        posexplode(distArr(col("qv"), cents)).as(Seq("j", "d")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d"), col("j"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("qv"),
-        (col("j") + 1).cast("int").as("cluster"))
-    def subq(j: Int): Column = slice(col("qv"), j * sub + 1, sub)
-    def codeAt(j: Int): Column = element_at(col("codes"), j + 1)
-    def distJ(j: Int): Column = {
-      val codeArr = typedLit(books(j).map(_.toSeq))
-      val selfArr = typedLit(books(j).map(_.map(x => x.toDouble * x).sum))
-      dotF(subq(j), subq(j)) -
-        lit(2.0) * dotF(subq(j), element_at(codeArr, codeAt(j))) +
-        element_at(selfArr, codeAt(j))
-    }
-    val dist = (0 until m).map(distJ).reduce(_ + _)
-    broadcast(probes).join(coded, Seq("cluster"))
+      topK: Int, nprobe: Int): DataFrame = {
+    val probes = probed(queries.toDF("query_id", "qv"), cents, nprobe)
+    topKBy(broadcast(probes).join(coded, Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("d", round(dist, 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(topK)(col("neighbor_id"), -col("d")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        abs(col("nb.score")).as("adc_dist"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("adc_dist", round(pqAdcDistColumn(col("qv"), books), 6)),
+      topK, "adc_dist", nearest = true)
   }
 
   /** IVF-PQ approximate top-k with fixed seeded centroids AND fixed
@@ -857,7 +810,7 @@ object Similarity {
     val books = pqCodebooks(dim, m, kCodes, pqSeed)
     ivfPqServe(queries,
       ivfPqEncodeAssign(corpus, cents, dim, m, kCodes, pqSeed),
-      cents, books, topK, nprobe, dim, m)
+      cents, books, topK, nprobe)
   }
 
   /** Metadata-FILTERED composed IVF-PQ (s26): [[ivfPqTopK]]'s probe +
@@ -884,41 +837,46 @@ object Similarity {
         c3.select("neighbor_id", "cv"), cents, dim, m, kCodes, pqSeed)
       .join(c3.select("neighbor_id", "attr"), "neighbor_id")
     ivfPqServe(queries, coded.filter(keep).drop("attr"),
-      cents, books, topK, nprobe, dim, m)
+      cents, books, topK, nprobe)
   }
 
-  /** PQ code assignment of vector column `v` (1-based, first-minimum
-    * argmin per subspace) — the [[pqEncodeWith]] codes expression over
-    * an arbitrary column, shared by the raw and RESIDUAL builds. */
-  private def pqCodesColumn(v: Column, books: Seq[Seq[Array[Float]]],
-      dim: Int): Column = {
-    val m = books.length
-    val sub = dim / m
-    def subv(j: Int): Column = slice(v, j * sub + 1, sub)
-    def dArr(j: Int): Column = array(books(j).map { c =>
-      lit(-2.0) * dotF(subv(j), lit(c)) + lit(c.map(x => x.toDouble * x).sum)
-    }: _*)
-    array((0 until m).map(j =>
-      array_position(dArr(j), array_min(dArr(j))).cast("int")): _*)
+  /** The per-subspace slices of vector column `v` — one per codebook,
+    * each as long as that book's code vectors (dim / m). */
+  private def subvecs(v: Column, books: Seq[Seq[Array[Float]]]): Seq[Column] = {
+    val sub = books.head.head.length
+    books.indices.map(j => slice(v, j * sub + 1, sub))
   }
 
-  /** ADC distance of query-side vector column `qv` against the row's
-    * `codes` column — the [[pqAdcTopKWith]] distance expression over an
-    * arbitrary column, shared by the raw and RESIDUAL serves. */
-  private def pqAdcDistColumn(qv: Column, books: Seq[Seq[Array[Float]]],
-      dim: Int): Column = {
-    val m = books.length
-    val sub = dim / m
-    def subq(j: Int): Column = slice(qv, j * sub + 1, sub)
-    def codeAt(j: Int): Column = element_at(col("codes"), j + 1)
-    (0 until m).map { j =>
-      val codeArr = typedLit(books(j).map(_.toSeq))
-      val selfArr = typedLit(books(j).map(_.map(x => x.toDouble * x).sum))
-      dotF(subq(j), subq(j)) -
-        lit(2.0) * dotF(subq(j), element_at(codeArr, codeAt(j))) +
-        element_at(selfArr, codeAt(j))
+  /** Per-subspace [[distArr]] of `v`'s slices against their codebooks
+    * (up to the common x_j·x_j term) — the one PQ distance behind the
+    * codes (argmin) and the reconstruction error (min). */
+  private def pqDists(v: Column, books: Seq[Seq[Array[Float]]]): Seq[Column] =
+    subvecs(v, books).zip(books).map { case (x, book) => distArr(x, book) }
+
+  /** PQ codes of vector column `v`: 1-based first-minimum argmin per
+    * subspace — shared by [[pqEncodeWith]] and the RESIDUAL build. */
+  private def pqCodesColumn(v: Column, books: Seq[Seq[Array[Float]]]): Column =
+    array(pqDists(v, books).map(argmin): _*)
+
+  /** ADC distance Σ_j ‖q_j − codebook_j[code_j]‖² of query-side vector
+    * column `qv` against the row's `codes` column, the selected code's
+    * vector and self-dot looked up from literal arrays (q_j·c
+    * recomputed per pair — dim·1 flops; the classic per-query LUT is
+    * an optimization the oracle can't see). Shared by every PQ serve,
+    * raw and RESIDUAL. */
+  private def pqAdcDistColumn(qv: Column,
+      books: Seq[Seq[Array[Float]]]): Column =
+    subvecs(qv, books).zip(books).zipWithIndex.map { case ((x, book), j) =>
+      val code = element_at(col("codes"), j + 1)
+      dotF(x, x) -
+        lit(2.0) * dotF(x, element_at(typedLit(book.map(_.toSeq)), code)) +
+        element_at(typedLit(book.map(_.map(y => y.toDouble * y).sum)), code)
     }.reduce(_ + _)
-  }
+
+  /** `v − centroid(cluster)` for the row's 1-based `cluster` column. */
+  private def residual(v: Column, cents: Seq[Array[Float]]): Column =
+    zip_with(v, element_at(typedLit(cents.map(_.toSeq)), col("cluster")),
+      (a, b) => a - b)
 
   /** RESIDUAL IVF-PQ build (the FAISS-IVFPQ standard form): codes
     * encode each vector's residual v − centroid(cluster), NOT the raw
@@ -929,16 +887,12 @@ object Similarity {
     * materialized for the serve join like [[ivfPqEncodeAssign]].
     * Output: (neighbor_id, codes, cluster). */
   private[graft] def ivfPqResidualEncodeAssign(corpus: DataFrame,
-      cents: Seq[Array[Float]], books: Seq[Seq[Array[Float]]],
-      dim: Int): DataFrame = {
-    val centArr = typedLit(cents.map(_.toSeq))
+      cents: Seq[Array[Float]], books: Seq[Seq[Array[Float]]]): DataFrame =
     graft.Caches.cached(
       assignFixed(corpus, cents)
-        .withColumn("rv", zip_with(col("cv"),
-          element_at(centArr, col("cluster")), (a, b) => a - b))
-        .withColumn("codes", pqCodesColumn(col("rv"), books, dim))
+        .withColumn("rv", residual(col("cv"), cents))
+        .withColumn("codes", pqCodesColumn(col("rv"), books))
         .select("neighbor_id", "codes", "cluster"))
-  }
 
   /** RESIDUAL IVF-PQ serve: probes as in [[ivfPqServe]]; within each
     * probed list the QUERY's residual against THAT list's centroid
@@ -947,26 +901,14 @@ object Similarity {
     * adc_dist, rank). */
   private[graft] def ivfPqResidualServe(queries: DataFrame, coded: DataFrame,
       cents: Seq[Array[Float]], books: Seq[Seq[Array[Float]]],
-      topK: Int, nprobe: Int, dim: Int): DataFrame = {
-    import graft.functions.TopK
-    val centArr = typedLit(cents.map(_.toSeq))
-    val probes = queries.toDF("query_id", "qv")
-      .select(col("query_id"), col("qv"),
-        posexplode(distArr(col("qv"), cents)).as(Seq("j", "d")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("d"), col("j"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), (col("j") + 1).cast("int").as("cluster"),
-        zip_with(col("qv"), element_at(centArr, (col("j") + 1).cast("int")),
-          (a, b) => a - b).as("qrv"))
-    broadcast(probes).join(coded, Seq("cluster"))
+      topK: Int, nprobe: Int): DataFrame = {
+    val probes = probed(queries.toDF("query_id", "qv"), cents, nprobe)
+      .select(col("query_id"), col("cluster"),
+        residual(col("qv"), cents).as("qrv"))
+    topKBy(broadcast(probes).join(coded, Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("d", round(pqAdcDistColumn(col("qrv"), books, dim), 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(topK)(col("neighbor_id"), -col("d")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        abs(col("nb.score")).as("adc_dist"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("adc_dist", round(pqAdcDistColumn(col("qrv"), books), 6)),
+      topK, "adc_dist", nearest = true)
   }
 
   /** Residual IVF-PQ top-k with fixed seeded centroids and codebooks
@@ -982,8 +924,8 @@ object Similarity {
     val cents = hyperplanes(dim, nlist, ivfSeed)
     val books = booksOverride.getOrElse(pqCodebooks(dim, m, kCodes, pqSeed))
     ivfPqResidualServe(queries,
-      ivfPqResidualEncodeAssign(corpus, cents, books, dim),
-      cents, books, topK, nprobe, dim)
+      ivfPqResidualEncodeAssign(corpus, cents, books),
+      cents, books, topK, nprobe)
   }
 
   /** The residual frame (id, v − centroid(cluster)) under the fixed
@@ -992,11 +934,8 @@ object Similarity {
   def residualVectors(corpus: DataFrame, dim: Int, nlist: Int,
       ivfSeed: Long): DataFrame = {
     val cents = hyperplanes(dim, nlist, ivfSeed)
-    val centArr = typedLit(cents.map(_.toSeq))
     assignFixed(corpus, cents)
-      .select(col("neighbor_id").as("id"),
-        zip_with(col("cv"), element_at(centArr, col("cluster")),
-          (a, b) => a - b).as("v"))
+      .select(col("neighbor_id").as("id"), residual(col("cv"), cents).as("v"))
   }
 
   /** IVF-PQ probe-count recall sweep — the [[ivfProbeSweep]] of the
@@ -1019,16 +958,8 @@ object Similarity {
     val coded = ivfPqEncodeAssign(corpus, cents, dim, m, kCodes, pqSeed)
     val exact = graft.Caches.cached(
       euclideanTopK(queries, corpus, topK).select("query_id", "neighbor_id"))
-    nprobes.map { np =>
-      recallAudit(exact,
-          ivfPqServe(queries, coded, cents, books, topK, np, dim, m), topK)
-        .agg(count(lit(1)).as("n_queries"), sum("n_hits").as("total_hits"),
-          min("n_hits").as("min_hits"))
-        .select(lit(np.toLong).as("nprobe"), col("n_queries"),
-          col("total_hits"), col("min_hits"),
-          round(col("total_hits") / (col("n_queries") * topK.toDouble), 4)
-            .as("avg_recall"))
-    }.reduce(_ unionByName _)
+    recallSweep(exact, topK, "nprobe", nprobes)(np =>
+      ivfPqServe(queries, coded, cents, books, topK, np))
   }
 
   /** Two-stage retrieval: a PQ-ADC shortlist over the ENCODED corpus,
@@ -1040,37 +971,33 @@ object Similarity {
     * map-side TopK combine); stage 2 touches full vectors for only
     * `shortK` ids per query, rejoined by keyed equi-join on the
     * ID-ONLY shortlist (the d06 dedup-then-rejoin house rule — float
-    * payloads never ride a shuffle they don't need). Rerank uses the
-    * same expansion identity as [[euclideanTopK]], so the DuckDB
+    * payloads never ride a shuffle they don't need). Rerank uses
+    * [[exactDist]], the identity of [[euclideanTopK]], so the DuckDB
     * oracle replays both stages bit-for-bit (s10). Output:
     * (query_id, neighbor_id, dist, rank), ascending exact distance,
     * ties by neighbor id. */
   def pqRerankTopK(queries: DataFrame, corpus: DataFrame, shortK: Int,
       k: Int, dim: Int, m: Int = 4, kCodes: Int = 16,
       seed: Long = 11L): DataFrame = {
-    import graft.functions.TopK
     val codes = pqEncode(corpus.toDF("vec_id", "embedding"),
       "vec_id", "embedding", dim, m, kCodes, seed).select("vec_id", "codes")
-    val short = pqAdcTopK(queries, codes, shortK, dim, m, kCodes, seed)
-      .select("query_id", "neighbor_id") // ids only past this point
-    val q = queries.toDF("query_id", "qv")
-      .withColumn("qq", dotF(col("qv"), col("qv")))
-    val c = corpus.toDF("neighbor_id", "cv")
-      .withColumn("cc", dotF(col("cv"), col("cv")))
+    euclideanRerank(pqAdcTopK(queries, codes, shortK, dim, m, kCodes, seed)
+      .select("query_id", "neighbor_id"), queries, corpus, k)
+  }
+
+  /** Exact Euclidean top-k of an id-only (query_id, neighbor_id)
+    * shortlist: full vectors rejoin for the shortlisted ids only.
+    * Output: (query_id, neighbor_id, dist, rank). */
+  private def euclideanRerank(short: DataFrame, queries: DataFrame,
+      corpus: DataFrame, k: Int): DataFrame = {
+    val (q, c) = euclidSides(queries, corpus)
     // broadcast the shortlist (≤ queries × shortK ids): without the
     // hint Catalyst may estimate it large and sort-merge-shuffle every
     // corpus row's full vector — the exact shuffle this stage avoids
-    broadcast(short)
+    topKBy(broadcast(short)
       .join(c, "neighbor_id")
       .join(broadcast(q), "query_id")
-      .withColumn("dist", round(
-        sqrt(greatest(col("qq") - lit(2.0) * dotF(col("qv"), col("cv")) + col("cc"),
-          lit(0.0))), 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("neighbor_id"), -col("dist")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"),
-        abs(col("nb.score")).as("dist"), (col("r0") + 1).cast("int").as("rank"))
+      .withColumn("dist", exactDist), k, "dist", nearest = true)
   }
 
   /** Two-stage retrieval recall@k against the exact Euclidean top-k,
@@ -1085,7 +1012,7 @@ object Similarity {
     val codes = pqEncodeWith(corpus.toDF("vec_id", "embedding"),
       "vec_id", "embedding", dim, books).select("vec_id", "codes")
     rerankRecallAgainstExact(
-      pqAdcTopKWith(queries, codes, shortK, dim, books)
+      pqAdcTopKWith(queries, codes, shortK, books)
         .select("query_id", "neighbor_id"),
       queries, corpus, k)
   }
@@ -1095,11 +1022,11 @@ object Similarity {
     * aggregate row, same mechanics as [[pqRerankRecallWith]]. */
   private[graft] def residualRerankRecall(queries: DataFrame, corpus: DataFrame,
       cents: Seq[Array[Float]], books: Seq[Seq[Array[Float]]],
-      shortK: Int, k: Int, dim: Int, nprobe: Int): DataFrame =
+      shortK: Int, k: Int, nprobe: Int): DataFrame =
     rerankRecallAgainstExact(
       ivfPqResidualServe(queries,
-          ivfPqResidualEncodeAssign(corpus, cents, books, dim),
-          cents, books, shortK, nprobe, dim)
+          ivfPqResidualEncodeAssign(corpus, cents, books),
+          cents, books, shortK, nprobe)
         .select("query_id", "neighbor_id"),
       queries, corpus, k)
 
@@ -1107,30 +1034,10 @@ object Similarity {
     * rerank of an id-only shortlist, then the recall audit vs the
     * exact top-k, collapsed to one aggregate row. */
   private def rerankRecallAgainstExact(short: DataFrame, queries: DataFrame,
-      corpus: DataFrame, k: Int): DataFrame = {
-    import graft.functions.TopK
-    val q = queries.toDF("query_id", "qv")
-      .withColumn("qq", dotF(col("qv"), col("qv")))
-    val c = corpus.toDF("neighbor_id", "cv")
-      .withColumn("cc", dotF(col("cv"), col("cv")))
-    val rerank = broadcast(short)
-      .join(c, "neighbor_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("dist", round(
-        sqrt(greatest(col("qq") - lit(2.0) * dotF(col("qv"), col("cv")) + col("cc"),
-          lit(0.0))), 6))
-      .groupBy("query_id")
-      .agg(TopK.topK(k)(col("neighbor_id"), -col("dist")).as("nn"))
-      .select(col("query_id"), posexplode(col("nn")).as(Seq("r0", "nb")))
-      .select(col("query_id"), col("nb.id").as("neighbor_id"))
-    recallAudit(euclideanTopK(queries, corpus, k)
-        .select("query_id", "neighbor_id"), rerank, k)
-      .agg(count(lit(1)).as("n_queries"), sum("n_hits").as("total_hits"),
-        min("n_hits").as("min_hits"))
-      .select(col("n_queries"), col("total_hits"), col("min_hits"),
-        round(col("total_hits") / (col("n_queries") * k.toDouble), 4)
-          .as("avg_recall"))
-  }
+      corpus: DataFrame, k: Int): DataFrame =
+    recallSummary(
+      euclideanTopK(queries, corpus, k).select("query_id", "neighbor_id"),
+      euclideanRerank(short, queries, corpus, k), k)
 
   /** Maximal Marginal Relevance (MMR) selection: pick `k` rows that
     * are RELEVANT to the query but DIVERSE among themselves —

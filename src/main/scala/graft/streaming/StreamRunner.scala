@@ -194,33 +194,45 @@ object StreamRunner {
       (transform: DataFrame => DataFrame): DataFrame =
     transform(batch.limit(0))
 
+  /** Each stateful operator commits one state store PER shuffle
+    * partition PER micro-batch — at the session default (32) a 3-batch
+    * AvailableNow run pays ~100 state commits of pure orchestration.
+    * The harness aggregates are small; 8 partitions keeps the same
+    * plan shape (a real deployment sizes this to its key cardinality)
+    * at a quarter of the fixed cost. */
+  private val StreamShufflePartitions = "8"
+
+  /** Run `body` (start a stream and await its termination) with
+    * `spark.sql.shuffle.partitions` = [[StreamShufflePartitions]] plus
+    * `extraConfs` set on the session, then restore every key — unset
+    * again if it was unset — so batch queries in the same session are
+    * unaffected. Restored only after termination: the stream thread
+    * clones the session conf asynchronously after start(), so an
+    * early restore would race it. */
+  private def withStreamConfs(spark: SparkSession,
+      extraConfs: Map[String, String] = Map.empty)(body: => Unit): Unit = {
+    val overrides =
+      Map("spark.sql.shuffle.partitions" -> StreamShufflePartitions) ++ extraConfs
+    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    try {
+      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   private def execToMemorySink(spark: SparkSession, src: DataFrame,
       name: String, outputMode: String, extraConfs: Map[String, String])
       (transform: DataFrame => DataFrame): DataFrame = {
     val sink = s"${name}_${runSeq.incrementAndGet()}"
-    // Each stateful operator commits one state store PER shuffle
-    // partition PER micro-batch — at the session default (32) a 3-batch
-    // AvailableNow run pays ~100 state commits of pure orchestration.
-    // The harness aggregates are small; 8 partitions keeps the same
-    // plan shape (a real deployment sizes this to its key cardinality)
-    // at a quarter of the fixed cost. Restored after termination so
-    // batch queries in the same session are unaffected.
-    // (restored only after termination: the stream thread clones the
-    // session conf asynchronously after start(), so an early restore
-    // would race it)
-    val overrides = Map("spark.sql.shuffle.partitions" ->
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8")) ++ extraConfs
-    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    withStreamConfs(spark, extraConfs) {
       val q = transform(src).writeStream
         .format("memory").queryName(sink).outputMode(outputMode)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
     // runAvailableNow's staging dir is deliberately NOT deleted here:
     // it is memoized in stagedInputs for the session's repeat runs
@@ -258,10 +270,7 @@ object StreamRunner {
     batch.coalesce(8).write.mode("overwrite").parquet(stage)
     val src = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", 2).parquet(stage)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    withStreamConfs(spark) {
       val q = src.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             id: Long) => fn(b.toDF(), id)
@@ -270,7 +279,7 @@ object StreamRunner {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     deleteDir(root)
   }
 
@@ -300,10 +309,7 @@ object StreamRunner {
     val src = spark.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", 2).parquet(stage)
     @volatile var current: Option[String] = None
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+    withStreamConfs(spark) {
       val q = src.writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             batchId: Long) =>
@@ -321,7 +327,7 @@ object StreamRunner {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     // materialize before reclaiming the version dirs
     val result = current.map(p => spark.read.parquet(p).localCheckpoint())
       .getOrElse(batch.limit(0))

@@ -483,6 +483,17 @@ class PlanSpec extends SparkSpec {
       s"filtered ADC serve must stay a cluster-keyed probe join:\n$plan")
   }
 
+  test("IVF, IVF-PQ and residual IVF-PQ serves probe without a window and stay cluster-keyed") {
+    for (name <- Seq("s04_ann_ivf_fixed", "s18_ivf_pq_topk",
+        "s22_ivf_pq_residual_topk")) {
+      val plan = packPlan(graft.queries.PipelineQueries.all, name)
+      assert(!plan.contains("Window"),
+        s"$name: the probe set is a scan-stage expression, not a window:\n$plan")
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"$name: the serve must stay a cluster-keyed probe join:\n$plan")
+    }
+  }
+
   test("incremental near-dup joins batch bands to corpus bands (keyed equi-join, no cartesian)") {
     val plan = packPlan(graft.queries.PipelineQueries.all, "d16_incremental_neardup")
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),

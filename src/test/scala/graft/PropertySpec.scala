@@ -82,6 +82,55 @@ class PropertySpec extends SparkSpec {
     }, cases = 15)
   }
 
+  /** Reference for [[graft.similarity.Similarity.probeClusters]]: the
+    * windowed probe the IVF serves used before — posexplode the
+    * centroid distances (−2·q·c + c·c), row_number per query over
+    * (d, j), keep ranks ≤ nprobe. Query id → 1-based clusters in rank
+    * order. */
+  private def windowedProbe(queries: org.apache.spark.sql.DataFrame,
+      cents: Seq[Array[Float]], nprobe: Int): Map[Long, Seq[Int]] = {
+    import spark.implicits._
+    val dists = array(cents.map(c => lit(-2.0) *
+      graft.similarity.Similarity.dot(col("qv"), lit(c)) +
+      lit(c.map(x => x.toDouble * x).sum)): _*)
+    queries.select(col("query_id"), posexplode(dists).as(Seq("j", "d")))
+      .withColumn("pr", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy("query_id").orderBy(col("d"), col("j"))))
+      .filter(col("pr") <= nprobe)
+      .select(col("query_id"), (col("j") + 1).cast("int"), col("pr"))
+      .as[(Long, Int, Int)].collect().toSeq.groupBy(_._1)
+      .map { case (id, rs) => id -> rs.sortBy(_._3).map(_._2) }
+  }
+
+  test("probeClusters equals the windowed probe, with zero queries and duplicated centroids") {
+    import spark.implicits._
+    // half-step grid values make equal distances common; duplicated
+    // centroids and the zero query force ties the centroid index breaks
+    def vec(dim: Int) = Gen.listOfN(dim,
+      Gen.oneOf(Gen.choose(-4, 4).map(_ / 2.0f), Gen.choose(-1f, 1f)))
+    val gen = for {
+      dim <- Gen.choose(1, 6); nlist <- Gen.choose(2, 8)
+      base <- Gen.listOfN(nlist, vec(dim))
+      dupOf <- Gen.listOfN(nlist, Gen.option(Gen.choose(0, nlist - 1)))
+      qs <- Gen.listOfN(5, vec(dim))
+    } yield {
+      val cents = base.indices.map(i => base(dupOf(i).getOrElse(i)).toArray)
+      (cents, (List.fill(dim)(0f) :: qs).map(_.toArray))
+    }
+    check(Prop.forAll(gen) { case (cents, qs) =>
+      val nlist = cents.length
+      val q = qs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        .toDF("query_id", "qv")
+      Seq(1, nlist / 2, nlist, nlist + 3).forall { nprobe =>
+        val got = q.select(col("query_id"), graft.similarity.Similarity
+            .probeClusters(col("qv"), cents, nprobe))
+          .as[(Long, Seq[Int])].collect().toMap
+        got == windowedProbe(q, cents, nprobe) &&
+          got.values.forall(_.length == math.min(nprobe, nlist))
+      }
+    }, cases = 15)
+  }
+
   test("degree tables sum to edge count; union preserves total rows") {
     import spark.implicits._
     val edgeGen = for {
