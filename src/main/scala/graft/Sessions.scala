@@ -26,6 +26,24 @@ import org.apache.spark.sql.SparkSession
   *    (streaming checkpoints, the snapshot CAS manifest); the
   *    classes in LocalFileSystems.scala make both calls in-process,
   *    with the same results and the same `.crc` checksums.
+  *  - `spark.sql.codegen.cache.maxEntries`: the size of Janino's
+  *    compiled-class cache, one LRU for the whole JVM (sized once, by
+  *    the first session that generates code). One pass of the
+  *    engine's write/serve/stream mix (perfbench ingest_serve) uses
+  *    about 300 distinct classes; at Spark's default of 100 each is
+  *    evicted before the next pass asks for it again, so every warm
+  *    pass compiled ~306 of them again. Warm-pass compiles by size
+  *    (isolation off, 4-core VM): 300 → 69, 400 → 3–9, 500 → 5–9,
+  *    1000 → 1–11, the rest being classes no earlier pass compiled;
+  *    500 keeps a margin over the cliff below 400 (PERF.md).
+  *  - `spark.sql.artifact.isolation.enabled` off: the compiled-class
+  *    cache is keyed by the task's context classloader as well as the
+  *    code, and with isolation on every session (so every streaming
+  *    query, which runs on a cloned session with its own UUID) gets
+  *    its own executor classloader, so a stream compiled again every
+  *    class the previous stream of the same shape had compiled. The
+  *    isolation exists to keep jars and artifacts added to one session
+  *    away from another; the engine adds none to any session.
   */
 object Sessions {
   def local(cpus: String): SparkSession = {
@@ -40,6 +58,8 @@ object Sessions {
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[NioLocalFs].getName)
+      .config("spark.sql.codegen.cache.maxEntries", "500")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

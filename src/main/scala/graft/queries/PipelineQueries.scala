@@ -86,7 +86,7 @@ object PipelineQueries {
       dir: String, path: String): org.apache.spark.sql.DataFrame = {
     val docIds = Tables.documents(s, dir).select("doc_id")
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val codedLive = s.read.parquet(s"$path/assignments")
+    val codedLive = graft.Fs.readParquet(s, s"$path/assignments")
       .join(broadcast(docIds.select(col("doc_id").as("neighbor_id"))),
         Seq("neighbor_id"), "left_semi")
     val q = emb.filter(col("vec_id") % 125 === 7)
@@ -1107,7 +1107,7 @@ object PipelineQueries {
       graft.ml.VectorSearch.appendToIvfPqIndex(
         emb.filter(col("vec_id") % 2 =!= 0), path, dim = 64)
       Similarity.ivfPqServe(emb.filter(col("vec_id") < 20),
-          s.read.parquet(s"$path/assignments"),
+          graft.Fs.readParquet(s, s"$path/assignments"),
           graft.ml.VectorSearch.readIvfIndexCentroids(s, path).map(_._2),
           graft.ml.VectorSearch.readPqCodebooks(s, path),
           topK = 5, nprobe = IvfProbes)

@@ -556,7 +556,7 @@ object StreamingQueries {
           graft.ml.VectorSearch.appendToIvfPqIndex(b, path, dim = 64)
         }
         Similarity.ivfPqServe(emb.filter(col("vec_id") < 20),
-            s.read.parquet(s"$path/assignments"),
+            graft.Fs.readParquet(s, s"$path/assignments"),
             graft.ml.VectorSearch.readIvfIndexCentroids(s, path).map(_._2),
             graft.ml.VectorSearch.readPqCodebooks(s, path),
             topK = 5, nprobe = PipelineQueries.IvfProbes)

@@ -280,6 +280,20 @@ object Similarity {
     bits.reduce(_.bitwiseOR(_))
   }
 
+  /** (`idName`, band, bh): one row per band of the `nBits`-bit `sig`
+    * column, `bh` the band's `nBits / bands` bits. Two rows are LSH
+    * candidates when they share a (band, bh) key. */
+  private def bandsOf(df: DataFrame, idName: String, nBits: Int,
+      bands: Int): DataFrame = {
+    require(nBits % bands == 0)
+    val rows = nBits / bands
+    val mask = (1L << rows) - 1
+    df.select(col(idName),
+      posexplode(array((0 until bands).map(b =>
+        shiftrightunsigned(col("sig"), b * rows).bitwiseAND(mask)): _*))
+        .as(Seq("band", "bh")))
+  }
+
   /** Random-hyperplane LSH approximate top-k: rows whose signatures
     * agree on ≥1 of `bands` bands become candidates, then exact cosine
     * ranks them. Recall grows with bands; cost stays linear in rows.
@@ -297,11 +311,7 @@ object Similarity {
     */
   def lshCosineTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       dim: Int, nBits: Int = 32, bands: Int = 8, seed: Long = 42L): DataFrame = {
-    require(nBits % bands == 0)
-    val rows = nBits / bands
     val planes = hyperplanes(dim, nBits, seed)
-    val mask = (1L << rows) - 1
-
     val q = queries.toDF("query_id", "qv")
       .withColumn("qn", norm(col("qv")))
       .withColumn("sig", signature(col("qv"), planes))
@@ -309,13 +319,8 @@ object Similarity {
       .withColumn("cn", norm(col("cv")))
       .withColumn("sig", signature(col("cv"), planes)))
 
-    def bandsOf(df: DataFrame, idName: String) = df.select(col(idName),
-      posexplode(array((0 until bands).map(b =>
-        shiftrightunsigned(col("sig"), b * rows).bitwiseAND(mask)): _*))
-        .as(Seq("band", "bh")))
-
-    val cand = broadcast(bandsOf(q, "query_id"))
-      .join(bandsOf(c, "neighbor_id"), Seq("band", "bh"))
+    val cand = broadcast(bandsOf(q, "query_id", nBits, bands))
+      .join(bandsOf(c, "neighbor_id", nBits, bands), Seq("band", "bh"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
 
@@ -489,17 +494,11 @@ object Similarity {
     * [[cosineNearDupPairs]] below is the brute-force cross-check. */
   def cosineNearDupPairsLsh(df: DataFrame, minCos: Double, dim: Int,
       nBits: Int = 64, bands: Int = 16, seed: Long = 42L): DataFrame = {
-    require(nBits % bands == 0)
-    val rows = nBits / bands
     val planes = hyperplanes(dim, nBits, seed)
-    val mask = (1L << rows) - 1
     val n = graft.Caches.cached(df.toDF("id", "v")
       .withColumn("nrm", norm(col("v")))
       .withColumn("sig", signature(col("v"), planes)))
-    val banded = n.select(col("id"),
-      posexplode(array((0 until bands).map(b =>
-        shiftrightunsigned(col("sig"), b * rows).bitwiseAND(mask)): _*))
-        .as(Seq("band", "bh")))
+    val banded = bandsOf(n, "id", nBits, bands)
     // distinct BEFORE rejoining vectors: only (id, id) pairs ride the
     // dedup shuffle, not the embedding payloads
     val cand = banded.toDF("id_a", "band", "bh")
@@ -554,23 +553,16 @@ object Similarity {
   def semanticContaminatedIds(corpus: DataFrame, benchmark: DataFrame,
       minCos: Double, dim: Int, nBits: Int = 60, bands: Int = 15,
       seed: Long = 42L): DataFrame = {
-    require(nBits % bands == 0)
-    val rows = nBits / bands
     val planes = hyperplanes(dim, nBits, seed)
-    val mask = (1L << rows) - 1
     def sigOf(df: DataFrame, idName: String, vName: String) =
       df.toDF(idName, vName)
         .withColumn(s"${idName}_nrm", norm(col(vName)))
         .withColumn("sig", signature(col(vName), planes))
-    def bandsOf(df: DataFrame, idName: String) = df.select(col(idName),
-      posexplode(array((0 until bands).map(b =>
-        shiftrightunsigned(col("sig"), b * rows).bitwiseAND(mask)): _*))
-        .as(Seq("band", "bh")))
     val c = graft.Caches.cached(sigOf(corpus, "id", "v"))
     val b = graft.Caches.cached(sigOf(benchmark, "bid", "bv"))
     // ids only through the candidate dedup (the d06 house rule)
-    val cand = bandsOf(c, "id")
-      .join(broadcast(bandsOf(b, "bid")), Seq("band", "bh"))
+    val cand = bandsOf(c, "id", nBits, bands)
+      .join(broadcast(bandsOf(b, "bid", nBits, bands)), Seq("band", "bh"))
       .select("id", "bid").distinct()
     cand
       .join(c.select("id", "v", "id_nrm"), "id")

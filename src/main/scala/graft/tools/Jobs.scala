@@ -1,5 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Job/stage/task-count probe for imperative or driver-loop queries
   * whose returned frame's plan is vacuous (a LocalTableScan over
   * driver-folded results): `runMain graft.tools.Jobs <query>...` runs
@@ -7,7 +10,9 @@ package graft.tools
   * many Spark jobs, stages and tasks it drove — the §2.4 metric an
   * action-count collapse actually moves, and the evidence artifact
   * the optimization rounds commit where an explain dump says nothing
-  * (VERDICT r15 item 4). */
+  * (VERDICT r15 item 4) — and how many generated classes Janino
+  * compiled for it and in how many milliseconds (0 when every class
+  * came from the JVM's compiled-class cache). */
 object Jobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,13 +40,18 @@ object Jobs {
       // settle the async listener bus so counts attribute to THIS query
       Thread.sleep(1000)
       jobs.set(0); stages.set(0); tasks.set(0)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       graft.Caches.clear(spark)
       Thread.sleep(1000)
       println(f"JOBS $name%-34s jobs=${jobs.get}%-4d stages=${stages.get}%-5d " +
-        f"tasks=${tasks.get}%-6d sec=$sec%.2f")
+        f"tasks=${tasks.get}%-6d compiles=$compiles%-4d " +
+        f"compile_ms=$compileMs%-7.0f sec=$sec%.2f")
     }
     graft.Sessions.quiesceStreaming(spark)
     spark.stop()
