@@ -1084,10 +1084,7 @@ object Dedup {
         bands, minJaccard))
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val vertices = df.select(col(idCol).as("id"))
-    if (iters < 0) graft.graph.IterativeGraph
-      .minLabelComponentsConverged(vertices, edges)
-    else graft.graph.IterativeGraph
-      .minLabelComponents(vertices, edges, iters)
+    graft.graph.IterativeGraph.minLabelComponents(vertices, edges, iters)
   }
 
   /** SOFT dedup — downweight instead of drop: every document gets
@@ -1134,10 +1131,7 @@ object Dedup {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val vertices = df.select(col(idCol).as("id"))
     val labels =
-      if (iters < 0) graft.graph.IterativeGraph
-        .minLabelComponentsConverged(vertices, edges)
-      else graft.graph.IterativeGraph
-        .minLabelComponents(vertices, edges, iters)
+      graft.graph.IterativeGraph.minLabelComponents(vertices, edges, iters)
     df.join(labels.select(col("id").as("__kid"), col("label").as("__lbl")),
         df(idCol) === col("__kid"))
       .withColumn("__rn", row_number().over(

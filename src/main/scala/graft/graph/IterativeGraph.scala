@@ -17,32 +17,42 @@ import org.apache.spark.sql.functions._
   * aggregate that inherits skew handling and broadcast decisions.
   * `localCheckpoint` per superstep cuts the exponential lineage.
   *
-  * SUPERSTEP SHAPE of the driver loops (PageRank, BFS/SSSP, walks):
-  * the graph side is an artifact built ONCE per session ([[graft.Memo]],
-  * keyed by the edge frame's [[graft.Memo.planKey]]) and hash-partitioned
-  * by its join key (`src`) into the session's shuffle-partition count;
-  * it never moves again. The PageRank and BFS/SSSP state (ranks,
-  * distances) stays partitioned by vertex id into the same count, so
-  * the state ⋈ graph join is narrow (a `shuffle_hash` hint over
-  * co-partitioned sides — no exchange, no broadcast of the edge side),
-  * and each superstep ends in ONE exchange (`repartition(n, id)` of its
-  * messages) and one checkpoint that keeps that partitioning
+  * SUPERSTEP SHAPE. Every vertex-state loop here — PageRank (plain and
+  * weighted), BFS/SSSP, landmark distances, personalized PageRank,
+  * min-label components (fixed and converged), label propagation,
+  * power smoothing and HyperBall — runs on ONE private driver,
+  * [[superstep]], which iterates a [[Step]]: GraphFrames' Pregel
+  * superstep (`aggregateMessages`). The graph side is an artifact built
+  * ONCE per session ([[bySrc]]: [[graft.Memo]], keyed by the edge
+  * frame's [[graft.Memo.planKey]]; min-label components build theirs
+  * once per call) and hash-partitioned by `src` into the session's
+  * shuffle-partition count; it never moves again. The
+  * state stays partitioned by vertex id into the same count, so the
+  * state ⋈ graph join is narrow (a `shuffle_hash` hint over
+  * co-partitioned sides — no exchange, no broadcast of the edge side).
+  * The messages and every vertex's own state row meet in ONE aggregate
+  * after ONE exchange (`repartition(n, id)`), so no superstep joins
+  * back to the vertex set, and one checkpoint keeps that partitioning
   * (`localCheckpointPartitioned`; plain `localCheckpoint` forgets it
-  * under AQE). A walk frontier has no
-  * vertex key — its one exchange per hop moves it to its current node.
-  * Under AQE every exchange and every broadcast is its own job, and on
-  * small stages the per-job overhead, not compute, is the superstep's
-  * cost — so the job count per superstep is the figure this shape
-  * minimizes. An explicit `repartition(n, key)` is never coalesced by
-  * AQE, which is what keeps the two sides' partitionings equal from
-  * superstep to superstep.
+  * under AQE). Under AQE every exchange and every broadcast is its own
+  * job, and on small stages the per-job overhead, not compute, is the
+  * superstep's cost — so the job count per superstep is the figure
+  * this shape minimizes. An explicit `repartition(n, key)` is never
+  * coalesced by AQE, which is what keeps the two sides' partitionings
+  * equal from superstep to superstep.
+  *
+  * Off the driver, because their shapes differ: HITS (two normalized
+  * half-steps per superstep), k-core peeling and large-star/small-star
+  * (each round rewrites the edge set, not a vertex state), and the
+  * walks (a frontier with no vertex key — its one exchange per hop
+  * moves it to its current node).
   */
 object IterativeGraph {
 
   /** Symmetrized (bidirectional) src/dst edge view — the one
-    * definition shared by every undirected iterative algorithm here
-    * and by the BFS queries. Cached per call (released via
-    * graft.Caches.clear): each superstep rescans it. */
+    * definition shared by the undirected loops off the driver and by
+    * the queries that hand a directed loop undirected edges. Cached per
+    * call (released via graft.Caches.clear). */
   private[graft] def symmetrize(edges: DataFrame): DataFrame =
     graft.Caches.cached(edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"))))
@@ -69,88 +79,125 @@ object IterativeGraph {
     }
   }
 
+  /** Both directions of every edge as (src, dst, w). */
+  private def bothWays(edges: DataFrame, w: Column): DataFrame =
+    edges.select(col("src"), col("dst"), w.as("w"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
+        w.as("w")))
+
+  /** [[bothWays]] as a [[bySrc]] artifact. */
+  private def symmetrizedCosts(edges: DataFrame, kind: String,
+      w: Column): DataFrame =
+    bySrc(edges, kind)(bothWays(edges, w))
+
+  /** The undirected unit-cost artifact: BFS, label propagation and
+    * HyperBall share it. */
+  private[graft] def undirected(edges: DataFrame): DataFrame =
+    symmetrizedCosts(edges, "undirected", lit(1L))
+
+  /** One superstep of a vertex-state loop, before its checkpoint — the
+    * program [[superstep]] iterates. A state row holds `id`, the extra
+    * `keys` (each key value runs its own loop in the same jobs, e.g.
+    * one per PPR source) and the loop's own columns. The `active` state
+    * rows join their out-edges in the src-partitioned artifact `e`
+    * narrowly and send `message`, over the edge's and the source's
+    * columns, to `dst` as `m`. Every state row joins the messages as
+    * its own row, `m` null and `__own` true; the messages carry null
+    * state columns. After ONE exchange (`repartition(n, id)`) the
+    * `combine` aggregates run per (id, keys) over both, beside
+    * `__own` = whether the vertex had a state row. `keep` picks the
+    * rows that stay — `col("__own")` holds the vertex set fixed, the
+    * default lets it grow to every vertex a message reached — and
+    * `update` projects the new state columns. */
+  private[graft] final case class Step(message: Column, combine: Seq[Column],
+      update: Seq[Column], keys: Seq[String] = Nil,
+      active: Column = lit(true), keep: Column = lit(true)) {
+    def apply(e: DataFrame, state: DataFrame): DataFrame = {
+      val key = col("id") +: keys.map(col)
+      e.join(state.filter(active).withColumnRenamed("id", "src")
+          .hint("shuffle_hash"), "src")
+        .select(col("dst").as("id") +: keys.map(col) :+ message.as("m"): _*)
+        .unionByName(state.withColumn("__own", lit(true)),
+          allowMissingColumns = true)
+        .repartition(parts(e.sparkSession), col("id"))
+        .groupBy(key: _*).agg(max("__own").as("__own"), combine: _*)
+        .filter(keep)
+        .select(key ++ update: _*)
+    }
+  }
+
+  /** The superstep driver: `iters` checkpointed rounds of `step` from
+    * `init` over the src-partitioned artifact `e`. `init` is repartitioned
+    * by id; each new state is checkpointed keeping that partitioning.
+    * With `changed`, the loop also ends after a superstep whose new
+    * state has no `changed` row. Holds nothing outside its locals, so
+    * two loops can run at once (g34/g35 overlap theirs). Returns the
+    * state before the first superstep and after each one. */
+  private def superstep(init: DataFrame, e: DataFrame, iters: Int,
+      step: Step, changed: Option[Column] = None): Seq[DataFrame] = {
+    var state = init.repartition(parts(e.sparkSession), col("id"))
+    val states = Vector.newBuilder[DataFrame] += state
+    var i = 0
+    var moving = true
+    while (moving && i < iters) {
+      state = localCheckpointPartitioned(step(e, state))
+      states += state
+      moving = changed.forall(c => state.filter(c).limit(1).count() > 0)
+      i += 1
+    }
+    states.result()
+  }
+
   /** PageRank, `iters` synchronous supersteps:
     * r₀ = 1; r₊(v) = resetProb + (1−resetProb)·Σ_{u→v} r(u)/outdeg(u).
     * Unnormalized (GraphFrames/GraphX convention — scores sum ≈ N);
     * dangling mass is dropped, isolated vertices stay at resetProb.
-    * Output: (id, rank).
-    *
-    * Scale shape: the (src, dst, outdeg) edge artifact builds once per
-    * session, partitioned by src; each superstep is a narrow join of
-    * the id-partitioned ranks against it, then `repartition(n, id)` →
-    * aggregate → checkpoint — one exchange (the messages) per
-    * superstep. Every current rank row enters the aggregate as a
-    * flagged zero message, so only vertex ids survive and a vertex
-    * with no in-edges still gets its row, without a join back to
-    * `vertices`. */
+    * Runs on [[superstep]] over the (src, dst, outdeg) artifact. Only
+    * vertex ids keep a row, and a vertex with no in-edges still gets
+    * its row from its own state row, without a join back to
+    * `vertices`. Output: (id, rank). */
   def pageRankFixed(vertices: DataFrame, edges: DataFrame, iters: Int,
       resetProb: Double = 0.15): DataFrame =
     pageRankLoop(vertices, pageRankEdges(edges),
       col("rank") / col("outdeg"), iters, resetProb)
 
-  /** The (src, dst, outdeg) artifact [[pageRankFixed]] iterates over. */
+  /** The (src, dst, outdeg) artifact [[pageRankFixed]] and
+    * [[personalizedPageRankFixed]] iterate over. */
   private[graft] def pageRankEdges(edges: DataFrame): DataFrame =
     bySrc(edges, "pageRankEdges") {
       val out = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       edges.select("src", "dst").join(out, "src")
     }
 
-  /** The PageRank driver loop over a src-partitioned edge artifact;
-    * `msg` is the mass one edge carries, over the artifact's columns
-    * and the source's `rank`. */
   private def pageRankLoop(vertices: DataFrame, e: DataFrame, msg: Column,
-      iters: Int, resetProb: Double): DataFrame = {
-    val n = parts(vertices.sparkSession)
-    var ranks = vertices.select(col("id"), lit(1.0).as("rank"))
-      .repartition(n, col("id"))
-    for (_ <- 1 to iters)
-      ranks = localCheckpointPartitioned(pageRankStep(e, ranks, msg, resetProb))
-    ranks
-  }
+      iters: Int, resetProb: Double): DataFrame =
+    superstep(vertices.select(col("id"), lit(1.0).as("rank")), e, iters,
+      pageRankStep(msg, resetProb)).last
 
-  /** One PageRank superstep before its checkpoint: `ranks` is the
-    * id-partitioned state, `e` the src-partitioned edge artifact. */
-  private[graft] def pageRankStep(e: DataFrame, ranks: DataFrame,
-      msg: Column, resetProb: Double): DataFrame = {
-    val msgs = e
-      .join(ranks.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-      .select(col("dst").as("id"), msg.as("m"), lit(0).as("__v"))
-    msgs.unionAll(ranks.select(col("id"), lit(0.0).as("m"), lit(1).as("__v")))
-      .repartition(parts(e.sparkSession), col("id"))
-      .groupBy("id").agg(sum("m").as("in_sum"), max("__v").as("__v"))
-      .filter(col("__v") === 1)
-      .select(col("id"),
-        (lit(resetProb) + lit(1 - resetProb) * col("in_sum")).as("rank"))
-  }
+  /** The PageRank superstep; `msg` is the mass one edge carries, over
+    * the artifact's columns and the source's `rank`. */
+  private[graft] def pageRankStep(msg: Column, resetProb: Double): Step =
+    Step(msg, Seq(sum("m").as("in_sum")),
+      Seq((lit(resetProb) + lit(1 - resetProb) *
+        coalesce(col("in_sum"), lit(0.0))).as("rank")),
+      keep = col("__own"))
 
   /** Synchronous label propagation, `iters` supersteps, DETERMINISTIC:
     * label₀ = id; label₊(v) = the most frequent label among v's
     * neighbours (symmetrized edges), ties → smallest label; isolated
     * vertices keep their label. GraphX's LabelPropagation breaks ties
     * by map-iteration order — this fixed variant pins them, making the
-    * whole algorithm SQL-oracle-checkable. Output: (id, label). */
-  def labelPropagationFixed(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val v = vertices.select("id")
-    val sym = symmetrize(edges)
-    var labels = v.select(col("id"), col("id").as("label"))
-    for (_ <- 1 to iters) {
-      // two hash aggregations, no window: the per-(id, label) counts
-      // reduce map-side, then min_by on (−count, label) picks the
-      // most-frequent label with ties → smallest — identical rule to
-      // the rank form it replaced, without sorting every neighbour
-      // group, and ordering-generic over the label type (a negated
-      // label would pin labels to numeric)
-      val best = sym.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy("id")
-        .agg(min_by(col("label"), struct(-col("c"), col("label"))).as("nb_label"))
-      labels = labels.join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("nb_label"), col("label")).as("label"))
-        .localCheckpoint()
-    }
-    labels
-  }
+    * whole algorithm SQL-oracle-checkable. The pick is one `mode`
+    * aggregate in its deterministic form (ties → the smallest value)
+    * over the neighbours' labels, so it needs no per-(vertex, label)
+    * count aggregate and no window. Output: (id, label). */
+  def labelPropagationFixed(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    superstep(vertices.select(col("id"), col("id").as("label")),
+      undirected(edges), iters,
+      Step(col("label"),
+        Seq(mode(col("m"), deterministic = true).as("nb"), max("label").as("label")),
+        Seq(coalesce(col("nb"), col("label")).as("label")),
+        keep = col("__own"))).last
 
   /** WEIGHTED PageRank, `iters` synchronous supersteps — the mass a
     * vertex passes along an edge is proportional to the edge's weight
@@ -161,7 +208,7 @@ object IterativeGraph {
     * [[pageRankFixed]] (unnormalized, dangling mass dropped); on the
     * customer→part graph the weight is the average order quantity, so
     * rank flows toward heavily-bought parts rather than merely
-    * often-bought ones. Same superstep shape as the unweighted form
+    * often-bought ones. Same superstep as the unweighted form
     * (its (src, dst, weight, outw) artifact memoizes the same way);
     * output rounds at the caller (the g15 weighted-sum
     * precedent: iterated double sums order-differ in the last ulp
@@ -236,7 +283,7 @@ object IterativeGraph {
     * frontier of a round is exactly the newly reached BFS level.
     * Output: (id, dist) for vertices reached within `iters` hops. */
   def bfsDistances(edges: DataFrame, sourceId: Long, iters: Int): DataFrame =
-    relaxRounds(symmetrizedCosts(edges, "bfsEdges", lit(1L)), sourceId, iters)
+    relaxRounds(undirected(edges), sourceSeed(edges, sourceId), Nil, iters)
       .select(col("id"), col("dist").cast("int").as("dist"))
 
   /** Single-source WEIGHTED shortest distances: `iters` synchronous
@@ -252,55 +299,36 @@ object IterativeGraph {
     * contributed that same dist+cost the round it was set, and the
     * min-merge keeps the contribution — identical output to full
     * relaxation, one frontier-sized join per superstep instead of an
-    * all-reached one.
-    *
-    * Scale shape: the symmetrized (src, dst, w) edges build once per
-    * session, partitioned by src. A round joins the id-partitioned
-    * frontier against them narrowly, then ONE aggregation over the
-    * old distances (tagged as old) plus the relaxed ones yields the new
-    * distance and the improved flag together (min over the old-tagged
-    * rows vs the new min) — one exchange and one checkpoint per round;
-    * the next frontier is a filter on that checkpoint. */
+    * all-reached one. The symmetrized (src, dst, w) artifact builds once
+    * per session; the improved flag comes out of the superstep's own
+    * aggregate (the new min against the own row's old distance), and
+    * the next frontier is the `active` filter on the checkpoint. */
   def ssspWeighted(edges: DataFrame, sourceId: Long, iters: Int,
       costCol: String): DataFrame =
     relaxRounds(symmetrizedCosts(edges, s"ssspEdges|$costCol",
-      col(costCol).cast("long")), sourceId, iters)
+      col(costCol).cast("long")), sourceSeed(edges, sourceId), Nil, iters)
+      .select("id", "dist")
 
-  /** Both directions of every edge as (src, dst, w), the [[bySrc]]
-    * artifact [[relaxRounds]] iterates over. */
-  private def symmetrizedCosts(edges: DataFrame, kind: String,
-      w: Column): DataFrame =
-    bySrc(edges, kind) {
-      edges.select(col("src"), col("dst"), w.as("w"))
-        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
-          w.as("w")))
-    }
-
-  /** `iters` improved-frontier Bellman–Ford rounds from `sourceId` over
-    * a src-partitioned (src, dst, w) artifact. Output: (id, dist). */
-  private def relaxRounds(sym: DataFrame, sourceId: Long,
-      iters: Int): DataFrame = {
-    val spark = sym.sparkSession
+  private def sourceSeed(edges: DataFrame, sourceId: Long): DataFrame = {
+    val spark = edges.sparkSession
     import spark.implicits._
-    val n = parts(spark)
-    var state = Seq((sourceId, 0L, true)).toDF("id", "dist", "improved")
-      .repartition(n, col("id"))
-    for (_ <- 1 to iters) {
-      val relaxed = sym
-        .join(state.filter(col("improved"))
-          .select(col("id").as("src"), col("dist")).hint("shuffle_hash"), "src")
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"),
-          lit(null).cast("long").as("__old"))
-      state = localCheckpointPartitioned(
-        state.select(col("id"), col("dist"), col("dist").as("__old"))
-          .unionAll(relaxed)
-          .repartition(n, col("id"))
-          .groupBy("id").agg(min("dist").as("dist"), min("__old").as("__old"))
-          .select(col("id"), col("dist"),
-            (col("__old").isNull || col("dist") < col("__old")).as("improved")))
-    }
-    state.select("id", "dist")
+    Seq((sourceId, 0L)).toDF("id", "dist")
   }
+
+  /** `iters` improved-frontier Bellman–Ford rounds from the (id, keys,
+    * dist) `seeds` over a [[bySrc]] (src, dst, w) artifact. Output: (id,
+    * keys, dist). */
+  private def relaxRounds(e: DataFrame, seeds: DataFrame, keys: Seq[String],
+      iters: Int): DataFrame =
+    superstep(seeds.withColumn("improved", lit(true)), e, iters,
+      relaxStep(keys)).last.drop("improved")
+
+  /** The relaxation superstep of [[relaxRounds]]. */
+  private[graft] def relaxStep(keys: Seq[String]): Step =
+    Step(col("dist") + col("w"), Seq(min("m").as("nb"), min("dist").as("old")),
+      Seq(least(col("old"), col("nb")).as("dist"),
+        coalesce(col("nb") < col("old"), col("old").isNull).as("improved")),
+      keys, active = col("improved"))
 
   /** HyperBall / ANF sketches (Boldi & Vigna 2013; Palmer et al.'s
     * ANF): per-vertex HLL sketches of the ≤-t-hop ball, grown by t
@@ -310,15 +338,12 @@ object IterativeGraph {
     * neighborhood-function / effective-diameter computation costs
     * O(t) edge-keyed shuffles of ≤ 2^lgK-byte values — the ONLY known
     * way to ask "how big is the 3-hop ball of every vertex" on a
-    * 100 TB graph (exact balls are quadratic). Spark's partial
-    * aggregation combines sketches map-side, so each superstep
-    * shuffles at most one sketch per (partition, vertex), not one per
-    * edge. Estimates are deterministic (the register hash is a fixed
-    * splitmix64 mix), so a tolerance-bound audit against exact
-    * sampled balls is a stable gate, not a flaky one (g34). Output:
-    * (id, sk) after `iters` supersteps — sk is a
-    * [[graft.functions.PackedHll]] register file; estimate with
-    * PackedHll.hll5Estimate.
+    * 100 TB graph (exact balls are quadratic). Estimates are
+    * deterministic (the register hash is a fixed splitmix64 mix), so a
+    * tolerance-bound audit against exact sampled balls is a stable
+    * gate, not a flaky one (g34). Output: (id, sk) after `iters`
+    * supersteps — sk is a [[graft.functions.PackedHll]] register file;
+    * estimate with PackedHll.hll5Estimate.
     *
     * Deployment note (measured, PERF.md round-14): the superstep is
     * byte-bound on the register wire, so the shuffle codec is a
@@ -334,7 +359,7 @@ object IterativeGraph {
     * index t-1 holds the ≤-t-hop ball sketches. The per-step frames
     * are what the NEIGHBORHOOD FUNCTION N(t) (and the effective
     * diameter read off it) needs: each step is already materialized
-    * by the superstep localCheckpoint, so returning them all costs
+    * by the superstep checkpoint, so returning them all costs
     * nothing beyond [[hyperBallSketches]]. */
   def hyperBallSteps(edges: DataFrame, iters: Int,
       lgK: Int = 10): Seq[DataFrame] = {
@@ -350,40 +375,29 @@ object IterativeGraph {
     // sk₀(v) = {v} needs no aggregate at all. Estimate with
     // [[graft.functions.PackedHll.hll5Estimate]] (Ertl's estimator).
     val spark = edges.sparkSession
-    val sym = graft.Caches.cached(symmetrize(edges))
+    val e = undirected(edges)
     // SHUFFLE SHAPE (the measured 100× cliff and its fix): the union
-    // aggregate's groups are VERTICES, but the messages arrive
-    // partitioned by the join key (src) — per-task distinct dst ≈ the
-    // task's row count, so a map-side partial aggregate combines
-    // nothing AND ObjectHashAggregate's sort-based fallback (default:
-    // 128 groups/task, sized for arbitrary buffers) externally sorts
-    // every message WITH its register payload. The fix is to
-    // REPARTITION the messages by id first: the exchange then moves
-    // raw rows (no sort, no buffers), and both aggregation passes run
-    // id-clustered — |V|/partitions groups per task, pure hash
-    // aggregation over fixed-size (1 + ⌈5m/8⌉ B) buffers. The
-    // raised fallback threshold (256k × 641 B ≈ 168 MB/task at
-    // lgK = 10) is arithmetic, not hope, because the buffers are
-    // fixed-size; restored after the loop.
+    // aggregate's groups are VERTICES, so the messages must reach it
+    // id-clustered — the superstep's repartition by id moves raw rows
+    // (no sort, no buffers), and both aggregation passes run over
+    // |V|/partitions groups per task, pure hash aggregation over
+    // fixed-size (1 + ⌈5m/8⌉ B) buffers. ObjectHashAggregate's
+    // sort-based fallback (default: 128 groups/task, sized for
+    // arbitrary buffers) would otherwise externally sort every message
+    // WITH its register payload; the raised threshold (256k × 641 B ≈
+    // 168 MB/task at lgK = 10) is arithmetic, not hope, because the
+    // buffers are fixed-size. Restored after the loop.
     val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val prevFallback = spark.conf.getOption(fallbackKey)
-    def steps: Seq[DataFrame] = {
-      var sk = sym.select(col("src").as("id")).distinct()
-        .select(col("id"), PackedHll.hll5Singleton(col("id"), lgK).as("sk"))
-        .localCheckpoint()
-      (1 to iters).map { _ =>
-        val msgs = sym.join(sk.withColumnRenamed("id", "src"), "src")
-          .select(col("dst").as("id"), col("sk"))
-        sk = sk.unionByName(msgs)
-          .repartition(col("id"))
-          .groupBy("id").agg(PackedHll.hll5UnionAgg(col("sk"), lgK).as("sk"))
-          .localCheckpoint()
-        sk
-      }
-    }
     try {
       spark.conf.set(fallbackKey, (256 * 1024).toString)
-      steps
+      superstep(
+        e.select(col("src").as("id")).distinct()
+          .select(col("id"), PackedHll.hll5Singleton(col("id"), lgK).as("sk")),
+        e, iters,
+        Step(col("sk"),
+          Seq(PackedHll.hll5UnionAgg(coalesce(col("m"), col("sk")), lgK).as("sk")),
+          Seq(col("sk")))).tail
     } finally prevFallback match {
       case Some(v) => spark.conf.set(fallbackKey, v)
       case None => spark.conf.unset(fallbackKey)
@@ -400,30 +414,22 @@ object IterativeGraph {
     * key column, not k sequential PageRank loops. Deterministic →
     * SQL-oracle-checkable (g19). Output: (source, id, rank) for
     * vertices with nonzero mass within `iters` hops (plus every
-    * source's own row). */
+    * source's own row): frontier-sparse, the (source × |V|) dense
+    * frame never materializes. A row, once it has mass, keeps it —
+    * every vertex that held mass still has an in-neighbour that does —
+    * so the state grows by the vertices the messages reach. */
   def personalizedPageRankFixed(edges: DataFrame, sources: Seq[Long],
       iters: Int, resetProb: Double = 0.15): DataFrame = {
-    val out = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val e = graft.Caches.cached(edges.select("src", "dst").join(out, "src"))
     val spark = edges.sparkSession
     import spark.implicits._
-    val seeds = graft.Caches.cached(
-      sources.map(s => (s, s)).toDF("source", "id"))
-    var ranks = seeds.select(col("source"), col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("source"), col("dst").as("id"))
-        .agg(sum(col("rank") / col("outdeg")).as("in_sum"))
-      // frontier-sparse union form: rows exist only where mass is —
-      // the (source × |V|) dense frame never materializes
-      ranks = contrib
-        .join(seeds.withColumn("__seed", lit(1)), Seq("source", "id"), "full_outer")
-        .select(col("source"), col("id"),
-          (when(col("__seed").isNotNull, lit(resetProb)).otherwise(lit(0.0)) +
-            lit(1 - resetProb) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
-        .localCheckpoint()
-    }
-    ranks
+    superstep(sources.map(s => (s, s, 1.0)).toDF("source", "id", "rank"),
+      pageRankEdges(edges), iters,
+      Step(col("rank") / col("outdeg"), Seq(sum("m").as("in_sum")),
+        Seq((when(col("id") === col("source"), lit(resetProb))
+          .otherwise(lit(0.0)) +
+          lit(1 - resetProb) * coalesce(col("in_sum"), lit(0.0))).as("rank")),
+        keys = Seq("source"))).last
+      .select("source", "id", "rank")
   }
 
   /** Multi-landmark unweighted shortest distances — the long-form core
@@ -432,26 +438,20 @@ object IterativeGraph {
     * symmetrize first for undirected semantics. ALL landmarks relax in
     * the SAME superstep jobs — the frontier state is keyed by
     * (landmark, id), so k landmarks cost one extra key column, not k
-    * sequential BFS loops. Deterministic integer math →
-    * SQL-oracle-checkable (g18). Output: (landmark, id, dist) for
-    * vertices reached within `iters` hops. */
+    * sequential BFS loops: [[relaxRounds]] at unit cost, whose improved
+    * frontier is exactly the newly reached level. Deterministic integer
+    * math → SQL-oracle-checkable (g18). Output: (landmark, id, dist)
+    * for vertices reached within `iters` hops. */
   def shortestPathsLandmarks(edges: DataFrame, landmarks: Seq[Long],
       iters: Int): DataFrame = {
-    val e = graft.Caches.cached(edges.select(col("src"), col("dst")))
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = landmarks.map(l => (l, l, 0)).toDF("landmark", "id", "dist")
-    for (i <- 1 to iters) {
-      // frontier-only relaxation (see bfsDistances): identical output,
-      // one frontier-sized join per superstep instead of all-reached
-      val relaxed = e
-        .join(dist.filter(col("dist") === i - 1).withColumnRenamed("id", "src"), "src")
-        .select(col("landmark"), col("dst").as("id"), (col("dist") + 1).as("dist"))
-      dist = dist.unionAll(relaxed)
-        .groupBy("landmark", "id").agg(min("dist").as("dist"))
-        .localCheckpoint()
+    val e = bySrc(edges, "landmarkEdges") {
+      edges.select(col("src"), col("dst"), lit(1L).as("w"))
     }
-    dist
+    relaxRounds(e, landmarks.map(l => (l, l, 0L)).toDF("landmark", "id", "dist"),
+      Seq("landmark"), iters)
+      .select(col("landmark"), col("id"), col("dist").cast("int").as("dist"))
   }
 
   /** Fixed-iteration power smoothing — the deterministic core of
@@ -462,51 +462,37 @@ object IterativeGraph {
     * D⁻¹W is row-stochastic, so each step is a weighted average of
     * neighbour values — no per-step normalization needed, values stay
     * O(1). Isolated vertices (no edges) are out of scope, as in PIC's
-    * affinity matrix. Output: (id, v) after `iters` supersteps. */
+    * affinity matrix. The degree rides in the state, so no superstep
+    * joins back to it. Output: (id, v) after `iters` supersteps. */
   def powerSmoothingFixed(edges: DataFrame, weightCol: String, iters: Int): DataFrame = {
-    val sym = graft.Caches.cached(
-      edges.select(col("src"), col("dst"), col(weightCol).as("w"))
-        .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
-          col(weightCol).as("w"))))
-    val deg = graft.Caches.cached(
-      sym.groupBy(col("src").as("id")).agg(sum("w").as("deg")))
+    val e = symmetrizedCosts(edges, s"smoothEdges|$weightCol", col(weightCol))
+    val deg = e.groupBy(col("src").as("id")).agg(sum("w").as("deg"))
     val stats = deg.agg(count(lit(1)).as("n"), sum("deg").as("sumdeg"))
-    var v = deg.crossJoin(broadcast(stats))
-      .select(col("id"), (col("deg") * col("n") / col("sumdeg")).as("v"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val s = sym.join(v.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(sum(col("w") * col("v")).as("s"))
-      v = deg.join(s, Seq("id"), "left")
-        .select(col("id"), (coalesce(col("s"), lit(0.0)) / col("deg")).as("v"))
-        .localCheckpoint()
-    }
-    v
+    superstep(deg.crossJoin(broadcast(stats)).select(col("id"),
+        (col("deg") * col("n") / col("sumdeg")).as("v"), col("deg")),
+      e, iters,
+      Step(col("w") * col("v"), Seq(sum("m").as("s"), max("deg").as("deg")),
+        Seq((coalesce(col("s"), lit(0.0)) / col("deg")).as("v"), col("deg"))))
+      .last.select("id", "v")
   }
 
   /** Deterministic Power Iteration Clustering — the MEASURED path of
-    * the M20 surface (m08): [[powerSmoothingFixed]] embedding, rounded
-    * to 4dp (cross-engine double-sum pinning, as g15), then k
-    * EQUAL-WIDTH histogram bins over [min(v), max(v)] as the cluster
-    * assignment. 1-D k-means on a power-smoothed embedding converges
-    * to contiguous segments; equal-width binning is its deterministic,
-    * single-pass stand-in — no RDD handoff, no iterative re-seeding,
-    * and every step (smoothing, rounding, binning) is
-    * SQL-oracle-checkable. spark.ml's PIC (graft.ml.Clustering.pic)
-    * stays as the reference-parity API; its RDD-internal power
-    * iterations measured a 6× run-to-run spread on identical inputs
-    * (PERF.md round 6), which is a scheduling hazard this path
-    * removes. Scale shape: smoothing supersteps are keyed equi-joins;
-    * the binning adds ONE broadcast min/max agg + a scan-stage
-    * projection. Output: (id, cluster 0..k−1). */
-  def picClustersFixed(edges: DataFrame, weightCol: String, iters: Int,
-      k: Int): DataFrame =
-    picClustersFromEmbedding(powerSmoothingFixed(edges, weightCol, iters), k)
-
-  /** [[picClustersFixed]] over a PRECOMPUTED raw smoothing embedding
-    * (id, v) — the seam that lets m08 and g15 share one memoized
-    * smoothing run per (session, input); rounding happens HERE so the
-    * shared frame stays raw and both consumers round identically. */
+    * the M20 surface (m08) over a PRECOMPUTED raw
+    * [[powerSmoothingFixed]] embedding (id, v), the seam that lets m08
+    * and g15 share one memoized smoothing run per (session, input):
+    * rounded HERE to 4dp (cross-engine double-sum pinning, as g15), so
+    * the shared frame stays raw and both consumers round identically,
+    * then k EQUAL-WIDTH histogram bins over [min(v), max(v)] as the
+    * cluster assignment. 1-D k-means on a power-smoothed embedding
+    * converges to contiguous segments; equal-width binning is its
+    * deterministic, single-pass stand-in — no RDD handoff, no
+    * iterative re-seeding, and every step (smoothing, rounding,
+    * binning) is SQL-oracle-checkable. spark.ml's PIC
+    * (graft.ml.Clustering.pic) stays as the reference-parity API; its
+    * RDD-internal power iterations measured a 6× run-to-run spread on
+    * identical inputs (PERF.md round 6), which is a scheduling hazard
+    * this path removes. The binning adds ONE broadcast min/max agg + a
+    * scan-stage projection. Output: (id, cluster 0..k−1). */
   def picClustersFromEmbedding(embedding: DataFrame, k: Int): DataFrame = {
     val v = embedding.select(col("id"), round(col("v"), 4).as("v"))
     val bounds = v.agg(min("v").as("lo"), max("v").as("hi"))
@@ -520,66 +506,40 @@ object IterativeGraph {
   }
 
   /** Connected components by min-label propagation over symmetrized
-    * edges, `iters` synchronous supersteps: label₀ = id;
-    * label₊(v) = min(label(v), min over neighbours). After enough
-    * iterations (≥ graph diameter) labels equal the component minimum;
-    * with fewer, a deterministic partial labelling. Output: (id, label). */
-  def minLabelComponents(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
-    val v = vertices.select("id")
-    val sym = symmetrize(edges)
-    var labels = v.select(col("id"), col("id").as("label"))
-    for (_ <- 1 to iters) {
-      val nb = sym.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("label").as("nb_min"))
-      // labels' id set is invariantly the vertex set (initialized from
-      // it, preserved every step), so no per-superstep re-join with v
-      labels = labels
-        .join(nb, Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nb_min"), col("label")))
-          .as("label"))
-        .localCheckpoint()
-    }
-    labels
-  }
+    * edges: label₀ = id; label₊(v) = min(label(v), min over
+    * neighbours). With `iters` ≥ 0, that many synchronous supersteps:
+    * after enough (≥ graph diameter) labels equal the component
+    * minimum; with fewer, a deterministic partial labelling. With
+    * `iters` < 0, supersteps run to a FIXPOINT — until no vertex's
+    * label improves, at most 64 (min-label propagation needs ≤ diameter
+    * supersteps; 64 covers any plausible near-dup chain). Use that
+    * when the near-dup graph's cluster diameter isn't known a priori —
+    * a chain of near-dups longer than a fixed `iters` would otherwise
+    * stay split across several survivors. The change flag `chg` comes
+    * out of the superstep's own aggregate and rides its checkpoint, so
+    * detection costs one `limit(1)`-early-exit scan of the
+    * just-materialized blocks. Output: (id, label).
+    *
+    * The undirected edges are a per-call artifact (released by
+    * graft.Caches.clear), not a [[bySrc]] memo: the Dedup and
+    * Similarity callers hand in near-dup pair frames, whose
+    * [[graft.Memo.planKey]] does not tell two checkpointed inputs of
+    * one schema apart, and a memo would also serve the pairs of a
+    * rewritten input path. */
+  def minLabelComponents(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    superstep(vertices.select(col("id"), col("id").as("label")),
+      graft.Caches.cached(bothWays(edges, lit(1L))
+        .repartition(parts(edges.sparkSession), col("src"))),
+      if (iters < 0) 64 else iters, minLabelStep,
+      changed = if (iters < 0) Some(col("chg")) else None)
+      .last.select("id", "label")
 
-  /** [[minLabelComponents]] iterated to a FIXPOINT: supersteps run
-    * until no vertex's label improves. The change flag is computed
-    * INSIDE the superstep projection (`chg` = neighbour min beats the
-    * current label) and rides the localCheckpoint, so detection costs
-    * one `limit(1)`-early-exit scan of the just-materialized blocks —
-    * not the join of two checkpointed frames (a full extra shuffle per
-    * superstep) it previously was. Use this when the near-dup graph's
-    * cluster diameter isn't known a priori — a chain of near-dups
-    * longer than a fixed `iters` would otherwise stay split across
-    * several survivors. `maxIters` bounds the loop (min-label
-    * propagation needs ≤ diameter supersteps; 64 covers any plausible
-    * near-dup chain). */
-  def minLabelComponentsConverged(vertices: DataFrame, edges: DataFrame,
-      maxIters: Int = 64): DataFrame = {
-    val v = vertices.select("id")
-    val sym = symmetrize(edges)
-    var labels = v.select(col("id"), col("id").as("label")).localCheckpoint()
-    var step = 0
-    var converged = false
-    while (!converged && step < maxIters) {
-      val nb = sym.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("label").as("nb_min"))
-      // labels' id set is invariantly the vertex set — see
-      // minLabelComponents; no per-superstep re-join with v
-      val next = labels
-        .join(nb, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nb_min"), col("label"))).as("label"),
-          (coalesce(col("nb_min"), col("label")) < col("label")).as("chg"))
-        .localCheckpoint()
-      converged = next.filter(col("chg")).limit(1).count() == 0L
-      labels = next.select("id", "label")
-      step += 1
-    }
-    labels
-  }
+  /** The min-label superstep of [[minLabelComponents]]. */
+  private[graft] def minLabelStep: Step =
+    Step(col("label"), Seq(min("m").as("nb"), max("label").as("label")),
+      Seq(least(col("label"), col("nb")).as("label"),
+        coalesce(col("nb") < col("label"), lit(false)).as("chg")),
+      keep = col("__own"))
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR
     * rounds (Kiveris et al., "Connected Components in MapReduce and
@@ -1049,7 +1009,7 @@ object IterativeGraph {
     * serves nothing, by construction. */
   def similarFromArtifact(spark: org.apache.spark.sql.SparkSession,
       path: String, queryNodes: DataFrame, k: Int): DataFrame = {
-    val idx = graft.Caches.cached(spark.read.parquet(path))
+    val idx = graft.Caches.cached(graft.Fs.readParquet(spark, path))
     val q = idx.join(broadcast(queryNodes.select(col("id").as("center"))),
       Seq("center"))
     cosineTopK(q, idx, k)
@@ -1087,14 +1047,14 @@ object IterativeGraph {
     * shapes). */
   def readWalkCorpus(spark: org.apache.spark.sql.SparkSession,
       path: String, salt: String, steps: Int): DataFrame = {
-    val key = spark.read.parquet(s"$path/key").collect()
+    val key = graft.Fs.readParquet(spark, s"$path/key").collect()
     require(key.length == 1 &&
       key(0).getAs[String]("salt") == salt &&
       key(0).getAs[Int]("steps") == steps,
       s"walk-corpus key mismatch at $path: wanted (salt=$salt, " +
         s"steps=$steps), found " +
         key.map(r => (r.get(0), r.get(1))).mkString(","))
-    graft.Caches.cached(spark.read.parquet(s"$path/walks"))
+    graft.Caches.cached(graft.Fs.readParquet(spark, s"$path/walks"))
   }
 
   /** SGNS NEGATIVE sampling (g29) — the last data step of the

@@ -699,7 +699,7 @@ object PropertyGraph {
       // dir, extra rows, null) is deleted and rebuilt, never served
       // and never fatal.
       if (graft.Fs.exists(spark, marker)) {
-        val rows = spark.read.parquet(marker).collect()
+        val rows = graft.Fs.readParquet(spark, marker).collect()
         if (!(rows.length == 1 && dir == rows(0).getString(0)))
           graft.Fs.deleteRecursive(spark, path)
       }
@@ -716,11 +716,11 @@ object PropertyGraph {
         Seq(dir).toDF("dir").coalesce(1)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(marker)
       }
-      val key = spark.read.parquet(marker).collect()
+      val key = graft.Fs.readParquet(spark, marker).collect()
       require(key.length == 1 && key(0).getString(0) == dir,
         s"co-purchase artifact key mismatch at $path after rebuild: " +
           s"wanted $dir, found ${key.map(_.get(0)).mkString(",")}")
-      val edges = graft.Caches.cached(spark.read.parquet(s"$path/edges"))
+      val edges = graft.Caches.cached(graft.Fs.readParquet(spark, s"$path/edges"))
       val parts = Tables.part(spark, dir)
         .select(col("p_partkey").cast("long").as("id"), col("p_name").as("name"),
           col("p_retailprice").as("balance"))

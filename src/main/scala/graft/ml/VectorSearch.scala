@@ -5,7 +5,6 @@ import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomP
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.similarity.Similarity
@@ -61,19 +60,18 @@ object VectorSearch {
   /** Serve half of [[ivfTopK]] over a prebuilt (neighbor_id, cv, part)
     * assignment frame — shared verbatim by the in-memory path and the
     * persisted-index path ([[readIvfIndex]] → this), so round-trip
-    * equality is structural. */
+    * equality is structural. Probed candidates rank through
+    * [[Similarity.topKBy]]: ≤ k rows per query per partition ride the
+    * shuffle, ties by neighbor id, never the whole scored set. */
   private def serveTrained(queries: DataFrame, assigned: DataFrame,
       centroids: Seq[(Int, Array[Float])], k: Int, nprobe: Int): DataFrame = {
     val q = queries.toDF("query_id", "qv")
     val qProbed = q.withColumn("part",
       explode(probeParts(col("qv"), centroids, nprobe)))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    qProbed.join(assigned, Seq("part"))
+    Similarity.topKBy(qProbed.join(assigned, Seq("part"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(Similarity.cosine(col("qv"), col("cv")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+      .withColumn("cos", round(Similarity.cosine(col("qv"), col("cv")), 6)),
+      k, "cos")
   }
 
   /** Parquet persistence for IVF indexes — the build-once/serve-many

@@ -859,7 +859,8 @@ object GraphQueries {
   /** Unrolled-CTE deterministic PIC cluster sizes (m08) — the power-
     * smoothing CTEs of [[powerSmoothingOracle]] plus 4dp rounding,
     * equal-width binning over [min, max], and the size histogram;
-    * mirrors IterativeGraph.picClustersFixed expression-for-expression
+    * mirrors IterativeGraph.powerSmoothingFixed followed by
+    * IterativeGraph.picClustersFromEmbedding expression-for-expression
     * (identical rounded inputs + identical IEEE arithmetic → identical
     * bins on both engines). */
   private[queries] def picClusterSizesOracle(iters: Int, k: Int): String = {

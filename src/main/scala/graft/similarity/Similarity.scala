@@ -217,7 +217,7 @@ object Similarity {
     * scores, so the score goes in negated and comes out through `abs`,
     * not unary minus — -(-0.0) would emit -0.0 for zero distances.
     * Output: (query_id, neighbor_id, `score`, rank). */
-  private def topKBy(scored: DataFrame, k: Int, score: String,
+  private[graft] def topKBy(scored: DataFrame, k: Int, score: String,
       nearest: Boolean = false): DataFrame =
     scored.groupBy("query_id")
       .agg(TopK.topK(k)(col("neighbor_id"),
@@ -530,10 +530,7 @@ object Similarity {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val named = df.toDF("id", "v")
     val labels =
-      if (iters < 0) graft.graph.IterativeGraph
-        .minLabelComponentsConverged(named.select("id"), edges)
-      else graft.graph.IterativeGraph
-        .minLabelComponents(named.select("id"), edges, iters)
+      graft.graph.IterativeGraph.minLabelComponents(named.select("id"), edges, iters)
     named.join(labels.filter(col("id") === col("label")).select("id"),
       Seq("id"), "left_semi")
   }

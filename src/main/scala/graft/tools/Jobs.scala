@@ -19,7 +19,9 @@ object Jobs {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val spark = graft.Sessions.local(cpus)
-    try { graft.SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
+    try graft.SparkEntry.entry(spark).count()
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"warm-up query failed: $e") }
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong

@@ -10,7 +10,9 @@ object Perf {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val spark = graft.Sessions.local(cpus)
-    try { graft.SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
+    try graft.SparkEntry.entry(spark).count()
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"warm-up query failed: $e") }
     args.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))

@@ -421,7 +421,7 @@ class DedupSpec extends SparkSpec {
     val e = Seq((5L, 9L), (9L, 1L), (1L, 8L), (8L, 4L)).toDF("src", "dst")
     val fixed = IterativeGraph.minLabelComponents(v, e, iters = 1)
       .filter($"id" === $"label").count()
-    val converged = IterativeGraph.minLabelComponentsConverged(v, e)
+    val converged = IterativeGraph.minLabelComponents(v, e, iters = -1)
       .filter($"id" === $"label").count()
     assert(fixed == 3)     // 5, 1, 4 are 1-hop local minima
     assert(converged == 1) // fixpoint reaches the true single component

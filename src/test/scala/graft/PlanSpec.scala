@@ -190,6 +190,14 @@ class PlanSpec extends SparkSpec {
       s"expected two-phase topkagg in:\n$plan")
   }
 
+  test("trained-IVF serve (m07) ranks probed candidates map-side: no Window") {
+    import graft.queries.MlQueries
+    val plan = packPlan(MlQueries.all, "m07_ivf_ann_topk")
+    assert(!plan.contains("Window"),
+      s"top-k must aggregate, not window-shuffle every probed candidate:\n$plan")
+    assert(plan.contains("topkagg"), s"expected the TopK aggregate in:\n$plan")
+  }
+
   test("LSH ANN top-k dedups id pairs (no payload distinct) and combines map-side") {
     import graft.queries.PipelineQueries
     val plan = packPlan(PipelineQueries.all, "s02_ann_lsh_topk")
@@ -702,17 +710,38 @@ class PlanSpec extends SparkSpec {
       all.count(_.isInstanceOf[BroadcastExchangeLike]))
   }
 
+  /** A checkpointed, id-partitioned superstep state over the
+    * customer-part graph's vertices, as the superstep driver keeps it. */
+  private def superstepState(g: graft.graph.PropertyGraph,
+      cols: org.apache.spark.sql.Column*): DataFrame =
+    org.apache.spark.sql.GraftExpressionBridge.localCheckpointPartitioned(
+      g.vertices.select(col("id") +: cols: _*)
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("id")))
+
   test("a PageRank superstep plans one exchange and no broadcast: the state join is narrow") {
     import graft.graph.{IterativeGraph, PropertyGraph}
     val g = PropertyGraph.customerPartGraph(spark, sf)
-    val e = IterativeGraph.pageRankEdges(g.edges)
-    val ranks = org.apache.spark.sql.GraftExpressionBridge.localCheckpointPartitioned(
-      g.vertices.select(col("id"), lit(1.0).as("rank"))
-        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("id")))
-    val step = IterativeGraph.pageRankStep(e, ranks,
-      col("rank") / col("outdeg"), 0.15)
+    val step = IterativeGraph.pageRankStep(col("rank") / col("outdeg"), 0.15)(
+      IterativeGraph.pageRankEdges(g.edges), superstepState(g, lit(1.0).as("rank")))
     assert(exchangesOf(step) == ((1, 0)),
       s"expected only the message exchange:\n${step.queryExecution.executedPlan}")
+  }
+
+  test("min-label and keyed landmark supersteps plan one exchange and no broadcast") {
+    import graft.graph.{IterativeGraph, PropertyGraph}
+    val g = PropertyGraph.customerPartGraph(spark, sf)
+    val e = IterativeGraph.undirected(g.edges)
+    val steps = Seq(
+      "min-label" -> IterativeGraph.minLabelStep(e,
+        superstepState(g, col("id").as("label"))),
+      // a key column and an active frontier: still the one exchange
+      "landmarks" -> IterativeGraph.relaxStep(Seq("landmark"))(e,
+        superstepState(g, (col("id") % 3).as("landmark"), lit(0L).as("dist"),
+          (col("id") % 2 === 0).as("improved"))))
+    steps.foreach { case (name, step) =>
+      assert(exchangesOf(step) == ((1, 0)),
+        s"$name: expected only the message exchange:\n${step.queryExecution.executedPlan}")
+    }
   }
 
   test("node2vec hops plan one exchange each: no window, no broadcast") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import graft.functions.PackedHll
 import graft.graph.IterativeGraph
 
 /** The partitioned superstep loops of [[IterativeGraph]] against the
@@ -71,6 +72,119 @@ class SuperstepSpec extends SparkSpec {
         .groupBy("id").agg(min("dist").as("dist")).localCheckpoint()
     }
     dist
+  }
+
+  private def sym(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** One plain min-label superstep: (id, label, chg). */
+  private def refMinLabelStep(labels: DataFrame, edges: DataFrame): DataFrame = {
+    val nb = sym(edges).join(labels.withColumnRenamed("id", "src"), "src")
+      .groupBy(col("dst").as("id")).agg(min("label").as("nb_min"))
+    labels.join(nb, Seq("id"), "left")
+      .select(col("id"),
+        least(col("label"), coalesce(col("nb_min"), col("label"))).as("label"),
+        (coalesce(col("nb_min"), col("label")) < col("label")).as("chg"))
+      .localCheckpoint()
+  }
+
+  private def refMinLabel(vertices: DataFrame, edges: DataFrame,
+      iters: Int): DataFrame =
+    (1 to iters).foldLeft(vertices.select(col("id"), col("id").as("label"))) {
+      (labels, _) => refMinLabelStep(labels, edges).select("id", "label")
+    }
+
+  private def refMinLabelConverged(vertices: DataFrame,
+      edges: DataFrame): DataFrame = {
+    var labels = vertices.select(col("id"), col("id").as("label"))
+    var converged = false
+    while (!converged) {
+      val next = refMinLabelStep(labels, edges)
+      converged = next.filter(col("chg")).count() == 0L
+      labels = next.select("id", "label")
+    }
+    labels
+  }
+
+  private def refLabelProp(vertices: DataFrame, edges: DataFrame,
+      iters: Int): DataFrame = {
+    var labels = vertices.select(col("id"), col("id").as("label"))
+    for (_ <- 1 to iters) {
+      val counts = sym(edges).join(labels.withColumnRenamed("id", "src"), "src")
+        .groupBy(col("dst").as("id"), col("label")).agg(count(lit(1)).as("c"))
+      val best = counts.withColumn("__r", row_number().over(
+          Window.partitionBy("id").orderBy(col("c").desc, col("label"))))
+        .filter(col("__r") === 1).select(col("id"), col("label").as("nb_label"))
+      labels = labels.join(best, Seq("id"), "left")
+        .select(col("id"), coalesce(col("nb_label"), col("label")).as("label"))
+        .localCheckpoint()
+    }
+    labels
+  }
+
+  private def refLandmarks(edges: DataFrame, landmarks: Seq[Long],
+      iters: Int): DataFrame = {
+    var dist = landmarks.map(l => (l, l, 0)).toDF("landmark", "id", "dist")
+    for (i <- 1 to iters) {
+      val relaxed = edges.select("src", "dst")
+        .join(dist.filter(col("dist") === i - 1).withColumnRenamed("id", "src"), "src")
+        .select(col("landmark"), col("dst").as("id"), (col("dist") + 1).as("dist"))
+      dist = dist.unionAll(relaxed)
+        .groupBy("landmark", "id").agg(min("dist").as("dist")).localCheckpoint()
+    }
+    dist
+  }
+
+  private def refPpr(edges: DataFrame, sources: Seq[Long],
+      iters: Int): DataFrame = {
+    val out = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val e = edges.select("src", "dst").join(out, "src")
+    val seeds = sources.map(s => (s, s)).toDF("source", "id")
+    var ranks = seeds.select(col("source"), col("id"), lit(1.0).as("rank"))
+    for (_ <- 1 to iters) {
+      val contrib = e.join(ranks.withColumnRenamed("id", "src"), "src")
+        .groupBy(col("source"), col("dst").as("id"))
+        .agg(sum(col("rank") / col("outdeg")).as("in_sum"))
+      ranks = contrib
+        .join(seeds.withColumn("__seed", lit(1)), Seq("source", "id"), "full_outer")
+        .select(col("source"), col("id"),
+          (when(col("__seed").isNotNull, lit(0.15)).otherwise(lit(0.0)) +
+            lit(0.85) * coalesce(col("in_sum"), lit(0.0))).as("rank"))
+        .localCheckpoint()
+    }
+    ranks
+  }
+
+  private def refSmoothing(edges: DataFrame, iters: Int): DataFrame = {
+    val symW = edges.select(col("src"), col("dst"), col("weight").as("w"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
+        col("weight").as("w")))
+    val deg = symW.groupBy(col("src").as("id")).agg(sum("w").as("deg"))
+      .localCheckpoint()
+    val stats = deg.agg(count(lit(1)).as("n"), sum("deg").as("sumdeg"))
+    var v = deg.crossJoin(stats)
+      .select(col("id"), (col("deg") * col("n") / col("sumdeg")).as("v"))
+    for (_ <- 1 to iters) {
+      val s = symW.join(v.withColumnRenamed("id", "src"), "src")
+        .groupBy(col("dst").as("id")).agg(sum(col("w") * col("v")).as("s"))
+      v = deg.join(s, Seq("id"), "left")
+        .select(col("id"), (coalesce(col("s"), lit(0.0)) / col("deg")).as("v"))
+        .localCheckpoint()
+    }
+    v
+  }
+
+  /** Exact ≤-t-hop ball sizes over the symmetrized edges, on the driver:
+    * every edge endpoint's ball, itself included. */
+  private def exactBalls(edges: Seq[(Long, Long, Double, Long)],
+      t: Int): Map[Long, Long] = {
+    val adj = edges.flatMap { case (s, d, _, _) => Seq(s -> d, d -> s) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    adj.keys.map { v =>
+      val ball = (1 to t).foldLeft(Set(v)) { (b, _) => b ++ b.flatMap(adj) }
+      v -> ball.size.toLong
+    }.toMap
   }
 
   private def rankedAdjacency(edges: DataFrame): (DataFrame, DataFrame) = {
@@ -161,7 +275,9 @@ class SuperstepSpec extends SparkSpec {
     df.collect().map(_.toSeq).toSet
   private def ranks(df: DataFrame): Map[Long, Double] =
     df.as[(Long, Double)].collect().toMap
-  private def close(a: Map[Long, Double], b: Map[Long, Double]): Boolean =
+  private def keyedRanks(df: DataFrame): Map[(Long, Long), Double] =
+    df.as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+  private def close[K](a: Map[K, Double], b: Map[K, Double]): Boolean =
     a.keySet == b.keySet && a.forall { case (k, v) =>
       math.abs(v - b(k)) <= 1e-12 * math.max(1.0, math.abs(v)) }
 
@@ -203,9 +319,43 @@ class SuperstepSpec extends SparkSpec {
     assert(got.as[(Long, Int)].collect().toMap == Map(1L -> 0, 2L -> 1, 3L -> 2))
   }
 
-  test("g10 at sf0.01 runs at most 13 Spark jobs once its artifacts are built") {
+  test("driver loops equal their plain loops on random graphs") {
+    check(Prop.forAll(graphGen, Gen.choose(1L, 13L)) { (g, source) =>
+      val vs = g.vertices.toDF("id")
+      val es = g.edges.toDF("src", "dst", "weight", "cost")
+      val marks = Seq(source, 3L).distinct
+      val cc = rows(IterativeGraph.minLabelComponents(vs, es, iters = 2)) ==
+        rows(refMinLabel(vs, es, 2))
+      val ccFix = rows(IterativeGraph.minLabelComponents(vs, es, iters = -1)) ==
+        rows(refMinLabelConverged(vs, es))
+      val lp = rows(IterativeGraph.labelPropagationFixed(vs, es, iters = 3)) ==
+        rows(refLabelProp(vs, es, 3))
+      val lm = rows(IterativeGraph.shortestPathsLandmarks(es, marks, iters = 3)) ==
+        rows(refLandmarks(es, marks, 3))
+      val ppr = close(
+        keyedRanks(IterativeGraph.personalizedPageRankFixed(es, marks, iters = 3)),
+        keyedRanks(refPpr(es, marks, 3)))
+      val ps = close(
+        ranks(IterativeGraph.powerSmoothingFixed(es, "weight", iters = 3)),
+        ranks(refSmoothing(es, 3)))
+      // at ≤ 13 elements the 1024-register sketches count exactly
+      val hb = IterativeGraph.hyperBallSketches(es, iters = 2)
+        .select(col("id"), round(PackedHll.hll5Estimate(col("sk"))).cast("long"))
+        .as[(Long, Long)].collect().toMap == exactBalls(g.edges, 2)
+      val verdicts = Seq("minLabelComponents" -> cc,
+        "minLabelComponents converged" -> ccFix, "labelPropagationFixed" -> lp,
+        "shortestPathsLandmarks" -> lm, "personalizedPageRankFixed" -> ppr,
+        "powerSmoothingFixed" -> ps, "hyperBallSketches" -> hb)
+      Prop(verdicts.forall(_._2)) :|
+        s"differs: ${verdicts.filterNot(_._2).map(_._1).mkString(", ")}"
+    }, cases = 8)
+  }
+
+  /** Spark jobs of a query's second run at sf0.01 — the first builds
+    * the graph and the superstep artifacts. */
+  private def warmJobs(name: String): Int = {
     val dir = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
-    val g10 = SparkEntry.queries("g10_pagerank_fixed")
+    val q = SparkEntry.queries(name)
     val group = s"superstep-spec-${System.nanoTime()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -214,16 +364,31 @@ class SuperstepSpec extends SparkSpec {
         if (Option(j.properties).exists(
             _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
     }
-    g10(spark, dir).collect() // builds the graph and the edge artifact
+    q(spark, dir).collect()
     spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup(group, "g10 job-count pin")
-      try g10(spark, dir).collect()
+      spark.sparkContext.setJobGroup(group, s"$name job-count pin")
+      try q(spark, dir).collect()
       finally spark.sparkContext.clearJobGroup()
       // the listener bus is asynchronous: wait until the count settles
       var last = -1
       while (last != jobs.get) { last = jobs.get; Thread.sleep(500) }
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get > 0 && jobs.get <= 13, s"g10 ran ${jobs.get} jobs")
+    jobs.get
+  }
+
+  test("g10 at sf0.01 runs at most 13 Spark jobs once its artifacts are built") {
+    val n = warmJobs("g10_pagerank_fixed")
+    assert(n > 0 && n <= 13, s"g10 ran $n jobs")
+  }
+
+  test("g11 at sf0.01 runs at most 18 Spark jobs once its artifacts are built") {
+    val n = warmJobs("g11_minlabel_components")
+    assert(n > 0 && n <= 18, s"g11 ran $n jobs")
+  }
+
+  test("g18 at sf0.01 runs at most 11 Spark jobs once its artifacts are built") {
+    val n = warmJobs("g18_landmark_distances")
+    assert(n > 0 && n <= 11, s"g18 ran $n jobs")
   }
 }
