@@ -23,10 +23,9 @@ import org.apache.spark.sql.functions._
   * power smoothing and HyperBall — runs on ONE private driver,
   * [[superstep]], which iterates a [[Step]]: GraphFrames' Pregel
   * superstep (`aggregateMessages`). The graph side is an artifact built
-  * ONCE per session ([[bySrc]]: [[graft.Memo]], keyed by the edge
-  * frame's [[graft.Memo.planKey]]; min-label components build theirs
-  * once per call) and hash-partitioned by `src` into the session's
-  * shuffle-partition count; it never moves again. The
+  * ONCE per session where the edge frame's content has a key, else once
+  * per call ([[bySrc]]), and hash-partitioned by `src` into the
+  * session's shuffle-partition count; it never moves again. The
   * state stays partitioned by vertex id into the same count, so the
   * state ⋈ graph join is narrow (a `shuffle_hash` hint over
   * co-partitioned sides — no exchange, no broadcast of the edge side).
@@ -63,21 +62,45 @@ object IterativeGraph {
   private def parts(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions").toInt
 
-  /** A session-memoized graph artifact hash-partitioned by `src` into
-    * [[parts]] partitions; `kind` names what `build` derives from the
-    * edge frame. Keyed by the edge frame's canonicalized-plan digest
-    * ([[graft.Memo.planKey]]): semantic twins — and only those — share
-    * an entry, so an equivalent edge frame built by another query reuses
-    * the artifact instead of persisting a second one. Released at Memo
-    * family boundaries like every non-table entry. */
-  private def bySrc(edges: DataFrame, kind: String)(
+  /** The graph artifact `kind` that `build` derives from the edge
+    * frame, persisted once per session when the edge frame's content
+    * has a key, else once per call (released by graft.Caches.clear).
+    * The key is the edge frame's canonicalized-plan digest
+    * ([[graft.Memo.planKey]]) plus the files under each of its file
+    * scans, so an equivalent edge frame built by another query reuses
+    * the artifact instead of persisting a second one. It exists only
+    * when every leaf of the plan is a local relation (whose rows the
+    * digest folds in) or a file scan: the digest names a scan by its
+    * format and schema, not its path or files, and a checkpointed or
+    * RDD-backed leaf by its schema alone, so two such edge frames of
+    * one schema would otherwise share an entry. Memoized entries are
+    * released at Memo family boundaries like every non-table entry. */
+  private def artifact(edges: DataFrame, kind: String)(
       build: => DataFrame): DataFrame = {
-    val n = parts(edges.sparkSession)
-    graft.Memo.df(edges.sparkSession,
-        s"$kind|${graft.Memo.planKey(edges)}|$n") {
-      build.repartition(n, col("src"))
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val spark = edges.sparkSession
+    val files = edges.queryExecution.analyzed.collectLeaves().map {
+      case _: LocalRelation => Some("")
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => Some(fs.location.inputFiles.sorted.mkString("\n"))
+        case _ => None
+      }
+      case _ => None
     }
+    if (files.forall(_.isDefined)) {
+      val listing = java.util.UUID.nameUUIDFromBytes(
+        files.flatten.mkString("\u0000").getBytes("UTF-8"))
+      graft.Memo.df(spark,
+        s"$kind|${graft.Memo.planKey(edges)}|$listing|${parts(spark)}")(build)
+    } else graft.Caches.cached(build)
   }
+
+  /** An [[artifact]] hash-partitioned by `src` into [[parts]]
+    * partitions. */
+  private def bySrc(edges: DataFrame, kind: String)(
+      build: => DataFrame): DataFrame =
+    artifact(edges, kind)(build.repartition(parts(edges.sparkSession), col("src")))
 
   /** Both directions of every edge as (src, dst, w). */
   private def bothWays(edges: DataFrame, w: Column): DataFrame =
@@ -90,8 +113,8 @@ object IterativeGraph {
       w: Column): DataFrame =
     bySrc(edges, kind)(bothWays(edges, w))
 
-  /** The undirected unit-cost artifact: BFS, label propagation and
-    * HyperBall share it. */
+  /** The undirected unit-cost artifact: BFS, label propagation,
+    * min-label components and HyperBall share it. */
   private[graft] def undirected(edges: DataFrame): DataFrame =
     symmetrizedCosts(edges, "undirected", lit(1L))
 
@@ -132,21 +155,35 @@ object IterativeGraph {
     * With `changed`, the loop also ends after a superstep whose new
     * state has no `changed` row. Holds nothing outside its locals, so
     * two loops can run at once (g34/g35 overlap theirs). Returns the
-    * state before the first superstep and after each one. */
+    * last state. */
   private def superstep(init: DataFrame, e: DataFrame, iters: Int,
-      step: Step, changed: Option[Column] = None): Seq[DataFrame] = {
-    var state = init.repartition(parts(e.sparkSession), col("id"))
-    val states = Vector.newBuilder[DataFrame] += state
-    var i = 0
-    var moving = true
-    while (moving && i < iters) {
-      state = localCheckpointPartitioned(step(e, state))
-      states += state
-      moving = changed.forall(c => state.filter(c).limit(1).count() > 0)
-      i += 1
+      step: Step, changed: Option[Column] = None): DataFrame =
+    supersteps(init, e, iters, step, changed).reduceLeft((_, s) => s)
+
+  /** [[superstep]]'s states as they are computed: the state before the
+    * first superstep, then the state after each one. Each superstep
+    * runs when its state is asked for, and the iterator holds only the
+    * latest, so a caller that keeps one state at a time lets the
+    * earlier checkpoints be reclaimed. */
+  private def supersteps(init: DataFrame, e: DataFrame, iters: Int,
+      step: Step, changed: Option[Column] = None): Iterator[DataFrame] =
+    new Iterator[DataFrame] {
+      private var state: DataFrame = null
+      private var done = 0
+      private var moving = true
+      def hasNext: Boolean = state == null || (moving && done < iters)
+      def next(): DataFrame = {
+        state =
+          if (state == null) init.repartition(parts(e.sparkSession), col("id"))
+          else {
+            val s = localCheckpointPartitioned(step(e, state))
+            done += 1
+            moving = changed.forall(c => s.filter(c).limit(1).count() > 0)
+            s
+          }
+        state
+      }
     }
-    states.result()
-  }
 
   /** PageRank, `iters` synchronous supersteps:
     * r₀ = 1; r₊(v) = resetProb + (1−resetProb)·Σ_{u→v} r(u)/outdeg(u).
@@ -172,7 +209,7 @@ object IterativeGraph {
   private def pageRankLoop(vertices: DataFrame, e: DataFrame, msg: Column,
       iters: Int, resetProb: Double): DataFrame =
     superstep(vertices.select(col("id"), lit(1.0).as("rank")), e, iters,
-      pageRankStep(msg, resetProb)).last
+      pageRankStep(msg, resetProb))
 
   /** The PageRank superstep; `msg` is the mass one edge carries, over
     * the artifact's columns and the source's `rank`. */
@@ -197,7 +234,7 @@ object IterativeGraph {
       Step(col("label"),
         Seq(mode(col("m"), deterministic = true).as("nb"), max("label").as("label")),
         Seq(coalesce(col("nb"), col("label")).as("label")),
-        keep = col("__own"))).last
+        keep = col("__own")))
 
   /** WEIGHTED PageRank, `iters` synchronous supersteps — the mass a
     * vertex passes along an edge is proportional to the edge's weight
@@ -321,7 +358,7 @@ object IterativeGraph {
   private def relaxRounds(e: DataFrame, seeds: DataFrame, keys: Seq[String],
       iters: Int): DataFrame =
     superstep(seeds.withColumn("improved", lit(true)), e, iters,
-      relaxStep(keys)).last.drop("improved")
+      relaxStep(keys)).drop("improved")
 
   /** The relaxation superstep of [[relaxRounds]]. */
   private[graft] def relaxStep(keys: Seq[String]): Step =
@@ -391,13 +428,13 @@ object IterativeGraph {
     val prevFallback = spark.conf.getOption(fallbackKey)
     try {
       spark.conf.set(fallbackKey, (256 * 1024).toString)
-      superstep(
+      supersteps(
         e.select(col("src").as("id")).distinct()
           .select(col("id"), PackedHll.hll5Singleton(col("id"), lgK).as("sk")),
         e, iters,
         Step(col("sk"),
           Seq(PackedHll.hll5UnionAgg(coalesce(col("m"), col("sk")), lgK).as("sk")),
-          Seq(col("sk")))).tail
+          Seq(col("sk")))).drop(1).toVector
     } finally prevFallback match {
       case Some(v) => spark.conf.set(fallbackKey, v)
       case None => spark.conf.unset(fallbackKey)
@@ -428,7 +465,7 @@ object IterativeGraph {
         Seq((when(col("id") === col("source"), lit(resetProb))
           .otherwise(lit(0.0)) +
           lit(1 - resetProb) * coalesce(col("in_sum"), lit(0.0))).as("rank")),
-        keys = Seq("source"))).last
+        keys = Seq("source")))
       .select("source", "id", "rank")
   }
 
@@ -473,7 +510,7 @@ object IterativeGraph {
       e, iters,
       Step(col("w") * col("v"), Seq(sum("m").as("s"), max("deg").as("deg")),
         Seq((coalesce(col("s"), lit(0.0)) / col("deg")).as("v"), col("deg"))))
-      .last.select("id", "v")
+      .select("id", "v")
   }
 
   /** Deterministic Power Iteration Clustering — the MEASURED path of
@@ -518,21 +555,12 @@ object IterativeGraph {
     * stay split across several survivors. The change flag `chg` comes
     * out of the superstep's own aggregate and rides its checkpoint, so
     * detection costs one `limit(1)`-early-exit scan of the
-    * just-materialized blocks. Output: (id, label).
-    *
-    * The undirected edges are a per-call artifact (released by
-    * graft.Caches.clear), not a [[bySrc]] memo: the Dedup and
-    * Similarity callers hand in near-dup pair frames, whose
-    * [[graft.Memo.planKey]] does not tell two checkpointed inputs of
-    * one schema apart, and a memo would also serve the pairs of a
-    * rewritten input path. */
+    * just-materialized blocks. Output: (id, label). */
   def minLabelComponents(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame =
     superstep(vertices.select(col("id"), col("id").as("label")),
-      graft.Caches.cached(bothWays(edges, lit(1L))
-        .repartition(parts(edges.sparkSession), col("src"))),
-      if (iters < 0) 64 else iters, minLabelStep,
+      undirected(edges), if (iters < 0) 64 else iters, minLabelStep,
       changed = if (iters < 0) Some(col("chg")) else None)
-      .last.select("id", "label")
+      .select("id", "label")
 
   /** The min-label superstep of [[minLabelComponents]]. */
   private[graft] def minLabelStep: Step =
@@ -743,23 +771,20 @@ object IterativeGraph {
   }
 
   /** Every vertex's neighbours in the symmetrized graph as one
-    * ascending, duplicate-free array — (src, nb), memoized and
-    * partitioned by src like a [[bySrc]] artifact (the grouping runs
-    * over the src-partitioned pairs, so the build shuffles once). The
-    * walk family's serving artifact: a pure function of the edge list,
-    * built by every g26–g31 query, so it memoizes at session scope like
-    * the edge list itself, and a hop reads a neighbour's rank as its
+    * ascending, duplicate-free array — (src, nb), an [[artifact]]
+    * partitioned by src like a [[bySrc]] one (the grouping runs over
+    * the src-partitioned pairs, so the build shuffles once). The walk
+    * family's serving artifact: a pure function of the edge list, built
+    * by every g26–g31 query, so it memoizes at session scope like the
+    * edge list itself, and a hop reads a neighbour's rank as its
     * array index instead of through a per-vertex window. */
-  private def adjacencyLists(edges: DataFrame): DataFrame = {
-    val n = parts(edges.sparkSession)
-    graft.Memo.df(edges.sparkSession,
-        s"walkAdj|${graft.Memo.planKey(edges)}|$n") {
+  private def adjacencyLists(edges: DataFrame): DataFrame =
+    artifact(edges, "walkAdj") {
       edges.select(col("src"), col("dst"))
         .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(n, col("src"))
+        .repartition(parts(edges.sparkSession), col("src"))
         .groupBy("src").agg(array_sort(collect_set(col("dst"))).as("nb"))
     }
-  }
 
   private def walkStarts(starts: DataFrame): DataFrame =
     starts.select(col("id").cast("long").as("walk_id"))

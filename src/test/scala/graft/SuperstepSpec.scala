@@ -351,6 +351,50 @@ class SuperstepSpec extends SparkSpec {
     }, cases = 8)
   }
 
+  test("edge frames of one schema never share a superstep artifact") {
+    val dir = java.nio.file.Files.createTempDirectory("superstep-edges").toString
+    val a = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
+    val b = Seq((1L, 3L), (3L, 5L), (6L, 1L), (2L, 2L)).toDF("src", "dst")
+    a.write.parquet(s"$dir/a")
+    b.write.parquet(s"$dir/b")
+    a.write.parquet(s"$dir/c")
+    val vs = (1L to 7L).toDF("id")
+    val marks = Seq(1L, 6L)
+    val starts = Seq(1L, 3L).toDF("id")
+    /** Every loop that builds an edge artifact, run on `es` and on its
+      * plain loop; returns the loops whose answers differ. */
+    def wrong(es: DataFrame): Seq[String] = {
+      val outdeg = es.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      Seq(
+        "pageRankFixed" -> close(ranks(IterativeGraph.pageRankFixed(vs, es, 3)),
+          ranks(refPageRank(vs, es.join(outdeg, "src"), col("rank") / col("outdeg"), 3))),
+        "bfsDistances" -> (rows(IterativeGraph.bfsDistances(es, 1L, 3)) ==
+          rows(refBfs(es, 1L, 3))),
+        "minLabelComponents" -> (rows(IterativeGraph.minLabelComponents(vs, es, -1)) ==
+          rows(refMinLabelConverged(vs, es))),
+        "labelPropagationFixed" -> (rows(IterativeGraph.labelPropagationFixed(vs, es, 3)) ==
+          rows(refLabelProp(vs, es, 3))),
+        "shortestPathsLandmarks" -> (rows(IterativeGraph.shortestPathsLandmarks(es, marks, 3)) ==
+          rows(refLandmarks(es, marks, 3))),
+        "personalizedPageRankFixed" -> close(
+          keyedRanks(IterativeGraph.personalizedPageRankFixed(es, marks, 3)),
+          keyedRanks(refPpr(es, marks, 3))),
+        "walkCorpus" -> (rows(IterativeGraph.walkCorpus(es, starts, 3, "s")) ==
+          rows(refWalks(es, starts, 3, "s"))))
+        .filterNot(_._2).map(_._1)
+    }
+    def both(name: String, first: => DataFrame, second: => DataFrame): Unit = {
+      val w = wrong(first) ++ wrong(second)
+      assert(w.isEmpty, s"$name: ${w.mkString(", ")}")
+    }
+    both("checkpointed", a.localCheckpoint(), b.localCheckpoint())
+    both("parquet paths", spark.read.parquet(s"$dir/a"), spark.read.parquet(s"$dir/b"))
+    both("rewritten path", spark.read.parquet(s"$dir/c"), {
+      b.write.mode("overwrite").parquet(s"$dir/c")
+      spark.read.parquet(s"$dir/c")
+    })
+  }
+
   /** Spark jobs of a query's second run at sf0.01 — the first builds
     * the graph and the superstep artifacts. */
   private def warmJobs(name: String): Int = {
