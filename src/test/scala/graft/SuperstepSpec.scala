@@ -352,7 +352,7 @@ class SuperstepSpec extends SparkSpec {
   }
 
   test("edge frames of one schema never share a superstep artifact") {
-    val dir = java.nio.file.Files.createTempDirectory("superstep-edges").toString
+    val dir = ScratchDirs.scratch("superstep_edges")
     val a = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val b = Seq((1L, 3L), (3L, 5L), (6L, 1L), (2L, 2L)).toDF("src", "dst")
     a.write.parquet(s"$dir/a")
