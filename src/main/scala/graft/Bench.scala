@@ -47,7 +47,8 @@ object Bench {
       Tables.embeddings(spark, sfDir).count()
       Tables.lineitem(spark, sfDir).count()
       Tables.events(spark, sfDir).count()
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"warm-up failed: $e") }
 
     // Query FAMILY = the alphabetic prefix (d09 → "d", sw04 → "sw").
     // The sorted sweep visits families contiguously, so a family

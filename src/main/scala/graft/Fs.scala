@@ -66,6 +66,20 @@ object Fs {
   def readParquet(spark: SparkSession, path: String): DataFrame =
     readParquet(spark, Seq(path))
 
+  /** Append delete requests to the tombstone side-table of the index
+    * at `path`: `ids`' `idCol`, as long, under the index's id column
+    * `key`. O(|deletes|) — index files untouched. */
+  def tombstone(ids: DataFrame, idCol: String, key: String,
+      path: String): Unit =
+    ids.select(col(idCol).cast("long").as(key))
+      .write.mode("append").parquet(s"$path/tombstones")
+
+  /** Drop the tombstone side-table of the index at `path`: after a
+    * compaction has folded it in, and on every (re)build, whose delete
+    * requests named the replaced index's rows, not the new one's. */
+  def clearTombstones(spark: SparkSession, path: String): Unit =
+    deleteRecursive(spark, s"$path/tombstones")
+
   /** The tombstone side-table of the index at `path` (None when no
     * delete was ever requested). A public index call reads it once and
     * passes the frame to every anti-join it needs. */

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  LogicalRelation, PartitioningAwareFileIndex}
 
 import scala.collection.concurrent.TrieMap
 
@@ -12,6 +18,8 @@ import scala.collection.concurrent.TrieMap
   * work once per (session, input-dir) — the moral equivalent of a
   * materialized view, and the pattern a 1000-executor deployment would
   * use for hot shared inputs (persist once, reference everywhere).
+  * A memo over a caller's frame keys that frame by [[contentKey]], the
+  * one rule for "same input"; a frame without one is not memoized.
   *
   * The outer map is an IdentityHashMap keyed by the SparkSession
   * OBJECT — two live sessions can never collide (unlike an
@@ -83,7 +91,37 @@ object Memo {
     }
   }
 
-  /** Collision-resistant memo key for a plan: 128-bit MD5 of the
+  /** The content identity of `df`'s input, or None when it has none:
+    * the one place that decides whether two frames are the same input,
+    * for every memo that outlives the frame that filled it (the graph
+    * artifacts, the BPE loop, the stream stage). The key is
+    * [[planKey]]'s digest plus, for each file-scan leaf, every file's
+    * path, length and modification time, taken from the file statuses
+    * the scan's file index already holds (no listing, no filesystem
+    * call, no Spark job). So two directories of one schema, or one
+    * directory rewritten in place, get different keys. It is None when
+    * any leaf is neither a local relation nor a file scan (the plan of
+    * a `localCheckpoint` or RDD-backed frame names only its schema), or
+    * when the plan holds a subquery (whose leaves are not among the
+    * plan's leaves, so neither their rows nor their files would be
+    * folded in); a memo keeps such a frame's result per call, not per
+    * session. */
+  def contentKey(df: DataFrame): Option[String] = {
+    val analyzed = df.queryExecution.analyzed
+    val files = analyzed.collectLeaves().map {
+      case _: LocalRelation => Some(Nil)
+      case LogicalRelation(
+          HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _), _, _, _, _) =>
+        Some(i.allFiles().sortBy(_.getPath.toString))
+      case _ => None
+    }
+    if (files.contains(None) ||
+        analyzed.exists(_.expressions.exists(SubqueryExpression.hasSubquery))) None
+    else Some(digest(planKey(df), files.flatten.map(_.flatMap(f =>
+      Seq(f.getPath.toString, f.getLen.toString, f.getModificationTime.toString)))))
+  }
+
+  /** Collision-resistant digest of a plan: 128-bit MD5 of the
     * CANONICALIZED logical plan string (attribute ids renumbered
     * positionally, so true semantic twins — and only those — share a
     * key). The 32-bit `semanticHash()` previously used here could
@@ -93,10 +131,12 @@ object Memo {
     * LocalRelation leaves canonicalize WITHOUT their rows (the plan
     * string is just the schema), so the digest also folds in each
     * local leaf's row data — two in-memory frames with one schema but
-    * different literals must not share a key. Scan-based plans carry
-    * their paths in the plan string and pay nothing extra; local
-    * relations are driver-sized by construction, so hashing their
-    * rows is cheap.
+    * different literals must not share a key. Local relations are
+    * driver-sized by construction, so hashing their rows is cheap. A
+    * file scan renders as its format and schema only, without its
+    * path or files, and a checkpointed or RDD-backed leaf as its
+    * schema alone: memos key their input by [[contentKey]], never by
+    * this digest.
     *
     * The fold is LENGTH-PREFIXED at both grains: each leaf contributes
     * its row count and each row its byte length before its content.
@@ -104,26 +144,30 @@ object Memo {
     * renderings concatenate identically (one row "a][b" vs rows
     * "a", "b") share a digest and serve each other's memoized
     * result — the classic ambiguous-concatenation hash bug. */
-  def planKey(df: DataFrame): String = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+  private[graft] def planKey(df: DataFrame): String = {
     val analyzed = df.queryExecution.analyzed
+    // InternalRow.toString renders content (field values or the
+    // UnsafeRow hex bytes) — content-based either way, unlike
+    // GenericInternalRow.hashCode which is identity-based
+    digest(analyzed.canonicalized.toString, analyzed.collectLeaves().collect {
+      case lr: LocalRelation => lr.data.map(_.toString)
+    })
+  }
+
+  /** MD5 of `head` and then of each group, length-prefixed: a group by
+    * its item count, an item by its byte length. */
+  private def digest(head: String, groups: Seq[Seq[String]]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
     def lenPrefix(n: Long): Unit =
       md.update(java.nio.ByteBuffer.allocate(8).putLong(n).array())
-    md.update(analyzed.canonicalized.toString.getBytes(utf8))
-    analyzed.collectLeaves().foreach {
-      // InternalRow.toString renders content (field values or the
-      // UnsafeRow hex bytes) — content-based either way, unlike
-      // GenericInternalRow.hashCode which is identity-based
-      case lr: LocalRelation =>
-        lenPrefix(lr.data.size.toLong)
-        lr.data.foreach { r =>
-          val bytes = r.toString.getBytes(utf8)
-          lenPrefix(bytes.length.toLong)
-          md.update(bytes)
-        }
-      case _ => ()
+    md.update(head.getBytes(UTF_8))
+    groups.foreach { g =>
+      lenPrefix(g.size.toLong)
+      g.foreach { item =>
+        val bytes = item.getBytes(UTF_8)
+        lenPrefix(bytes.length.toLong)
+        md.update(bytes)
+      }
     }
     md.digest().map("%02x".format(_)).mkString
   }

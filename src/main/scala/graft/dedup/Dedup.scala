@@ -455,15 +455,22 @@ object Dedup {
     * repartitioned by `hp` before the write so each partition lands
     * as whole files (the writeIvfIndex lesson). One keyed shuffle at
     * build; the index is ~one row per distinct doc — far smaller than
-    * the corpus. */
+    * the corpus. A rebuild clears any stale tombstone side-table. */
   def writeHashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String): Unit =
-    exactGroups(df, idCol, textCol)
-      .select(col("text_hash"), col("keep_id").as("first_id"))
-      .withColumn("hp", substring(col("text_hash"), 1, 1))
+      path: String): Unit = {
+    writeHashes(exactGroups(df, idCol, textCol)
+      .select(col("text_hash"), col("keep_id").as("first_id")), "overwrite", path)
+    graft.Fs.clearTombstones(df.sparkSession, path)
+  }
+
+  /** Write (mode `mode`) (text_hash, first_id) rows to `path/hashes`,
+    * partitioned by the hash's first hex char `hp` and repartitioned
+    * on it first, so each partition lands as whole files — the one
+    * layout every hash-index build, append and compaction writes. */
+  private def writeHashes(rows: DataFrame, mode: String, path: String): Unit =
+    rows.withColumn("hp", substring(col("text_hash"), 1, 1))
       .repartition(col("hp"))
-      .write.mode("overwrite").partitionBy("hp")
-      .parquet(s"$path/hashes")
+      .write.mode(mode).partitionBy("hp").parquet(s"$path/hashes")
 
   /** Reload the persisted hash index: (text_hash, first_id, hp). */
   def readHashIndex(spark: org.apache.spark.sql.SparkSession,
@@ -480,7 +487,13 @@ object Dedup {
     * hash-partitioned parquet side; the append pays one keyed shuffle
     * over admitted rows only. */
   def ingestAgainstHashIndex(batch: DataFrame, idCol: String,
-      textCol: String, path: String): DataFrame = {
+      textCol: String, path: String): DataFrame =
+    ingestAgainstHashes(batch, idCol, textCol, path,
+      readHashIndex(batch.sparkSession, path))
+
+  /** [[ingestAgainstHashIndex]] against the index rows `index`. */
+  private def ingestAgainstHashes(batch: DataFrame, idCol: String,
+      textCol: String, path: String, index: DataFrame): DataFrame = {
     // EAGER localCheckpoint, not Caches.cached: the append below writes
     // to the same path the anti-join scans, and Spark's post-write
     // refreshByPath would RE-CACHE a persisted plan against the
@@ -491,15 +504,10 @@ object Dedup {
     val admitted =
       dropExactDups(batch, idCol, textCol)
         .withColumn("text_hash", md5(col(textCol)))
-        .join(readHashIndex(batch.sparkSession, path)
-          .select("text_hash"), Seq("text_hash"), "left_anti")
+        .join(index.select("text_hash"), Seq("text_hash"), "left_anti")
         .localCheckpoint()
-    admitted
-      .groupBy("text_hash").agg(min(col(idCol)).as("first_id"))
-      .withColumn("hp", substring(col("text_hash"), 1, 1))
-      .repartition(col("hp"))
-      .write.mode("append").partitionBy("hp")
-      .parquet(s"$path/hashes")
+    writeHashes(admitted.groupBy("text_hash").agg(min(col(idCol)).as("first_id")),
+      "append", path)
     admitted.drop("text_hash")
   }
 
@@ -558,21 +566,9 @@ object Dedup {
     * again under its new id. Same plan shape otherwise: batch-keyed
     * window + hash-keyed anti-join + append of admitted hashes. */
   def ingestAgainstLiveHashIndex(batch: DataFrame, idCol: String,
-      textCol: String, path: String): DataFrame = {
-    val admitted =
-      dropExactDups(batch, idCol, textCol)
-        .withColumn("text_hash", md5(col(textCol)))
-        .join(liveHashIndex(batch.sparkSession, path)
-          .select("text_hash"), Seq("text_hash"), "left_anti")
-        .localCheckpoint()
-    admitted
-      .groupBy("text_hash").agg(min(col(idCol)).as("first_id"))
-      .withColumn("hp", substring(col("text_hash"), 1, 1))
-      .repartition(col("hp"))
-      .write.mode("append").partitionBy("hp")
-      .parquet(s"$path/hashes")
-    admitted.drop("text_hash")
-  }
+      textCol: String, path: String): DataFrame =
+    ingestAgainstHashes(batch, idCol, textCol, path,
+      liveHashIndex(batch.sparkSession, path))
 
   /** Fold tombstones into the index files and clear them: rewrite
     * `hashes` as the live set (localCheckpoint first — the rewrite
@@ -588,11 +584,8 @@ object Dedup {
     val ts = graft.Fs.tombstones(spark, path)
     if (ts.isEmpty) return
     val live = hashIndexMinus(spark, path, ts).localCheckpoint()
-    live.withColumn("hp", substring(col("text_hash"), 1, 1))
-      .repartition(col("hp"))
-      .write.mode("overwrite").partitionBy("hp")
-      .parquet(s"$path/hashes")
-    graft.Fs.deleteRecursive(spark, s"$path/tombstones")
+    writeHashes(live, "overwrite", path)
+    graft.Fs.clearTombstones(spark, path)
   }
 
   // ---- Bloom-gated exact dedup (d29/sw18) --------------------------
@@ -724,12 +717,8 @@ object Dedup {
     // already complete, and stat.bloomFilter over an empty frame has
     // no buffer to return — skip maintenance entirely.
     if (!admitted.isEmpty) {
-      admitted
-        .groupBy("text_hash").agg(min(col(idCol)).as("first_id"))
-        .withColumn("hp", substring(col("text_hash"), 1, 1))
-        .repartition(col("hp"))
-        .write.mode("append").partitionBy("hp")
-        .parquet(s"$path/hashes")
+      writeHashes(admitted.groupBy("text_hash").agg(min(col(idCol)).as("first_id")),
+        "append", path)
       val (expected, numBits) = readBloomMeta(spark, path)
       val batchBf = admitted.select(xxhash64(col("text_hash")).as("h"))
         .stat.bloomFilter("h", expected, numBits)
@@ -766,7 +755,7 @@ object Dedup {
     * At 100 TB the signature table is ~H longs per doc (128 B at
     * H=16) and the band table `bands` rows per doc — both tiny next
     * to the text they index, and the text itself is NEVER rescanned
-    * at ingest. */
+    * at ingest. A rebuild clears any stale tombstone side-table. */
   def writeMinhashIndex(df: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int, bands: Int, path: String): Unit = {
     require(numHashes % bands == 0, "numHashes must divide evenly into bands")
@@ -779,16 +768,21 @@ object Dedup {
     // sequential form
     graft.Par.par2("writeMinhashIndex")(
       () => sig.write.mode("overwrite").parquet(s"$path/signatures"),
-      () => bandedOf(sig, numHashes, bands)
-        .repartition(col("band"))
-        .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands"))
-    ()
+      () => writeBands(bandedOf(sig, numHashes, bands), "overwrite", path))
+    graft.Fs.clearTombstones(df.sparkSession, path)
   }
 
   /** Reload the persisted signature table: (id, mh_0..mh_{H−1}). */
   def readMinhashSignatures(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
     graft.Fs.readParquet(spark, s"$path/signatures")
+
+  /** Write (mode `mode`) (id, bh, band) rows to `path/bands`,
+    * partitioned by `band` and repartitioned on it first — the one
+    * layout every MinHash build, append and compaction writes. */
+  private def writeBands(rows: DataFrame, mode: String, path: String): Unit =
+    rows.repartition(col("band"))
+      .write.mode(mode).partitionBy("band").parquet(s"$path/bands")
 
   /** Reload the persisted band table: (id, bh, band). */
   def readMinhashBands(spark: org.apache.spark.sql.SparkSession,
@@ -878,9 +872,7 @@ object Dedup {
     // (c) append admitted signatures + band rows
     val admittedSig = sigB.join(dropIds, Seq("id"), "left_anti")
     admittedSig.write.mode("append").parquet(s"$path/signatures")
-    bandedOf(admittedSig, numHashes, bands)
-      .repartition(col("band"))
-      .write.mode("append").partitionBy("band").parquet(s"$path/bands")
+    writeBands(bandedOf(admittedSig, numHashes, bands), "append", path)
     batch.join(dropIds, batch(idCol) === dropIds("id"), "left_anti")
   }
 
@@ -897,8 +889,7 @@ object Dedup {
   /** Append near-dup-index delete requests (indexed doc ids). */
   def tombstoneMinhashIndex(deleteIds: DataFrame, idCol: String,
       path: String): Unit =
-    deleteIds.select(col(idCol).cast("long").as("id"))
-      .write.mode("append").parquet(s"$path/tombstones")
+    graft.Fs.tombstone(deleteIds, idCol, "id", path)
 
   /** [[ingestAgainstMinhashIndex]] with both index artifacts taken
     * LIVE (tombstones honored): near-duplicates of deleted docs admit
@@ -937,9 +928,8 @@ object Dedup {
     val bnds = graft.Fs.minusTombstones(readMinhashBands(spark, path),
       ts, "id").localCheckpoint()
     sigs.write.mode("overwrite").parquet(s"$path/signatures")
-    bnds.repartition(col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
-    graft.Fs.deleteRecursive(spark, s"$path/tombstones")
+    writeBands(bnds, "overwrite", path)
+    graft.Fs.clearTombstones(spark, path)
   }
 
   /** Engine-portable SimHash: identical tf-weighted sign-bit

@@ -63,37 +63,20 @@ object IterativeGraph {
     spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** The graph artifact `kind` that `build` derives from the edge
-    * frame, persisted once per session when the edge frame's content
-    * has a key, else once per call (released by graft.Caches.clear).
-    * The key is the edge frame's canonicalized-plan digest
-    * ([[graft.Memo.planKey]]) plus the files under each of its file
-    * scans, so an equivalent edge frame built by another query reuses
-    * the artifact instead of persisting a second one. It exists only
-    * when every leaf of the plan is a local relation (whose rows the
-    * digest folds in) or a file scan: the digest names a scan by its
-    * format and schema, not its path or files, and a checkpointed or
-    * RDD-backed leaf by its schema alone, so two such edge frames of
-    * one schema would otherwise share an entry. Memoized entries are
-    * released at Memo family boundaries like every non-table entry. */
+    * frame, persisted once per session under the edge frame's
+    * [[graft.Memo.contentKey]], so an equivalent edge frame built by
+    * another query reuses the artifact instead of persisting a second
+    * one; an edge frame without a content key (checkpointed,
+    * RDD-backed) gets one per call (released by graft.Caches.clear).
+    * Memoized entries are released at Memo family boundaries like
+    * every non-table entry. */
   private def artifact(edges: DataFrame, kind: String)(
       build: => DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val spark = edges.sparkSession
-    val files = edges.queryExecution.analyzed.collectLeaves().map {
-      case _: LocalRelation => Some("")
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation => Some(fs.location.inputFiles.sorted.mkString("\n"))
-        case _ => None
-      }
-      case _ => None
+    graft.Memo.contentKey(edges) match {
+      case Some(k) => graft.Memo.df(spark, s"$kind|$k|${parts(spark)}")(build)
+      case None => graft.Caches.cached(build)
     }
-    if (files.forall(_.isDefined)) {
-      val listing = java.util.UUID.nameUUIDFromBytes(
-        files.flatten.mkString("\u0000").getBytes("UTF-8"))
-      graft.Memo.df(spark,
-        s"$kind|${graft.Memo.planKey(edges)}|$listing|${parts(spark)}")(build)
-    } else graft.Caches.cached(build)
   }
 
   /** An [[artifact]] hash-partitioned by `src` into [[parts]]

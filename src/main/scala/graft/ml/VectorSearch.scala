@@ -83,7 +83,8 @@ object VectorSearch {
     * unprobed list directories — the on-disk analog of inverted-list
     * pruning). Layout under `path`:
     *   centroids/   (part int, centroid array<float>)
-    *   assignments/ (neighbor_id, cv [, cn], part|cluster int) */
+    *   assignments/ (neighbor_id, cv [, cn], part|cluster int)
+    * A rebuild clears any stale tombstone side-table. */
   def writeIvfIndex(assigned: DataFrame, listCol: String,
       centroids: Seq[(Int, Array[Float])], path: String): Unit = {
     val spark = assigned.sparkSession
@@ -91,6 +92,7 @@ object VectorSearch {
     writeLists(assigned, listCol, "overwrite", path)
     centroids.map { case (i, v) => (i, v.toSeq) }.toDF("part", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    graft.Fs.clearTombstones(spark, path)
   }
 
   /** Write (mode `mode`) assignment rows to `path/assignments`,
@@ -157,8 +159,7 @@ object VectorSearch {
     * side-table. O(|deletes|) — never touches the list files. */
   def tombstoneIvfIndex(deleteIds: DataFrame, idCol: String,
       path: String): Unit =
-    deleteIds.select(col(idCol).cast("long").as("neighbor_id"))
-      .write.mode("append").parquet(s"$path/tombstones")
+    graft.Fs.tombstone(deleteIds, idCol, "neighbor_id", path)
 
   /** The assignment frame minus tombstoned vectors — what the serve
     * path scores. The tombstone side is delete-batch-sized and
@@ -186,7 +187,7 @@ object VectorSearch {
     if (ts.isEmpty) return
     writeLists(liveAssignments(spark, path, ts).localCheckpoint(), listCol,
       "overwrite", path)
-    graft.Fs.deleteRecursive(spark, s"$path/tombstones")
+    graft.Fs.clearTombstones(spark, path)
   }
 
   /** REBALANCE a persisted fixed-centroid index under NEW centroids
@@ -212,7 +213,6 @@ object VectorSearch {
     val reassigned = Similarity.assignFixed(live, newCents)
     writeIvfIndex(reassigned, "cluster",
       newCents.zipWithIndex.map(_.swap), path)
-    graft.Fs.deleteRecursive(spark, s"$path/tombstones")
   }
 
   /** Centroids of a persisted index alone (nlist-row driver fetch). */

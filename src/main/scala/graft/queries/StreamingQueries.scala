@@ -627,8 +627,9 @@ object StreamingQueries {
             .withColumn("doc_id", col("doc_id") + 2000000))
           .withColumn("ts", expr("timestamp_seconds(1704067200 + doc_id)"))
         // both phases stream the IDENTICAL feed under ONE stream name:
-        // StreamRunner keys its staged-parquet input by (name, plan),
-        // so phase 2 re-reads phase 1's staging instead of re-writing
+        // StreamRunner keys its staged-parquet input by (name, the
+        // feed's content key — its plan and the files it scans), so
+        // phase 2 re-reads phase 1's staging instead of re-writing
         // it (sink names stay distinct via the runner's run counter —
         // phase 1 is checkpointed before phase 2 runs). The remaining
         // two-phase cost is the double micro-batch serve: the proof.

@@ -38,14 +38,15 @@ object StreamRunner {
   // frame we just returned alive for the caller.
   private val lastSink = scala.collection.mutable.Map[(SparkSession, String), String]()
 
-  // staged-input reuse per (session, name, input plan): the parquet
-  // staging write is a HARNESS artifact (production tails its live
-  // source directly), so a repeat run of the same query over the same
-  // input — Bench's warm second run, Perf loops — must not re-pay it.
-  // Keyed by the analyzed input plan so the same query name at a
-  // different sf stages fresh; dirs are pid-scoped tmp, one per
-  // (query, input) per session, deleted by the shutdown hook below
-  // (per-run deletion would defeat the reuse).
+  // staged-input reuse per (session, name, input content key): the
+  // parquet staging write is a HARNESS artifact (production tails its
+  // live source directly), so a repeat run of the same query over the
+  // same input — Bench's warm second run, Perf loops — must not re-pay
+  // it. Keyed by graft.Memo.contentKey, so the same query name over
+  // other files (another sf, another dir, a dir rewritten in place)
+  // stages fresh; dirs are pid-scoped tmp, one per (query, input) per
+  // session, deleted by the shutdown hook below (per-run deletion
+  // would defeat the reuse).
   private val stagedInputs =
     scala.collection.mutable.Map[(SparkSession, String), String]()
 
@@ -75,52 +76,63 @@ object StreamRunner {
     df.select(cols.map(org.apache.spark.sql.functions.col): _*)
   }
 
+  /** Stage `batch` for a file-source replay under a fresh root dir,
+    * `graft_stream/<name>_p<pid>_<seq>` in tmp: pid and run scoped, so
+    * concurrent JVMs (a Bench sweep racing a Verify run) and re-runs at
+    * a different sf never overwrite a dir another stream is reading
+    * mid-flight. `write` puts the input into `<root>/in`, by default as
+    * at most 8 files (the file source lists and tracks every staged
+    * file per micro-batch, and the harness batches are aggregate-sized).
+    * Returns the root; [[replay]] streams it back. */
+  private def stage(batch: DataFrame, name: String)(write: String => Unit =
+      dir => batch.coalesce(8).write.mode("overwrite").parquet(dir)): String = {
+    val root = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_stream/" +
+      s"${name}_p${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
+    write(s"$root/in")
+    root
+  }
+
+  /** The file-source stream over a [[stage]]d root, with the batch's
+    * schema pinned and `maxFiles` staged files per micro-batch (0: all
+    * in one). */
+  private def replay(spark: SparkSession, batch: DataFrame, root: String,
+      maxFiles: Int = 0): DataFrame = {
+    val reader = spark.readStream.schema(batch.schema)
+    (if (maxFiles > 0) reader.option("maxFilesPerTrigger", maxFiles.toLong)
+     else reader).parquet(s"$root/in")
+  }
+
   def runAvailableNow(spark: SparkSession, batch: DataFrame, name: String,
       outputMode: String, extraConfs: Map[String, String] = Map.empty)
       (transform: DataFrame => DataFrame): DataFrame = {
-    // canonicalized 128-bit plan digest: attribute ids (#123) are
-    // fresh per analysis, so a raw plan string would never repeat
-    // across runs — canonicalization renumbers ids positionally so
-    // only true semantic twins share a key, and the MD5 digest (vs
-    // the old 32-bit semanticHash) makes a silent cross-query
-    // collision computationally implausible. Schema stays in the key
-    // as a cheap second discriminator.
-    val stageKey = (spark, name + "|" + graft.Memo.planKey(batch) + "|" +
-      batch.schema.catalogString)
-    // pid + runSeq scope the staging dir: concurrent JVMs (a Bench
-    // sweep racing a Verify run) and re-runs at a different sf must
-    // never overwrite a directory another AvailableNow stream is
-    // reading mid-flight
-    val stage = stagedInputs.synchronized {
+    // an input without a content key stages per run; the schema stays
+    // in the key as a cheap second discriminator
+    val key = graft.Memo.contentKey(batch)
+      .map(k => (spark, s"$name|$k|${batch.schema.catalogString}"))
+    def live(k: (SparkSession, String)) = stagedInputs.synchronized {
       // reclaim dirs of stopped sessions NOW — eviction without
       // deletion would leak them until JVM exit (the shutdown hook
       // only walks surviving entries)
-      val dead = stagedInputs.keys
-        .filter { case (s, _) => s.sparkContext.isStopped }.toSeq
-      dead.foreach(k => stagedInputs.remove(k).foreach(deleteDir))
+      stagedInputs.keys.filter(_._1.sparkContext.isStopped).toSeq
+        .foreach(d => stagedInputs.remove(d).foreach(deleteDir))
       // a tmp reaper may have removed a memoized dir mid-session:
       // re-stage rather than hand the file source a dead path
-      stagedInputs.get(stageKey)
+      stagedInputs.get(k)
         .filter(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
-    }.getOrElse {
-      val dir = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_stream/" +
-        s"${name}_p${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
-      // modest file count: the file source lists + tracks every staged
-      // file per micro-batch, and the harness batches are aggregate-sized
-      batch.coalesce(8).write.mode("overwrite").parquet(dir)
-      stagedInputs.synchronized {
-        stagedInputs.get(stageKey)
-          .filter(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
-          match {
-            // lost a stage race: use the winner's dir, reclaim ours
-            // (safe — no stream has read it yet)
-            case Some(winner) => deleteDir(dir); winner
-            case None => stagedInputs.put(stageKey, dir); dir
-          }
-      }
     }
-    val src = spark.readStream.schema(batch.schema).parquet(stage)
-    execToMemorySink(spark, src, name, outputMode, extraConfs)(transform)
+    val root = key.flatMap(live).getOrElse {
+      val dir = stage(batch, name)()
+      // lost a stage race: use the winner's dir, reclaim ours (safe —
+      // no stream has read it yet)
+      key.fold(dir)(k => stagedInputs.synchronized(live(k)
+        .map { winner => deleteDir(dir); winner }
+        .getOrElse { stagedInputs.put(k, dir); dir }))
+    }
+    // the memory sink holds the result rows; an unkeyed staging dir
+    // can go
+    try execToMemorySink(spark, replay(spark, batch, root), name, outputMode,
+      extraConfs)(transform)
+    finally if (key.isEmpty) deleteDir(root)
   }
 
   /** [[runAvailableNow]] with TIME-ORDERED multi-batch replay: the
@@ -139,18 +151,16 @@ object StreamRunner {
       extraConfs: Map[String, String] = Map.empty)
       (transform: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val stage = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_stream/" +
-      s"${name}_p${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
-    batch.repartitionByRange(files, col(orderCol))
+    val root = stage(batch, name)(batch.repartitionByRange(files, col(orderCol))
       .sortWithinPartitions(orderCol)
-      .write.mode("overwrite").parquet(stage)
+      .write.mode("overwrite").parquet(_))
     // part-0000i carries the i-th range: stamp strictly increasing
     // mtimes in name order so the source's mod-time ordering replays
     // the ranges oldest-first deterministically
     locally {
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._
-      val dir = Paths.get(stage)
+      val dir = Paths.get(s"$root/in")
       // Files.list opens a directory handle the stream must close —
       // unclosed, every ordered run leaks one fd for the process life
       val listing = Files.list(dir)
@@ -167,7 +177,7 @@ object StreamRunner {
       // that stages NOTHING for an empty write must hit the
       // documented zero-row path, not a hard require (ADVICE r14).
       if (parts.isEmpty) {
-        deleteDir(stage)
+        deleteDir(root)
         return emptyReplayResult(batch)(transform)
       }
       val base = Files.getLastModifiedTime(parts.head).toMillis
@@ -176,11 +186,10 @@ object StreamRunner {
           java.nio.file.attribute.FileTime.fromMillis(base + (i + 1) * 2000L))
       }
     }
-    val src = spark.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
     // the memory sink holds the result rows; the staging dir can go
-    try execToMemorySink(spark, src, name, outputMode, extraConfs)(transform)
-    finally deleteDir(stage)
+    try execToMemorySink(spark, replay(spark, batch, root, maxFiles = 1), name,
+      outputMode, extraConfs)(transform)
+    finally deleteDir(root)
   }
 
   /** The zero-row replay contract: an empty input's result is the
@@ -234,11 +243,11 @@ object StreamRunner {
         .start()
       q.awaitTermination()
     }
-    // runAvailableNow's staging dir is deliberately NOT deleted here:
-    // it is memoized in stagedInputs for the session's repeat runs
-    // (see above); dirs are pid-scoped tmp, one per (query, input),
-    // megabytes not gigabytes. (The ordered variant deletes its own —
-    // its caller materializes the sink first.)
+    // staging dirs are not deleted here: a keyed runAvailableNow
+    // stage is memoized in stagedInputs for the session's repeat runs
+    // (see above; pid-scoped tmp, one per (query, input), megabytes
+    // not gigabytes), and every other caller deletes its own after
+    // this returns.
     lastSink.synchronized {
       lastSink.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
       lastSink.put((spark, name), sink).foreach(spark.catalog.dropTempView)
@@ -264,14 +273,9 @@ object StreamRunner {
     * what lets `snapshotCommit(txn = …)` no-op the duplicate). */
   def runForeachBatchWithId(spark: SparkSession, batch: DataFrame,
       name: String)(fn: (DataFrame, Long) => Unit): Unit = {
-    val root = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_stream/" +
-      s"${name}_p${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
-    val stage = s"$root/in"
-    batch.coalesce(8).write.mode("overwrite").parquet(stage)
-    val src = spark.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", 2).parquet(stage)
+    val root = stage(batch, name)()
     withStreamConfs(spark) {
-      val q = src.writeStream
+      val q = replay(spark, batch, root, maxFiles = 2).writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             id: Long) => fn(b.toDF(), id)
         }
@@ -302,15 +306,10 @@ object StreamRunner {
   def runUpsertLatest(spark: SparkSession, batch: DataFrame, name: String,
       keyCols: Seq[String], latestByCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val root = s"${System.getProperty("java.io.tmpdir", "/tmp")}/graft_stream/" +
-      s"${name}_p${ProcessHandle.current().pid()}_${runSeq.incrementAndGet()}"
-    val stage = s"$root/in"
-    batch.coalesce(8).write.mode("overwrite").parquet(stage)
-    val src = spark.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", 2).parquet(stage)
+    val root = stage(batch, name)()
     @volatile var current: Option[String] = None
     withStreamConfs(spark) {
-      val q = src.writeStream
+      val q = replay(spark, batch, root, maxFiles = 2).writeStream
         .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             batchId: Long) =>
           val merged = current match {

@@ -138,13 +138,19 @@ object Retrieval {
 
   private def tokPart(c: Column): Column = substring(md5(c), 1, 1)
 
+  /** Write (mode `mode`) (doc_id, tok, tf) rows to `path/postings`,
+    * partitioned by [[tokPart]] and repartitioned on it first — the one
+    * layout every build, append and compaction writes. */
+  private def writePostings(tf: DataFrame, mode: String, path: String): Unit =
+    tf.withColumn("tp", tokPart(col("tok"))).repartition(col("tp"))
+      .write.mode(mode).partitionBy("tp").parquet(s"$path/postings")
+
   /** Build the persisted postings index from a corpus: ONE tokenize
     * scan + (doc, term) agg, then the two artifact writes. A rebuild
     * also clears any stale tombstone side-table — delete requests
     * against the replaced index don't apply to the new one. */
   def writePostingsIndex(corpus: DataFrame, idCol: String,
       textCol: String, path: String): Unit = {
-    graft.Fs.deleteRecursive(corpus.sparkSession, s"$path/tombstones")
     val tf = graft.Caches.cached(postingsOf(corpus, idCol, textCol))
     // run the two independent artifact writes concurrently over the
     // shared cached posting table (guide §2.6): the doclens agg
@@ -156,12 +162,10 @@ object Retrieval {
     // 2.60 → 3.24 s on s30 before this was removed. Distinct output
     // dirs; artifacts byte-identical to the sequential form.
     graft.Par.par2("writePostingsIndex")(
-      () => tf.withColumn("tp", tokPart(col("tok")))
-        .repartition(col("tp"))
-        .write.mode("overwrite").partitionBy("tp").parquet(s"$path/postings"),
+      () => writePostings(tf, "overwrite", path),
       () => tf.groupBy("doc_id").agg(sum("tf").as("dl"))
         .write.mode("overwrite").parquet(s"$path/doclens"))
-    ()
+    graft.Fs.clearTombstones(corpus.sparkSession, path)
   }
 
   /** Append a batch of NEW docs to the index. Posting rows are
@@ -177,9 +181,7 @@ object Retrieval {
     // locks dedupe the concurrent cache fill) — sw21 pays this op
     // once per micro-batch, so it cuts the per-batch fixed cost
     graft.Par.par2("appendToPostingsIndex")(
-      () => tf.withColumn("tp", tokPart(col("tok")))
-        .repartition(col("tp"))
-        .write.mode("append").partitionBy("tp").parquet(s"$path/postings"),
+      () => writePostings(tf, "append", path),
       () => tf.groupBy("doc_id").agg(sum("tf").as("dl"))
         .write.mode("append").parquet(s"$path/doclens"))
     ()
@@ -189,8 +191,7 @@ object Retrieval {
     * side-table. O(|deletes|) — index files untouched. */
   def tombstonePostingsIndex(deleteIds: DataFrame, idCol: String,
       path: String): Unit =
-    deleteIds.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+    graft.Fs.tombstone(deleteIds, idCol, "doc_id", path)
 
   /** The live postings / doclens — what the serve path scans: the
     * artifacts minus the tombstoned docs (tiny broadcast anti-join;
@@ -237,11 +238,9 @@ object Retrieval {
     if (ts.isEmpty) return
     val post = postingsMinus(spark, path, ts).localCheckpoint()
     val dls = doclensMinus(spark, path, ts).localCheckpoint()
-    post.withColumn("tp", tokPart(col("tok")))
-      .repartition(col("tp"))
-      .write.mode("overwrite").partitionBy("tp").parquet(s"$path/postings")
+    writePostings(post, "overwrite", path)
     dls.write.mode("overwrite").parquet(s"$path/doclens")
-    graft.Fs.deleteRecursive(spark, s"$path/tombstones")
+    graft.Fs.clearTombstones(spark, path)
   }
 
   /** Reciprocal-rank fusion of two ranked lists, each (query_id,

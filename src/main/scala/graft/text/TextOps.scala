@@ -355,16 +355,17 @@ object TextOps {
   /** The shared BPE training loop: returns (merge table, final
     * per-token segmentations (tok, seg, c)). [[bpeTrain]] publishes
     * the merges; [[bpeEncodedCounts]] joins the segmentations back
-    * onto the corpus. Memoized per (session, input plan, rounds) —
-    * the trainer and the encoder run over the same corpus in one
-    * sweep, and training is the dominant cost of both. */
+    * onto the corpus. Memoized per (session, corpus content key,
+    * rounds) — the trainer and the encoder run over the same corpus in
+    * one sweep, and training is the dominant cost of both; a corpus
+    * without a [[graft.Memo.contentKey]] trains per call. */
   private def bpeLoop(df: org.apache.spark.sql.DataFrame, textCol: String,
       merges: Int)
       : (Seq[(Long, String, Long)], org.apache.spark.sql.DataFrame) =
-    graft.Memo.obj(df.sparkSession, "bpeLoop|" +
-      graft.Memo.planKey(df) +
-      s"|$textCol|$merges") {
-      bpeLoopUncached(df, textCol, merges)
+    graft.Memo.contentKey(df) match {
+      case Some(k) => graft.Memo.obj(df.sparkSession,
+        s"bpeLoop|$k|$textCol|$merges")(bpeLoopUncached(df, textCol, merges))
+      case None => bpeLoopUncached(df, textCol, merges)
     }
 
   private def bpeLoopUncached(df: org.apache.spark.sql.DataFrame,

@@ -180,6 +180,42 @@ class ArtifactReadSpec extends SparkSpec {
     assert(serve(once) == serve(twice), s"$name: compacted serve")
   }
 
+  test("a rebuild at a used path drops the old index's tombstones: a deleted id rebuilt in is served") {
+    import spark.implicits._
+    val docs = corpus(40)
+    val x = docs.filter($"doc_id" === 5)
+    val emb = embeddings
+    val v = emb.select(min("vec_id")).head().get(0)
+    /** Build at a fresh path, tombstone, build again at the same path;
+      * the name when `served` does not hold of the rebuilt index. */
+    def hidden(name: String)(build: String => Unit)(delete: String => Unit)(
+        served: String => Boolean): Option[String] = {
+      val p = ScratchDirs.scratch(s"t_rebuild_tomb_$name")
+      Fs.deleteRecursive(spark, p); build(p); delete(p); build(p)
+      if (served(p)) None else Some(name)
+    }
+    val wrong = Seq(
+      hidden("bm25")(Retrieval.writePostingsIndex(docs, "doc_id", "text", _))(
+        Retrieval.tombstonePostingsIndex(x, "doc_id", _))(p =>
+        Retrieval.liveDoclens(spark, p).filter($"doc_id" === 5).count() == 1),
+      hidden("hash")(Dedup.writeHashIndex(docs, "doc_id", "text", _))(
+        Dedup.tombstoneHashIndex(x, "text", _))(p =>
+        Dedup.liveHashIndex(spark, p).filter($"first_id" === 5).count() == 1),
+      // a copy of x under a new id is rejected only while x is live
+      hidden("minhash")(Dedup.writeMinhashIndex(docs, "doc_id", "text", n = 3,
+        numHashes = 16, bands = 4, _))(Dedup.tombstoneMinhashIndex(x, "doc_id", _))(p =>
+        Dedup.ingestAgainstLiveMinhashIndex(x.withColumn("doc_id", $"doc_id" + 1000),
+          "doc_id", "text", p, n = 3, numHashes = 16, bands = 4, minJaccard = 0.5)
+          .count() == 0),
+      hidden("ivf")(p => VectorSearch.writeIvfIndex(Similarity.assignFixed(emb, cents),
+        "cluster", cents.zipWithIndex.map(_.swap), p))(VectorSearch.tombstoneIvfIndex(
+        emb.filter($"vec_id" === v).select("vec_id"), "vec_id", _))(p =>
+        VectorSearch.readLiveIvfAssignments(spark, p)
+          .filter($"neighbor_id" === v).count() == 1)
+    ).flatten
+    assert(wrong.isEmpty, s"rebuilt id still tombstoned: ${wrong.mkString(", ")}")
+  }
+
   test("tombstoning the same ids twice serves and compacts like tombstoning them once") {
     import spark.implicits._
     val docs = corpus(40)

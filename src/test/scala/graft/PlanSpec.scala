@@ -630,6 +630,75 @@ class PlanSpec extends SparkSpec {
     assert(Memo.planKey(s1) != Memo.planKey(s3))
   }
 
+  test("Memo.contentKey: None for checkpointed and RDD-backed leaves, Some for local and scan leaves") {
+    import spark.implicits._
+    val local = Seq((1L, 2L)).toDF("src", "dst")
+    val scan = spark.read.parquet(s"$sf/nation.parquet").filter(col("n_regionkey") === 1)
+    assert(Memo.contentKey(local).isDefined)
+    assert(Memo.contentKey(scan).isDefined)
+    assert(Memo.contentKey(scan.crossJoin(local)).isDefined)
+    assert(Memo.contentKey(local.localCheckpoint()).isEmpty)
+    assert(Memo.contentKey(spark.sparkContext.parallelize(Seq((1L, 2L))).toDF("src", "dst"))
+      .isEmpty)
+    assert(Memo.contentKey(scan.crossJoin(local.localCheckpoint())).isEmpty)
+  }
+
+  /** Two parquet dirs of one (id, text) schema under a fresh scratch
+    * dir: `a` holds `as`' rows, `b` holds `bs`'. */
+  private def twoDirs(name: String, as: Seq[(Long, String)],
+      bs: Seq[(Long, String)]): (String, String) = {
+    import spark.implicits._
+    val dir = ScratchDirs.scratch(name)
+    Fs.deleteRecursive(spark, dir)
+    as.toDF("id", "text").write.parquet(s"$dir/a")
+    bs.toDF("id", "text").write.parquet(s"$dir/b")
+    (s"$dir/a", s"$dir/b")
+  }
+
+  test("Memo.contentKey: two parquet dirs of one schema differ, and one dir after an in-place overwrite") {
+    import spark.implicits._
+    val (a, b) = twoDirs("planspec_content_key", Seq((1L, "x")), Seq((2L, "y")))
+    def key(p: String) = Memo.contentKey(spark.read.parquet(p))
+    val ka = key(a)
+    assert(ka.isDefined && ka == key(a))
+    assert(Memo.planKey(spark.read.parquet(a)) == Memo.planKey(spark.read.parquet(b)))
+    assert(ka != key(b))
+    // a subquery's scan is not a leaf of the plan: its files cannot
+    // enter the key, so a frame with a subquery has none
+    def withMaxOf(p: String) = spark.read.parquet(b)
+      .select(col("id"), spark.read.parquet(p).select(max("id")).scalar().as("m"))
+    assert(Memo.planKey(withMaxOf(a)) == Memo.planKey(withMaxOf(b)))
+    assert(Memo.contentKey(withMaxOf(a)).isEmpty)
+    Seq((3L, "z")).toDF("id", "text").write.mode("overwrite").parquet(a)
+    assert(ka != key(a))
+  }
+
+  test("bpeTrain over two corpus dirs of one schema returns each corpus's own merges") {
+    import spark.implicits._
+    val ra = Seq((1L, "abab abab abcd"), (2L, "abab cdcd"))
+    val rb = Seq((1L, "xyxy xyxy xyzw"), (2L, "zwzw xyxy"))
+    val (a, b) = twoDirs("planspec_bpe_dirs", ra, rb)
+    def merges(df: DataFrame) =
+      graft.text.TextOps.bpeTrain(df, "text", merges = 3).collect().toSeq
+    val (ma, mb) = (merges(spark.read.parquet(a)), merges(spark.read.parquet(b)))
+    assert(ma == merges(ra.toDF("id", "text")))
+    assert(mb == merges(rb.toDF("id", "text")))
+    assert(ma != mb)
+  }
+
+  test("runAvailableNow under one name over two parquet dirs of one schema returns each input's rows") {
+    import spark.implicits._
+    val (a, b) = twoDirs("planspec_stage_dirs", Seq((1L, "x"), (2L, "y")), Seq((3L, "z")))
+    def run(p: String) = graft.streaming.StreamRunner.runAvailableNow(spark,
+      spark.read.parquet(p), "planspec_stage", "append")(identity)
+      .collect().map(_.toString).sorted.toSeq
+    assert(run(a) == Seq("[1,x]", "[2,y]"))
+    assert(run(b) == Seq("[3,z]"))
+    assert(run(a) == Seq("[1,x]", "[2,y]"))
+    Seq((4L, "w")).toDF("id", "text").write.mode("overwrite").parquet(a)
+    assert(run(a) == Seq("[4,w]"))
+  }
+
   test("pitEnrich: the broadcast gate switches the join strategy, results identical") {
     import spark.implicits._
     import graft.streaming.EventStreams
