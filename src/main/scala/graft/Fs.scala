@@ -30,6 +30,14 @@ object Fs {
     fs.exists(p)
   }
 
+  /** `path` qualified against its own filesystem (scheme + authority +
+    * absolute path), so it names the same files from any working
+    * directory and compares equal to the roots Spark's scans carry. */
+  private[graft] def qualify(spark: SparkSession, path: String): String = {
+    val (fs, p) = resolve(spark, path)
+    fs.makeQualified(p).toString
+  }
+
   def deleteRecursive(spark: SparkSession, path: String): Unit = {
     val (fs, p) = resolve(spark, path)
     fs.delete(p, true)

@@ -2,6 +2,8 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute,
   AttributeReference, Cast, Divide, EvalMode, Expression, HllSketchEstimate,
@@ -309,11 +311,13 @@ object MvRewrite extends Rule[LogicalPlan] {
       groupNames.distinct == groupNames
     if (!exact && !rollup) return None
     val spark = SparkSession.getActiveSession.getOrElse(return None)
-    // a fresh tiny analyzed plan for the view's files; resolved here so
-    // failure (vacuumed dirs, schema drift) falls back to the base scan
+    // a fresh tiny analyzed plan for the view's files, its schema read
+    // from their footers on the driver (no inference job inside the
+    // optimizer); resolved here so failure (vacuumed dirs, schema
+    // drift) falls back to the base scan
     val mvRel =
-      try spark.read.parquet(e.mvDirs: _*).queryExecution.analyzed
-      catch { case _: Throwable => return None }
+      try graft.Fs.readParquet(spark, e.mvDirs).queryExecution.analyzed
+      catch { case NonFatal(_) => return None }
     val mvOut = mvRel.output.map(a => a.name -> a).toMap
     def mvCol(name: String): Option[Attribute] = mvOut.get(name)
     def keyFor(a: AttributeReference): Option[NamedExpression] = {

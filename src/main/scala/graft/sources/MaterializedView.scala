@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incrementally-maintained AGGREGATE materialized view over a
@@ -42,6 +42,9 @@ import org.apache.spark.sql.functions._
   * rows only. */
 object MaterializedView {
 
+  import graft.plans.MvRewrite
+  import Sources.ManifestRow
+
   /** Aggregate spec shared by build and refresh: per-key row count
     * plus one sum per `sumCols` entry, aliased `mv_count` /
     * `sum_<col>` (the oracle-name contract). With `withAvg`, a
@@ -59,37 +62,159 @@ object MaterializedView {
       .agg(count(lit(1)).as("mv_count"), (sums ++ cnts): _*)
   }
 
-  private def statePath(mvPath: String) = s"$mvPath/mv_state"
+  /** A view's persisted state: the base-table version it reflects, its
+    * group keys, its measure columns (the sketched column of a distinct
+    * view, the value column of a min/max view), the base row key the
+    * change feed diffs on, the sketch width `lgK` (None in a state
+    * written before r13), and a join-aggregate view's fact join key and
+    * frozen dimension path. Join-aggregate views keep it in
+    * `join_state`, every other view in `mv_state`. */
+  private case class MvState(baseVersion: Int, keyCols: Seq[String],
+      sumCols: Seq[String], rowKey: String, lgK: Option[Int] = None,
+      join: Option[(String, String)] = None)
 
-  private def writeState(spark: SparkSession, mvPath: String,
-      baseVersion: Int, keyCols: Seq[String], sumCols: Seq[String],
-      rowKey: String, lgK: Int = 0): Unit = {
-    import spark.implicits._
-    // lg_k is 0 for non-distinct views; distinct views persist their
-    // sketch width so refresh can never union mismatched lgConfigK
-    // registers (hll_union rejects them) — the build's lgK is part of
-    // the view's identity, not a refresh-time knob
-    Seq((baseVersion, keyCols.mkString(","), sumCols.mkString(","), rowKey,
-        lgK))
-      .toDF("base_version", "key_cols", "sum_cols", "row_key", "lg_k")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(statePath(mvPath))
+  private def stateDir(mvPath: String, joinAgg: Boolean): String =
+    s"$mvPath/${if (joinAgg) "join_state" else "mv_state"}"
+
+  /** The view's state: one footer read on the driver and one row. */
+  private def readState(spark: SparkSession, mvPath: String,
+      joinAgg: Boolean = false): MvState = {
+    val st = graft.Fs.readParquet(spark, stateDir(mvPath, joinAgg)).head
+    def has(c: String) = st.schema.fieldNames.contains(c)
+    def str(c: String) = st.getAs[String](c)
+    MvState(st.getAs[Int]("base_version"), str("key_cols").split(",").toSeq,
+      str("sum_cols").split(",").toSeq.filter(_.nonEmpty), str("row_key"),
+      if (has("lg_k")) Some(st.getAs[Int]("lg_k")) else None,
+      if (has("join_key")) Some((str("join_key"), str("dim_path"))) else None)
   }
 
-  /** Version `v`'s commit-dir set (driver-sized, like every manifest
-    * fetch). */
-  private def commitSet(spark: SparkSession, tablePath: String,
-      v: Int): Set[String] = {
+  private def writeState(spark: SparkSession, mvPath: String,
+      st: MvState): Unit = {
     import spark.implicits._
-    Sources.manifestOf(spark, tablePath)
-      .getOrElse(sys.error(s"no snapshot table at $tablePath"))
-      .filter(col("version") === v)
-      .select("commit").as[String].collect().toSet
+    val (v, k, s, r) = (st.baseVersion, st.keyCols.mkString(","),
+      st.sumCols.mkString(","), st.rowKey)
+    val cols = Seq("base_version", "key_cols", "sum_cols", "row_key")
+    (st.join match {
+      case Some((joinKey, dimPath)) => Seq((v, k, s, r, joinKey, dimPath))
+        .toDF(cols :+ "join_key" :+ "dim_path": _*)
+      // lg_k is 0 for non-distinct views; distinct views persist their
+      // sketch width so refresh can never union mismatched lgConfigK
+      // registers (hll_union rejects them) — the build's lgK is part of
+      // the view's identity, not a refresh-time knob
+      case None => Seq((v, k, s, r, st.lgK.getOrElse(0)))
+        .toDF(cols :+ "lg_k": _*)
+    }).coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(stateDir(mvPath, st.join.isDefined))
   }
 
   /** The base-table version the MV currently reflects. */
   def baseVersion(spark: SparkSession, mvPath: String): Int =
-    spark.read.parquet(statePath(mvPath)).head.getAs[Int]("base_version")
+    readState(spark, mvPath).baseVersion
+
+  /** Full-compute a view with `agg` over the base table's latest
+    * snapshot, publish it as the view's next (overwrite) version and
+    * record `state` at that base version (build = the only full scan
+    * a view ever does). Returns the MV's snapshot version. */
+  private def buildWith(spark: SparkSession, tablePath: String,
+      mvPath: String, state: Int => MvState)(
+      agg: DataFrame => DataFrame): Int = {
+    val rows = Sources.manifestRows(spark, tablePath)
+    val v = Sources.latestOf(rows)
+    require(v > 0, s"no snapshot table at $tablePath")
+    val mvv = Sources.snapshotCommit(
+      agg(Sources.readCommits(spark, tablePath, Sources.commitsAt(rows, v))),
+      mvPath, overwrite = true)
+    writeState(spark, mvPath, state(v))
+    mvv
+  }
+
+  /** One refresh's reads, each made once: the view's state and the
+    * base table's and the view's manifests, from which both latest
+    * versions and every commit set derive. */
+  private class Refresh(spark: SparkSession, tablePath: String,
+      mvPath: String, joinAgg: Boolean = false) {
+    val st = readState(spark, mvPath, joinAgg)
+    private val base = Sources.manifestRows(spark, tablePath)
+    private val view = Sources.manifestRows(spark, mvPath)
+    val toV = Sources.latestOf(base)
+    val mvV = Sources.latestOf(view)
+
+    /** The view's current rows. */
+    def old: DataFrame =
+      Sources.readCommits(spark, mvPath, Sources.commitsAt(view, mvV))
+
+    /** The base table's change feed since the state's version. */
+    def cdf: DataFrame = Sources.changesCdf(spark, tablePath, base,
+      st.rowKey, st.baseVersion, toV)
+
+    /** The base table's change since the state's version, as rows plus
+      * the sign each row carries. APPEND-ONLY fast path: when `toV`'s
+      * commit set carries the state version's whole set (the
+      * streaming-ingest norm — sw37), the change is exactly the NEW
+      * commit dirs' rows, all inserts (no sign), so the refresh reads
+      * |appended rows| and runs NO diff join. Otherwise the CDF, whose
+      * post-images add (+1) and pre-images/deletes subtract (−1). None
+      * when nothing was appended (same content re-published, e.g. a
+      * restore). */
+    def delta: Option[(DataFrame, Option[Column])] = {
+      val from = Sources.commitsAt(base, st.baseVersion).toSet
+      val to = Sources.commitsAt(base, toV).toSet
+      if (!from.subsetOf(to))
+        Some((cdf, Some(when(col("change").isin("insert", "update_postimage"),
+          lit(1L)).otherwise(lit(-1L)))))
+      else Option((to -- from).toSeq.sorted).filter(_.nonEmpty)
+        .map(added => (Sources.readCommits(spark, tablePath, added), None))
+    }
+
+    /** Affected-group re-aggregation: re-aggregate with `agg` exactly
+      * the groups `changes` touched (one semi-join restricts the base
+      * scan to them), and carry every untouched view row over (an
+      * anti-join). */
+    def reaggregate(changes: DataFrame,
+        agg: DataFrame => DataFrame): DataFrame = {
+      val keys = st.keyCols.map(col)
+      val affected = graft.Caches.cached(changes.select(keys: _*).distinct())
+      val now = Sources.readCommits(spark, tablePath,
+        Sources.commitsAt(base, toV))
+      old.join(affected, st.keyCols, "left_anti")
+        .unionByName(agg(now.join(affected, st.keyCols, "left_semi")))
+    }
+
+    /** Commit `rows` as the view's next version against the view
+      * manifest read here (None keeps the current version), then move
+      * `state` to the base's latest version. Returns the view version. */
+    def publish(rows: Option[DataFrame], state: MvState = st): Int = {
+      val v = rows.fold(mvV)(Sources.commitAfter(_, mvPath, overwrite = true,
+        Nil, None, view))
+      writeState(spark, mvPath, state.copy(baseVersion = toV))
+      v
+    }
+  }
+
+  /** Per-key count and sum deltas of changed rows: plain counts and
+    * sums over appended rows, signed sums over change-feed rows. */
+  private def deltaAgg(rows: DataFrame, keyCols: Seq[String],
+      sumCols: Seq[String], sign: Option[Column],
+      more: Seq[Column] = Nil): DataFrame =
+    rows.groupBy(keyCols.map(col): _*)
+      .agg(sign.fold(count(lit(1)))(sum(_)).as("__d_count"),
+        (sumCols.map(c => sign.fold(sum(col(c)))(s => sum(s * col(c)))
+          .as(s"__d_$c")) ++ more): _*)
+
+  /** Merge abelian deltas into the old view with one keyed full-outer
+    * join; keys whose count reaches zero leave the view. */
+  private def mergeAbelian(old: DataFrame, delta: DataFrame,
+      keyCols: Seq[String], sumCols: Seq[String],
+      withAvg: Boolean): DataFrame = {
+    def plus(c: String, d: String) =
+      (coalesce(col(c), lit(0L)) + coalesce(col(d), lit(0L))).as(c)
+    val cnts = if (withAvg) sumCols.map(c => plus(s"cnt_$c", s"__dc_$c"))
+      else Nil
+    old.join(delta, keyCols, "full_outer")
+      .select(keyCols.map(col) ++ Seq(plus("mv_count", "__d_count")) ++
+        sumCols.map(c => plus(s"sum_$c", s"__d_$c")) ++ cnts: _*)
+      .filter(col("mv_count") > 0)
+  }
 
   /** Full-compute the view at the base table's latest version and
     * publish it (build = the only full scan this MV ever does).
@@ -97,80 +222,46 @@ object MaterializedView {
     * on during refresh. Returns the MV's snapshot version. */
   def build(spark: SparkSession, tablePath: String, mvPath: String,
       rowKey: String, keyCols: Seq[String], sumCols: Seq[String],
-      withAvg: Boolean = false): Int = {
-    val v = Sources.snapshotLatestVersion(spark, tablePath)
-    require(v > 0, s"no snapshot table at $tablePath")
-    val mv = aggOf(Sources.snapshotRead(spark, tablePath, v),
-      keyCols, sumCols, withAvg)
-    val mvv = Sources.snapshotCommit(mv, mvPath, overwrite = true)
-    writeState(spark, mvPath, v, keyCols, sumCols, rowKey)
-    mvv
-  }
+      withAvg: Boolean = false): Int =
+    buildWith(spark, tablePath, mvPath, MvState(_, keyCols, sumCols, rowKey))(
+      aggOf(_, keyCols, sumCols, withAvg))
 
   /** Fold the base table's changes since the last build/refresh into
     * the view. No-op (returns the current MV version) when the base
     * hasn't moved. Returns the MV's new snapshot version. */
   def refresh(spark: SparkSession, tablePath: String,
       mvPath: String): Int = {
-    val st = spark.read.parquet(statePath(mvPath)).head
-    val fromV = st.getAs[Int]("base_version")
-    val keyCols = st.getAs[String]("key_cols").split(",").toSeq
-    val sumCols = st.getAs[String]("sum_cols").split(",").toSeq
-      .filter(_.nonEmpty)
-    val rowKey = st.getAs[String]("row_key")
-    val toV = Sources.snapshotLatestVersion(spark, tablePath)
-    val mvV = Sources.snapshotLatestVersion(spark, mvPath)
-    if (toV == fromV) return mvV
-    // APPEND-ONLY fast path: when toV's commit set carries fromV's
-    // whole set (the streaming-ingest norm — sw37), the change feed
-    // is exactly the NEW commit dirs' rows, all inserts, so the
-    // refresh reads |appended rows| and runs NO diff join at all.
-    // Manifest commit sets are version-count-sized driver work.
-    val old = Sources.snapshotRead(spark, mvPath, mvV)
+    val r = new Refresh(spark, tablePath, mvPath)
+    if (r.toV == r.st.baseVersion) return r.mvV
+    val (keyCols, sumCols) = (r.st.keyCols, r.st.sumCols)
+    val old = r.old
     // avg-capable views (build(withAvg = true)) carry per-column
     // non-null counts; detect by presence so plain views are untouched
     val withAvg = sumCols.nonEmpty && old.columns.contains(s"cnt_${sumCols.head}")
-    val fromSet = commitSet(spark, tablePath, fromV)
-    val toSet = commitSet(spark, tablePath, toV)
-    val delta = if (fromSet.subsetOf(toSet)) {
-      val newDirs = (toSet -- fromSet).toSeq.sorted
-        .map(c => Sources.commitDir(tablePath, c))
-      if (newDirs.isEmpty) { // same content re-published (e.g. restore)
-        writeState(spark, mvPath, toV, keyCols, sumCols, rowKey)
-        return mvV
-      }
-      val dSums = sumCols.map(c => sum(col(c)).as(s"__d_$c"))
-      val dCnts = if (withAvg)
-        sumCols.map(c => count(col(c)).as(s"__dc_$c")) else Nil
-      spark.read.parquet(newDirs: _*)
-        .groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__d_count"), (dSums ++ dCnts): _*)
-    } else {
-      val cdf = Sources.snapshotChangesCdf(spark, tablePath, rowKey,
-        fromV, toV)
-      // abelian fold: post-images add, pre-images/deletes subtract
-      val sign = when(col("change").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
-      val dSums = sumCols.map(c => sum(sign * col(c)).as(s"__d_$c"))
-      val dCnts = if (withAvg) sumCols.map(c =>
-        sum(when(col(c).isNotNull, sign).otherwise(lit(0L))).as(s"__dc_$c"))
-        else Nil
-      cdf.groupBy(keyCols.map(col): _*)
-        .agg(sum(sign).as("__d_count"), (dSums ++ dCnts): _*)
+    r.publish(r.delta.map { case (rows, sign) =>
+      val dCnts = if (!withAvg) Nil else sumCols.map(c =>
+        sign.fold(count(col(c)))(s =>
+          sum(when(col(c).isNotNull, s).otherwise(lit(0L)))).as(s"__dc_$c"))
+      mergeAbelian(old, deltaAgg(rows, keyCols, sumCols, sign, dCnts),
+        keyCols, sumCols, withAvg)
+    })
+  }
+
+  /** Register a view for transparent rewrite: `entry` turns the base
+    * version's qualified data dirs, the view's latest ones and the
+    * state into the registry entry. */
+  private def register(spark: SparkSession, tablePath: String,
+      mvPath: String)(
+      entry: (Set[String], Seq[String], MvState) => MvRewrite.Entry): Unit = {
+    val st = readState(spark, mvPath)
+    def dirsOf(path: String, version: Seq[ManifestRow] => Int): Seq[String] = {
+      val rows = Sources.manifestRows(spark, path)
+      Sources.commitsAt(rows, version(rows)).sorted
+        .map(c => graft.Fs.qualify(spark, Sources.commitDir(path, c)))
     }
-    def z(c: org.apache.spark.sql.Column) = coalesce(c, lit(0L))
-    val mergedCnts = if (withAvg) sumCols.map(c =>
-      (z(col(s"cnt_$c")) + z(col(s"__dc_$c"))).as(s"cnt_$c")) else Nil
-    val merged = old.join(delta, keyCols, "full_outer")
-      .select(keyCols.map(col) ++
-        Seq((z(col("mv_count")) + z(col("__d_count"))).as("mv_count")) ++
-        sumCols.map(c =>
-          (z(col(s"sum_$c")) + z(col(s"__d_$c"))).as(s"sum_$c")) ++
-        mergedCnts: _*)
-      .filter(col("mv_count") > 0)
-    val newMvV = Sources.snapshotCommit(merged, mvPath, overwrite = true)
-    writeState(spark, mvPath, toV, keyCols, sumCols, rowKey)
-    newMvV
+    MvRewrite.enable(spark)
+    MvRewrite.register(spark, entry(dirsOf(tablePath, _ => st.baseVersion).toSet,
+      dirsOf(mvPath, Sources.latestOf), st))
   }
 
   /** Register this view for TRANSPARENT aggregate rewrite
@@ -182,21 +273,9 @@ object MaterializedView {
     * own dirs to scan in its place. Re-register after every
     * build/refresh. */
   def registerForRewrite(spark: SparkSession, tablePath: String,
-      mvPath: String): Unit = {
-    val st = spark.read.parquet(statePath(mvPath)).head
-    val baseV = st.getAs[Int]("base_version")
-    val keyCols = st.getAs[String]("key_cols").split(",").toSeq
-    val sumCols = st.getAs[String]("sum_cols").split(",").toSeq
-      .filter(_.nonEmpty)
-    def dirsOf(path: String, v: Int): Seq[String] =
-      commitSet(spark, path, v).toSeq.sorted
-        .map(c => qualify(spark, Sources.commitDir(path, c)))
-    val baseDirs = dirsOf(tablePath, baseV)
-    val mvDirs = dirsOf(mvPath, Sources.snapshotLatestVersion(spark, mvPath))
-    graft.plans.MvRewrite.enable(spark)
-    graft.plans.MvRewrite.register(spark, graft.plans.MvRewrite.Entry(
-      baseDirs.toSet, mvDirs, keyCols, sumCols.toSet))
-  }
+      mvPath: String): Unit =
+    register(spark, tablePath, mvPath)((base, mv, st) =>
+      MvRewrite.Entry(base, mv, st.keyCols, st.sumCols.toSet))
 
   /** Register a [[buildDistinct]] view for TRANSPARENT
     * approx_count_distinct rewrite (io34): queries asking
@@ -208,20 +287,9 @@ object MaterializedView {
     * exact count(DISTINCT) never rewrites. Staleness is structural,
     * as in [[registerForRewrite]]. */
   def registerDistinctForRewrite(spark: SparkSession, tablePath: String,
-      mvPath: String): Unit = {
-    val st = spark.read.parquet(statePath(mvPath)).head
-    val baseV = st.getAs[Int]("base_version")
-    val keyCols = st.getAs[String]("key_cols").split(",").toSeq
-    val distinctCol = st.getAs[String]("sum_cols")
-    def dirsOf(path: String, v: Int): Seq[String] =
-      commitSet(spark, path, v).toSeq.sorted
-        .map(c => qualify(spark, Sources.commitDir(path, c)))
-    val baseDirs = dirsOf(tablePath, baseV)
-    val mvDirs = dirsOf(mvPath, Sources.snapshotLatestVersion(spark, mvPath))
-    graft.plans.MvRewrite.enable(spark)
-    graft.plans.MvRewrite.register(spark, graft.plans.MvRewrite.Entry(
-      baseDirs.toSet, mvDirs, keyCols, Set.empty, Set(distinctCol)))
-  }
+      mvPath: String): Unit =
+    register(spark, tablePath, mvPath)((base, mv, st) =>
+      MvRewrite.Entry(base, mv, st.keyCols, Set.empty, st.sumCols.toSet))
 
   /** Register a [[buildMinMax]] view for TRANSPARENT min/max rewrite
     * (io35): `min(<valCol>)`/`max(<valCol>)` against the base table's
@@ -231,27 +299,10 @@ object MaterializedView {
     * as in every view class. Staleness structural, as in
     * [[registerForRewrite]]. */
   def registerMinMaxForRewrite(spark: SparkSession, tablePath: String,
-      mvPath: String): Unit = {
-    val st = spark.read.parquet(statePath(mvPath)).head
-    val baseV = st.getAs[Int]("base_version")
-    val keyCols = st.getAs[String]("key_cols").split(",").toSeq
-    val valCol = st.getAs[String]("sum_cols")
-    def dirsOf(path: String, v: Int): Seq[String] =
-      commitSet(spark, path, v).toSeq.sorted
-        .map(c => qualify(spark, Sources.commitDir(path, c)))
-    val baseDirs = dirsOf(tablePath, baseV)
-    val mvDirs = dirsOf(mvPath, Sources.snapshotLatestVersion(spark, mvPath))
-    graft.plans.MvRewrite.enable(spark)
-    graft.plans.MvRewrite.register(spark, graft.plans.MvRewrite.Entry(
-      baseDirs.toSet, mvDirs, keyCols, Set.empty,
-      minMaxCols = Set(valCol)))
-  }
-
-  private def qualify(spark: SparkSession, p: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(hp).toString
-  }
+      mvPath: String): Unit =
+    register(spark, tablePath, mvPath)((base, mv, st) =>
+      MvRewrite.Entry(base, mv, st.keyCols, Set.empty,
+        minMaxCols = st.sumCols.toSet))
 
   // ---- non-subtractable aggregates: affected-group re-aggregation --
   //
@@ -268,15 +319,9 @@ object MaterializedView {
   /** Full-compute a min/max-bearing view ((count, min, max) per key —
     * the zone-map-shaped MV) and publish it. */
   def buildMinMax(spark: SparkSession, tablePath: String, mvPath: String,
-      rowKey: String, keyCols: Seq[String], valCol: String): Int = {
-    val v = Sources.snapshotLatestVersion(spark, tablePath)
-    require(v > 0, s"no snapshot table at $tablePath")
-    val mv = minMaxAgg(Sources.snapshotRead(spark, tablePath, v),
-      keyCols, valCol)
-    val mvv = Sources.snapshotCommit(mv, mvPath, overwrite = true)
-    writeState(spark, mvPath, v, keyCols, Seq(valCol), rowKey)
-    mvv
-  }
+      rowKey: String, keyCols: Seq[String], valCol: String): Int =
+    buildWith(spark, tablePath, mvPath,
+      MvState(_, keyCols, Seq(valCol), rowKey))(minMaxAgg(_, keyCols, valCol))
 
   private def minMaxAgg(df: DataFrame, keyCols: Seq[String],
       valCol: String): DataFrame =
@@ -299,32 +344,19 @@ object MaterializedView {
   // from `dimPath`, so a changed dim mis-attributes deltas — document,
   // don't guess.
 
-  private def joinAggState(mvPath: String) = s"$mvPath/join_state"
-
   /** Full-compute `fact ⋈ dim GROUP BY keyCols` (count + sums of fact
     * columns) over the fact table's latest snapshot and publish it.
     * `dim` must carry `joinKey` and `keyCols`; `factPath` rows carry
     * `joinKey`, `rowKey`, and `sumCols`. */
   def buildJoinAgg(spark: SparkSession, factPath: String, dim: DataFrame,
       dimPath: String, mvPath: String, rowKey: String, joinKey: String,
-      keyCols: Seq[String], sumCols: Seq[String]): Int = {
-    val v = Sources.snapshotLatestVersion(spark, factPath)
-    require(v > 0, s"no snapshot table at $factPath")
-    dim.write.mode(SaveMode.Overwrite).parquet(dimPath)
-    val joined = Sources.snapshotRead(spark, factPath, v)
-      .join(org.apache.spark.sql.functions.broadcast(
-        spark.read.parquet(dimPath)), joinKey)
-    val mvv = Sources.snapshotCommit(aggOf(joined, keyCols, sumCols), mvPath,
-      overwrite = true)
-    import spark.implicits._
-    Seq((v, keyCols.mkString(","), sumCols.mkString(","), rowKey, joinKey,
-        dimPath))
-      .toDF("base_version", "key_cols", "sum_cols", "row_key", "join_key",
-        "dim_path")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(joinAggState(mvPath))
-    mvv
-  }
+      keyCols: Seq[String], sumCols: Seq[String]): Int =
+    buildWith(spark, factPath, mvPath, MvState(_, keyCols, sumCols, rowKey,
+      join = Some((joinKey, dimPath)))) { fact =>
+      dim.write.mode(SaveMode.Overwrite).parquet(dimPath)
+      aggOf(fact.join(broadcast(graft.Fs.readParquet(spark, dimPath)), joinKey),
+        keyCols, sumCols)
+    }
 
   /** Fold fact-side changes into a [[buildJoinAgg]] view: the signed
     * CDF delta (append-only fast path: just the new dirs) re-joins the
@@ -332,65 +364,14 @@ object MaterializedView {
     * |changes| ⋈ broadcast(dim) + |view|, never ∝ |fact|. */
   def refreshJoinAgg(spark: SparkSession, factPath: String,
       mvPath: String): Int = {
-    val st = spark.read.parquet(joinAggState(mvPath)).head
-    val fromV = st.getAs[Int]("base_version")
-    val keyCols = st.getAs[String]("key_cols").split(",").toSeq
-    val sumCols = st.getAs[String]("sum_cols").split(",").toSeq
-      .filter(_.nonEmpty)
-    val rowKey = st.getAs[String]("row_key")
-    val joinKey = st.getAs[String]("join_key")
-    val dim = org.apache.spark.sql.functions.broadcast(
-      spark.read.parquet(st.getAs[String]("dim_path")))
-    val toV = Sources.snapshotLatestVersion(spark, factPath)
-    val mvV = Sources.snapshotLatestVersion(spark, mvPath)
-    if (toV == fromV) return mvV
-    val fromSet = commitSet(spark, factPath, fromV)
-    val toSet = commitSet(spark, factPath, toV)
-    val delta = if (fromSet.subsetOf(toSet)) {
-      val newDirs = (toSet -- fromSet).toSeq.sorted
-        .map(c => Sources.commitDir(factPath, c))
-      if (newDirs.isEmpty) {
-        writeJoinAggVersion(spark, mvPath, toV)
-        return mvV
-      }
-      spark.read.parquet(newDirs: _*).join(dim, joinKey)
-        .groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__d_count"),
-          sumCols.map(c => sum(col(c)).as(s"__d_$c")): _*)
-    } else {
-      val cdf = Sources.snapshotChangesCdf(spark, factPath, rowKey,
-        fromV, toV)
-      val sign = when(col("change").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
-      cdf.join(dim, joinKey)
-        .groupBy(keyCols.map(col): _*)
-        .agg(sum(sign).as("__d_count"),
-          sumCols.map(c => sum(sign * col(c)).as(s"__d_$c")): _*)
-    }
-    val old = Sources.snapshotRead(spark, mvPath, mvV)
-    def z(c: org.apache.spark.sql.Column) = coalesce(c, lit(0L))
-    val merged = old.join(delta, keyCols, "full_outer")
-      .select(keyCols.map(col) ++
-        Seq((z(col("mv_count")) + z(col("__d_count"))).as("mv_count")) ++
-        sumCols.map(c =>
-          (z(col(s"sum_$c")) + z(col(s"__d_$c"))).as(s"sum_$c")): _*)
-      .filter(col("mv_count") > 0)
-    val newMvV = Sources.snapshotCommit(merged, mvPath, overwrite = true)
-    writeJoinAggVersion(spark, mvPath, toV)
-    newMvV
-  }
-
-  private def writeJoinAggVersion(spark: SparkSession, mvPath: String,
-      v: Int): Unit = {
-    val st = spark.read.parquet(joinAggState(mvPath)).head
-    import spark.implicits._
-    Seq((v, st.getAs[String]("key_cols"), st.getAs[String]("sum_cols"),
-        st.getAs[String]("row_key"), st.getAs[String]("join_key"),
-        st.getAs[String]("dim_path")))
-      .toDF("base_version", "key_cols", "sum_cols", "row_key", "join_key",
-        "dim_path")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(joinAggState(mvPath))
+    val r = new Refresh(spark, factPath, mvPath, joinAgg = true)
+    if (r.toV == r.st.baseVersion) return r.mvV
+    val (joinKey, dimPath) = r.st.join.get
+    val dim = broadcast(graft.Fs.readParquet(spark, dimPath))
+    r.publish(r.delta.map { case (rows, sign) =>
+      mergeAbelian(r.old, deltaAgg(rows.join(dim, joinKey), r.st.keyCols,
+        r.st.sumCols, sign), r.st.keyCols, r.st.sumCols, withAvg = false)
+    })
   }
 
   // ---- approximate distinct counts: union-closed sketches ----------
@@ -409,15 +390,10 @@ object MaterializedView {
     * standard error, exact below ~2^12 distinct values. */
   def buildDistinct(spark: SparkSession, tablePath: String, mvPath: String,
       rowKey: String, keyCols: Seq[String], distinctCol: String,
-      lgK: Int = 12): Int = {
-    val v = Sources.snapshotLatestVersion(spark, tablePath)
-    require(v > 0, s"no snapshot table at $tablePath")
-    val mv = distinctAgg(Sources.snapshotRead(spark, tablePath, v),
-      keyCols, distinctCol, lgK)
-    val mvv = Sources.snapshotCommit(mv, mvPath, overwrite = true)
-    writeState(spark, mvPath, v, keyCols, Seq(distinctCol), rowKey, lgK)
-    mvv
-  }
+      lgK: Int = 12): Int =
+    buildWith(spark, tablePath, mvPath,
+      MvState(_, keyCols, Seq(distinctCol), rowKey, Some(lgK)))(
+      distinctAgg(_, keyCols, distinctCol, lgK))
 
   private def distinctAgg(df: DataFrame, keyCols: Seq[String],
       distinctCol: String, lgK: Int): DataFrame =
@@ -437,14 +413,10 @@ object MaterializedView {
     * (re-aggregation path). */
   def refreshDistinct(spark: SparkSession, tablePath: String,
       mvPath: String): Int = {
-    val st = spark.read.parquet(statePath(mvPath)).head
-    val fromV = st.getAs[Int]("base_version")
-    val keyCols = st.getAs[String]("key_cols").split(",").toSeq
-    val distinctCol = st.getAs[String]("sum_cols")
-    val rowKey = st.getAs[String]("row_key")
-    val toV = Sources.snapshotLatestVersion(spark, tablePath)
-    val mvV = Sources.snapshotLatestVersion(spark, mvPath)
-    if (toV == fromV) return mvV
+    val r = new Refresh(spark, tablePath, mvPath)
+    if (r.toV == r.st.baseVersion) return r.mvV
+    val keyCols = r.st.keyCols
+    val distinctCol = r.st.sumCols.head
     val hllCol = s"hll_$distinctCol"
     // state files written before r13 carry no lg_k column. 12 was
     // only the DEFAULT then — buildDistinct always took a
@@ -456,58 +428,35 @@ object MaterializedView {
     // its preamble, so any one stored blob is authoritative. Only an
     // EMPTY legacy view (no groups → no blob to inspect) falls back
     // to the old default, with a logged statement of the assumption.
-    val lgK =
-      if (st.schema.fieldNames.contains("lg_k")) st.getAs[Int]("lg_k")
+    val lgK = r.st.lgK.getOrElse {
+      val blob = r.old.select(hllCol).filter(col(hllCol).isNotNull)
+        .limit(1).collect()
+      if (blob.nonEmpty)
+        org.apache.datasketches.hll.HllSketch
+          .heapify(blob(0).getAs[Array[Byte]](0)).getLgConfigK
       else {
-        val blob = Sources.snapshotRead(spark, mvPath, mvV)
-          .select(hllCol).filter(col(hllCol).isNotNull).limit(1).collect()
-        if (blob.nonEmpty)
-          org.apache.datasketches.hll.HllSketch
-            .heapify(blob(0).getAs[Array[Byte]](0)).getLgConfigK
-        else {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"pre-r13 MV state at $mvPath has no lg_k and no stored " +
-              "sketch to read the width from (empty view); assuming " +
-              "the legacy default lgK=12")
-          12
-        }
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"pre-r13 MV state at $mvPath has no lg_k and no stored " +
+            "sketch to read the width from (empty view); assuming " +
+            "the legacy default lgK=12")
+        12
       }
-    val fromSet = commitSet(spark, tablePath, fromV)
-    val toSet = commitSet(spark, tablePath, toV)
-    val merged = if (fromSet.subsetOf(toSet)) {
-      val newDirs = (toSet -- fromSet).toSeq.sorted
-        .map(c => Sources.commitDir(tablePath, c))
-      if (newDirs.isEmpty) {
-        writeState(spark, mvPath, toV, keyCols, Seq(distinctCol), rowKey, lgK)
-        return mvV
-      }
-      val delta = spark.read.parquet(newDirs: _*)
-        .groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__d_count"),
-          hll_sketch_agg(col(distinctCol), lit(lgK)).as("__d_hll"))
-      val old = Sources.snapshotRead(spark, mvPath, mvV)
-      old.join(delta, keyCols, "full_outer")
-        .select(keyCols.map(col) ++ Seq(
-          (coalesce(col("mv_count"), lit(0L)) +
-            coalesce(col("__d_count"), lit(0L))).as("mv_count"),
-          when(col("__d_hll").isNull, col(hllCol))
-            .when(col(hllCol).isNull, col("__d_hll"))
-            .otherwise(hll_union(col(hllCol), col("__d_hll"))).as(hllCol)): _*)
-    } else {
-      val cdf = Sources.snapshotChangesCdf(spark, tablePath, rowKey,
-        fromV, toV)
-      val affected = graft.Caches.cached(
-        cdf.select(keyCols.map(col): _*).distinct())
-      val recomputed = distinctAgg(
-        Sources.snapshotRead(spark, tablePath, toV)
-          .join(affected, keyCols, "left_semi"), keyCols, distinctCol, lgK)
-      Sources.snapshotRead(spark, mvPath, mvV)
-        .join(affected, keyCols, "left_anti")
-        .unionByName(recomputed)
     }
-    val newMvV = Sources.snapshotCommit(merged, mvPath, overwrite = true)
-    writeState(spark, mvPath, toV, keyCols, Seq(distinctCol), rowKey, lgK)
-    newMvV
+    r.publish(r.delta.map {
+      case (appended, None) =>
+        val delta = appended.groupBy(keyCols.map(col): _*)
+          .agg(count(lit(1)).as("__d_count"),
+            hll_sketch_agg(col(distinctCol), lit(lgK)).as("__d_hll"))
+        r.old.join(delta, keyCols, "full_outer")
+          .select(keyCols.map(col) ++ Seq(
+            (coalesce(col("mv_count"), lit(0L)) +
+              coalesce(col("__d_count"), lit(0L))).as("mv_count"),
+            when(col("__d_hll").isNull, col(hllCol))
+              .when(col(hllCol).isNull, col("__d_hll"))
+              .otherwise(hll_union(col(hllCol), col("__d_hll"))).as(hllCol)): _*)
+      case (cdf, Some(_)) =>
+        r.reaggregate(cdf, distinctAgg(_, keyCols, distinctCol, lgK))
+    }, r.st.copy(lgK = Some(lgK)))
   }
 
   /** Refresh a [[buildMinMax]] view: re-aggregate ONLY the groups the
@@ -516,26 +465,9 @@ object MaterializedView {
     * no row for them). */
   def refreshMinMax(spark: SparkSession, tablePath: String,
       mvPath: String): Int = {
-    val st = spark.read.parquet(statePath(mvPath)).head
-    val fromV = st.getAs[Int]("base_version")
-    val keyCols = st.getAs[String]("key_cols").split(",").toSeq
-    val valCol = st.getAs[String]("sum_cols")
-    val rowKey = st.getAs[String]("row_key")
-    val toV = Sources.snapshotLatestVersion(spark, tablePath)
-    val mvV = Sources.snapshotLatestVersion(spark, mvPath)
-    if (toV == fromV) return mvV
-    val cdf = Sources.snapshotChangesCdf(spark, tablePath, rowKey,
-      fromV, toV)
-    val affected = graft.Caches.cached(
-      cdf.select(keyCols.map(col): _*).distinct())
-    val recomputed = minMaxAgg(
-      Sources.snapshotRead(spark, tablePath, toV)
-        .join(affected, keyCols, "left_semi"), keyCols, valCol)
-    val carried = Sources.snapshotRead(spark, mvPath, mvV)
-      .join(affected, keyCols, "left_anti")
-    val newMvV = Sources.snapshotCommit(
-      carried.unionByName(recomputed), mvPath, overwrite = true)
-    writeState(spark, mvPath, toV, keyCols, Seq(valCol), rowKey)
-    newMvV
+    val r = new Refresh(spark, tablePath, mvPath)
+    if (r.toV == r.st.baseVersion) return r.mvV
+    r.publish(Some(r.reaggregate(r.cdf,
+      minMaxAgg(_, r.st.keyCols, r.st.sumCols.head))))
   }
 }

@@ -266,34 +266,56 @@ object Sources {
   // version-count-sized parquet and the snapshot read is an ordinary
   // multi-dir parquet scan with all pushdown intact.
 
-  private[sources] def manifestOf(spark: SparkSession, path: String): Option[DataFrame] = {
+  /** One manifest row: `version` sees commit entry `commit`. `app` and
+    * `batch` are the txn marker of the commit that wrote the entry
+    * (None on carried-over rows and on pre-txn manifests). */
+  private[sources] case class ManifestRow(version: Int, commit: String,
+      app: Option[String], batch: Option[Long])
+
+  /** The manifest's rows in scan order, fetched once per call —
+    * version-count-sized driver work. The latest version, a version's
+    * commit set and the txn markers all derive from these rows, so an
+    * operation needing several of them scans the manifest once. Empty
+    * when the table doesn't exist yet. */
+  private[sources] def manifestRows(spark: SparkSession,
+      path: String): Seq[ManifestRow] = {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
     val p = s"$path/manifest"
+    if (!graft.Fs.exists(spark, p)) return Nil
     // mergeSchema: a manifest appended to across engine upgrades mixes
     // the pre-txn 2-column footers with the 4-column (app, batch) ones;
-    // footer-sampling a random file would resolve columns by luck
-    if (graft.Fs.exists(spark, p))
-      Some(graft.Fs.readParquet(spark, Seq(p), mergeSchema = true))
-    else None
+    // footer-sampling a random file would resolve columns by luck. A
+    // pure pre-txn manifest has no (app, batch) footer anywhere: those
+    // columns null-fill, so it simply carries no markers
+    val m = graft.Fs.readParquet(spark, Seq(p), mergeSchema = true)
+    def orNull(c: String, t: String) =
+      (if (m.columns.contains(c)) col(c) else lit(null).cast(t)).as(c)
+    m.select(col("version"), col("commit"), orNull("app", "string"),
+      orNull("batch", "long")).as[ManifestRow].collect().toSeq
   }
 
-  /** The manifest's (version, commit) rows in scan order, fetched once
-    * per call — version-count-sized driver work. The latest version
-    * and a version's commit set both derive from these rows, so an
-    * operation needing both scans the manifest once. Empty when the
-    * table doesn't exist yet. */
-  private def manifestRows(spark: SparkSession,
-      path: String): Seq[(Int, String)] = {
-    import spark.implicits._
-    manifestOf(spark, path)
-      .map(_.select("version", "commit").as[(Int, String)].collect().toSeq)
-      .getOrElse(Nil)
+  private[sources] def latestOf(rows: Seq[ManifestRow]): Int =
+    rows.map(_.version).maxOption.getOrElse(0)
+
+  private[sources] def commitsAt(rows: Seq[ManifestRow], v: Int): Seq[String] =
+    rows.collect { case r if r.version == v => r.commit }
+
+  /** Version `v`'s commit entries, failing loudly on a missing table or
+    * an unknown (or vacuumed) version. */
+  private def liveCommits(rows: Seq[ManifestRow], path: String,
+      v: Int): Seq[String] = {
+    if (rows.isEmpty) sys.error(s"no snapshot table at $path")
+    val commits = commitsAt(rows, v)
+    require(commits.nonEmpty, s"unknown snapshot version $v at $path")
+    commits
   }
 
-  private def latestOf(rows: Seq[(Int, String)]): Int =
-    rows.map(_._1).maxOption.getOrElse(0)
-
-  private def commitsAt(rows: Seq[(Int, String)], v: Int): Seq[String] =
-    rows.collect { case (`v`, c) => c }
+  /** Whether a manifest row already carries `txn`'s (appId, batchId). */
+  private def committed(rows: Seq[ManifestRow],
+      txn: Option[(String, Long)]): Boolean = txn.exists { case (app, batch) =>
+    rows.exists(r => r.app.contains(app) && r.batch.contains(batch))
+  }
 
   /** Latest committed version (0 when the table doesn't exist yet). */
   def snapshotLatestVersion(spark: SparkSession, path: String): Int =
@@ -323,12 +345,13 @@ object Sources {
     * (the pre-CAS layout) and v-named files read together under one
     * mergeSchema scan — existing tables upgrade in place. */
   private val commitMonitor = new Object
-  private def casManifest(rows: DataFrame, path: String, v: Int): Boolean = {
-    val spark = rows.sparkSession
+  private def casManifest(spark: SparkSession, rows: Seq[ManifestRow],
+      path: String, v: Int): Boolean = {
+    import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = s"$path/.tmp-manifest-" +
       java.util.UUID.randomUUID().toString.take(8)
-    rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    rows.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
     val fs = tmpPath.getFileSystem(conf)
     try {
@@ -401,67 +424,38 @@ object Sources {
       overwrite: Boolean = false, statsCols: Seq[String] = Nil,
       txn: Option[(String, Long)] = None): Int = {
     val spark = df.sparkSession
-    if (alreadyCommitted(spark, path, txn))
-      return snapshotLatestVersion(spark, path)
-    commitAfter(df, path, overwrite, statsCols, txn,
-      manifestRows(spark, path))
-  }
-
-  // guard on column presence: a table whose manifest predates the
-  // txn columns entirely (all 2-column footers) simply has no
-  // markers — the idempotence check degrades to "not committed"
-  private def alreadyCommitted(spark: SparkSession, path: String,
-      txn: Option[(String, Long)]): Boolean = txn.exists { case (app, batch) =>
-    import org.apache.spark.sql.functions.col
-    manifestOf(spark, path).exists(m =>
-      m.columns.contains("app") && m.columns.contains("batch") &&
-        m.filter(col("app") === app && col("batch") === batch)
-          .limit(1).count() > 0)
+    val rows = manifestRows(spark, path)
+    // a table whose manifest predates the txn columns entirely simply
+    // has no markers: the idempotence check degrades to "not committed"
+    if (committed(rows, txn)) latestOf(rows)
+    else commitAfter(df, path, overwrite, statsCols, txn, rows)
   }
 
   /** [[snapshotCommit]] after the idempotence check: `seen` is the
     * manifest as the caller last read it, so the first attempt
     * targets the version after `seen` without another manifest scan
-    * (a caller that derived `df` from `seen` — merge, optimize —
-    * thereby commits against exactly the state it read). A lost race
-    * re-reads the manifest: that re-read is the concurrency protocol. */
-  private def commitAfter(df: DataFrame, path: String, overwrite: Boolean,
-      statsCols: Seq[String], txn: Option[(String, Long)],
-      seen: Seq[(Int, String)]): Int = {
-    import org.apache.spark.sql.functions.col
+    * (a caller that derived `df` from `seen` — merge, optimize,
+    * restore, a view refresh — thereby commits against exactly the
+    * state it read). A lost race re-reads the manifest: that re-read
+    * is the concurrency protocol. */
+  private[sources] def commitAfter(df: DataFrame, path: String,
+      overwrite: Boolean, statsCols: Seq[String], txn: Option[(String, Long)],
+      seen: Seq[ManifestRow]): Int = {
     val spark = df.sparkSession
-    import spark.implicits._
     var rows = seen
     var v = latestOf(rows) + 1
     val dirName = newCommitDirName(v)
     df.write.mode(SaveMode.Overwrite).parquet(s"$path/data/$dirName")
-    if (statsCols.nonEmpty) {
-      // zone-map stats describe the FILES, so they are computed from
-      // the written dir (one column-pruned scan), not from `df` — a
-      // nondeterministic input can't desynchronize stats from data
-      val written = graft.Fs.readParquet(spark, s"$path/data/$dirName")
-      val aggs = statsCols.flatMap(c => Seq(
-        org.apache.spark.sql.functions.min(col(c).cast("double")).as(s"__mn_$c"),
-        org.apache.spark.sql.functions.max(col(c).cast("double")).as(s"__mx_$c")))
-      val row = written.agg(aggs.head, aggs.tail: _*).head
-      statsCols.zipWithIndex.map { case (c, i) =>
-        (dirName, c,
-          if (row.isNullAt(2 * i)) None else Some(row.getDouble(2 * i)),
-          if (row.isNullAt(2 * i + 1)) None else Some(row.getDouble(2 * i + 1)))
-      }.toDF("commit", "column", "smin", "smax")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/stats")
-    }
+    writeStats(spark, path, Seq(dirName), statsCols)
     var attempt = 0
     while (true) {
       val prior: Seq[String] =
         if (overwrite || v == 1) Seq.empty else commitsAt(rows, v - 1)
       // carried-over rows get no txn marker: the marker belongs to the
       // commit it deduplicates, and it stays on that commit's own rows
-      val entries = prior.map(c => (v, c, None: Option[String],
-          None: Option[Long])) :+
-        (v, dirName, txn.map(_._1), txn.map(_._2))
-      if (casManifest(entries.toDF("version", "commit", "app", "batch"),
-          path, v)) return v
+      val entries = prior.map(ManifestRow(v, _, None, None)) :+
+        ManifestRow(v, dirName, txn.map(_._1), txn.map(_._2))
+      if (casManifest(spark, entries, path, v)) return v
       // lost the race: version v belongs to another committer
       require(!overwrite,
         s"concurrent commit conflict: version $v of $path was published " +
@@ -470,17 +464,39 @@ object Sources {
       attempt += 1
       require(attempt <= 1000,
         s"gave up after $attempt commit conflicts on $path")
-      if (alreadyCommitted(spark, path, txn)) {
+      rows = manifestRows(spark, path)
+      if (committed(rows, txn)) {
         // a twin writer replaying the same (appId, batchId) won — this
         // attempt's data dir is now an orphan; reclaim it eagerly
         graft.Fs.deleteRecursive(spark, s"$path/data/$dirName")
-        return snapshotLatestVersion(spark, path)
+        return latestOf(rows)
       }
-      rows = manifestRows(spark, path)
       v = latestOf(rows) + 1
     }
     -1 // unreachable
   }
+
+  /** Append zone-map stats rows (commit, column, smin, smax) for the
+    * given written commit entries. Stats describe the FILES, so they
+    * are computed from each written dir (one column-pruned scan), not
+    * from the committed frame — a nondeterministic input can't
+    * desynchronize stats from data. */
+  private def writeStats(spark: SparkSession, path: String,
+      commits: Seq[String], statsCols: Seq[String]): Unit =
+    if (statsCols.nonEmpty) {
+      import org.apache.spark.sql.functions.{col, max, min}
+      import spark.implicits._
+      val aggs = statsCols.flatMap(c =>
+        Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+      commits.flatMap { c =>
+        val row = graft.Fs.readParquet(spark, commitDir(path, c))
+          .agg(aggs.head, aggs.tail: _*).head
+        def at(i: Int) = if (row.isNullAt(i)) None else Some(row.getDouble(i))
+        statsCols.zipWithIndex.map { case (s, i) =>
+          (c, s, at(2 * i), at(2 * i + 1)) }
+      }.toDF("commit", "column", "smin", "smax")
+        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/stats")
+    }
 
   /** OPTIMIZE the current snapshot (io17) — Delta OPTIMIZE / Iceberg
     * rewrite_data_files at the commit grain: rewrite the LATEST
@@ -520,11 +536,13 @@ object Sources {
     * set with full pushdown; manifest work is version-count-sized.
     * Returns the new version. */
   def snapshotRestore(spark: SparkSession, path: String, v: Int): Int = {
-    val latest = snapshotLatestVersion(spark, path)
+    val rows = manifestRows(spark, path)
+    val latest = latestOf(rows)
     require(v >= 1 && v <= latest, s"version $v not in [1, $latest]")
-    // pin rows before committing back under the table root being read
-    val cur = snapshotRead(spark, path, v).localCheckpoint()
-    snapshotCommit(cur, path, overwrite = true)
+    // no pin: the commit writes a fresh, uniquely named commit dir, so
+    // it never overwrites the files this plan scans
+    commitAfter(readCommits(spark, path, liveCommits(rows, path, v)), path,
+      overwrite = true, Nil, None, rows)
   }
 
   /** Declare a CHECK constraint on a snapshot table (io22 — Delta's
@@ -638,9 +656,9 @@ object Sources {
   def snapshotOptimizeClustered(spark: SparkSession, path: String,
       clusterCol: String, bounds: Seq[Double],
       statsCols: Seq[String]): Int = {
-    import org.apache.spark.sql.functions.{col, lit, when}
-    import spark.implicits._
-    val latest = snapshotLatestVersion(spark, path)
+    import org.apache.spark.sql.functions.{col, when}
+    val rows = manifestRows(spark, path)
+    val latest = latestOf(rows)
     require(latest > 0, s"no snapshot table at $path")
     require(bounds.nonEmpty && bounds == bounds.sorted,
       "bounds must be non-empty and ascending")
@@ -649,38 +667,22 @@ object Sources {
       .reduce[org.apache.spark.sql.Column](_ + _).cast("int")
     val v = latest + 1
     val dirName = newCommitDirName(v)
-    // pin rows before writing back under the table root being read
-    val cur = snapshotRead(spark, path, latest).localCheckpoint()
-    cur.withColumn("__cluster", shard)
+    // no pin: the rewrite lands in a fresh, uniquely named commit dir,
+    // so it never overwrites the files this plan scans
+    readCommits(spark, path, commitsAt(rows, latest))
+      .withColumn("__cluster", shard)
       .repartition(col("__cluster"))
       .sortWithinPartitions(col("__cluster"), col(clusterCol))
       .write.mode(SaveMode.Overwrite).partitionBy("__cluster")
       .parquet(s"$path/data/$dirName")
-    val dirs = graft.Fs.listDirNames(spark, s"$path/data/$dirName")
-      .filter(_.startsWith("__cluster=")).sorted
-    require(dirs.nonEmpty, "optimize of an empty table")
-    if (statsCols.nonEmpty) {
-      val rows = dirs.flatMap { d =>
-        val written = graft.Fs.readParquet(spark, s"$path/data/$dirName/$d")
-        val aggs = statsCols.flatMap(c => Seq(
-          org.apache.spark.sql.functions.min(col(c).cast("double")).as(s"__mn_$c"),
-          org.apache.spark.sql.functions.max(col(c).cast("double")).as(s"__mx_$c")))
-        val row = written.agg(aggs.head, aggs.tail: _*).head
-        statsCols.zipWithIndex.map { case (c, i) =>
-          (s"$dirName/$d", c,
-            if (row.isNullAt(2 * i)) None else Some(row.getDouble(2 * i)),
-            if (row.isNullAt(2 * i + 1)) None else Some(row.getDouble(2 * i + 1)))
-        }
-      }
-      rows.toDF("commit", "column", "smin", "smax")
-        .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/stats")
-    }
+    val commits = graft.Fs.listDirNames(spark, s"$path/data/$dirName")
+      .filter(_.startsWith("__cluster=")).sorted.map(d => s"$dirName/$d")
+    require(commits.nonEmpty, "optimize of an empty table")
+    writeStats(spark, path, commits, statsCols)
     // an OVERWRITE-style commit: losing the CAS means the live set
     // changed under the rewrite — fail loudly, same as snapshotCommit
-    require(casManifest(
-      dirs.map(d => (v, s"$dirName/$d", None: Option[String],
-          None: Option[Long]))
-        .toDF("version", "commit", "app", "batch"), path, v),
+    require(casManifest(spark, commits.map(ManifestRow(v, _, None, None)),
+      path, v),
       s"concurrent commit conflict: version $v of $path was published " +
         "by another writer during the clustered optimize; re-run it " +
         "against the new table state")
@@ -710,10 +712,7 @@ object Sources {
   def snapshotReadPruned(spark: SparkSession, path: String, asOf: Int,
       column: String, lo: Double, hi: Double): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.col
-    val rows = manifestRows(spark, path)
-    if (rows.isEmpty) sys.error(s"no snapshot table at $path")
-    val commits = commitsAt(rows, asOf)
-    require(commits.nonEmpty, s"unknown snapshot version $asOf at $path")
+    val commits = liveCommits(manifestRows(spark, path), path, asOf)
     val ranges: Map[String, (Option[Double], Option[Double])] =
       statsOf(spark, path).map(_.filter(col("column") === column)
         .select("commit", "smin", "smax")
@@ -739,15 +738,6 @@ object Sources {
     (df, kept.size, commits.size)
   }
 
-  /** Read the table AS OF `version`: union exactly the commit dirs
-    * that version's manifest lists. The commit list is a
-    * version-sized driver fetch (the broadcast-threshold pattern);
-    * the read is a plain parquet scan — pushdown/pruning intact.
-    * `mergeSchema = true` unions EVOLVED commit schemas (io20 — the
-    * Delta schema-evolution read: a column added by a later commit
-    * null-fills in earlier commits' rows and vice versa) at the cost
-    * of a footer read per commit dir; the default single-footer
-    * inference is right for tables whose commits share a schema. */
   /** Resolve a manifest commit entry to its data dir: locally-owned
     * commits live under this table's `data/`; `ref:`-prefixed entries
     * (written by [[snapshotClone]]) reference ANOTHER table's commit
@@ -758,17 +748,22 @@ object Sources {
   /** A commit entry this table physically owns (vs a clone borrow). */
   private def isOwnedCommit(c: String): Boolean = !c.startsWith("ref:")
 
+  /** Read the table AS OF `version`: union exactly the commit dirs
+    * that version's manifest lists. The commit list is a
+    * version-sized driver fetch (the broadcast-threshold pattern);
+    * the read is a plain parquet scan — pushdown/pruning intact.
+    * `mergeSchema = true` unions EVOLVED commit schemas (io20 — the
+    * Delta schema-evolution read: a column added by a later commit
+    * null-fills in earlier commits' rows and vice versa) at the cost
+    * of a footer read per commit dir; the default single-footer
+    * inference is right for tables whose commits share a schema. */
   def snapshotRead(spark: SparkSession, path: String,
-      version: Int, mergeSchema: Boolean = false): DataFrame = {
-    val rows = manifestRows(spark, path)
-    if (rows.isEmpty) sys.error(s"no snapshot table at $path")
-    val commits = commitsAt(rows, version)
-    require(commits.nonEmpty, s"unknown snapshot version $version at $path")
-    readCommits(spark, path, commits, mergeSchema)
-  }
+      version: Int, mergeSchema: Boolean = false): DataFrame =
+    readCommits(spark, path, liveCommits(manifestRows(spark, path), path,
+      version), mergeSchema)
 
   /** One scan over the given commit entries' data dirs. */
-  private def readCommits(spark: SparkSession, path: String,
+  private[sources] def readCommits(spark: SparkSession, path: String,
       commits: Seq[String], mergeSchema: Boolean = false): DataFrame =
     graft.Fs.readParquet(spark, commits.map(c => commitDir(path, c)),
       mergeSchema)
@@ -788,28 +783,20 @@ object Sources {
     * escape hatch. */
   def snapshotClone(spark: SparkSession, srcPath: String,
       dstPath: String): Int = {
-    import spark.implicits._
     val rows = manifestRows(spark, srcPath)
     val v = latestOf(rows)
     require(v > 0, s"no snapshot table at $srcPath")
     require(snapshotLatestVersion(spark, dstPath) == 0,
       s"$dstPath is already a snapshot table")
-    val commits = commitsAt(rows, v)
     // ref: entries must be CWD-independent: a relative srcPath would
     // bake the current working directory into the clone's manifest and
-    // break its reads from any other session. Qualify against the
-    // source's own filesystem (scheme + authority + absolute path).
-    val srcQualified = {
-      val p = new org.apache.hadoop.fs.Path(srcPath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .makeQualified(p).toString
-    }
+    // break its reads from any other session
+    val srcQualified = graft.Fs.qualify(spark, srcPath)
     // clone-of-clone: an already-borrowed entry stays as written
-    require(casManifest(
-      commits.map { c =>
-        (1, if (isOwnedCommit(c)) s"ref:$srcQualified/data/$c" else c,
-          None: Option[String], None: Option[Long])
-      }.toDF("version", "commit", "app", "batch"), dstPath, 1),
+    require(casManifest(spark, commitsAt(rows, v).map { c =>
+        ManifestRow(1, if (isOwnedCommit(c)) s"ref:$srcQualified/data/$c" else c,
+          None, None)
+      }, dstPath, 1),
       s"concurrent clone conflict: $dstPath version 1 was published " +
         "by another writer")
     1
@@ -833,33 +820,22 @@ object Sources {
     * dirs — orphans not counted). */
   def snapshotVacuum(spark: SparkSession, path: String,
       keepFrom: Int, orphanGraceMs: Long = 86400000L): (Int, Int) = {
-    import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
-    val m = manifestOf(spark, path)
-      .getOrElse(sys.error(s"no snapshot table at $path"))
-    // column-presence guard (the snapshotCommit rule): a pure pre-txn
-    // 2-column manifest has no (app, batch) footer anywhere — null-fill
-    // so vacuum upgrades the layout instead of throwing on the select
-    val rows = m
-      .withColumn("app", if (m.columns.contains("app")) col("app")
-        else lit(null).cast("string"))
-      .withColumn("batch", if (m.columns.contains("batch")) col("batch")
-        else lit(null).cast("long"))
-      .select("version", "commit", "app", "batch")
-      .as[(Int, String, Option[String], Option[Long])].collect()
-    require(rows.exists(_._1 >= keepFrom),
+    val rows = manifestRows(spark, path)
+    if (rows.isEmpty) sys.error(s"no snapshot table at $path")
+    require(rows.exists(_.version >= keepFrom),
       s"vacuum would drop every version of $path (keepFrom=$keepFrom)")
-    val keep = rows.filter(_._1 >= keepFrom)
-    val keepSet = keep.map(_._2).toSet
-    val drop = rows.map(_._2).toSet -- keepSet
+    val keep = rows.filter(_.version >= keepFrom)
+    val keepSet = keep.map(_.commit).toSet
+    val drop = rows.map(_.commit).toSet -- keepSet
     // borrowed (ref:) entries leave the manifest but their dirs belong
     // to the clone SOURCE — never physically delete another table's data
     drop.filter(isOwnedCommit)
       .foreach(c => graft.Fs.deleteRecursive(spark, s"$path/data/$c"))
     // txn markers (app, batch) survive the rewrite: the idempotence
-    // window is exactly the vacuum retention window
-    keep.toSeq.toDF("version", "commit", "app", "batch")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/manifest")
+    // window is exactly the vacuum retention window, and a pre-txn
+    // manifest comes out in the 4-column layout
+    keep.toDF().coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/manifest")
     // zone-map stats rows of deleted dirs go with them, so a later
     // pruned read never consults stats for a commit that no longer
     // exists (pin the surviving rows before overwriting the dir)
@@ -878,7 +854,7 @@ object Sources {
       val dataPath = new org.apache.hadoop.fs.Path(s"$path/data")
       val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(dataPath)) {
-        val referenced = rows.map(_._2).filter(isOwnedCommit)
+        val referenced = rows.map(_.commit).filter(isOwnedCommit)
           .map(_.split('/').head).toSet
         val cutoff = System.currentTimeMillis() - orphanGraceMs
         fs.listStatus(dataPath)
@@ -909,15 +885,9 @@ object Sources {
     * are keyed); a multiset diff would need row-count pairing. */
   def snapshotChanges(spark: SparkSession, path: String, keyCol: String,
       fromVersion: Int, toVersion: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, struct, when}
-    val from = snapshotRead(spark, path, fromVersion)
-    val to = snapshotRead(spark, path, toVersion)
-    val valCols = to.columns.filter(_ != keyCol).toIndexedSeq
-    require(from.columns.sorted.sameElements(to.columns.sorted),
-      s"snapshot schemas diverge between v$fromVersion and v$toVersion")
-    def pack(df: DataFrame, side: String) = df.select(col(keyCol),
-      struct(valCols.map(col): _*).as(s"__$side"))
-    val joined = pack(from, "f").join(pack(to, "t"), Seq(keyCol), "full_outer")
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val (joined, valCols) = diffJoin(spark, path, manifestRows(spark, path),
+      keyCol, fromVersion, toVersion)
     joined
       .withColumn("change",
         when(col("__f").isNull, lit("insert"))
@@ -927,6 +897,25 @@ object Sources {
       .select(Seq(col("change"), col(keyCol)) ++ valCols.map(c =>
         when(col("change") === "delete", col(s"__f.$c"))
           .otherwise(col(s"__t.$c")).as(c)): _*)
+  }
+
+  /** The keyed diff both change feeds classify: ONE full outer join on
+    * `keyCol` of the two versions' scans, each side's non-key values
+    * packed into one struct (`__f` from, `__t` to; null where the key
+    * is absent on that side). `rows` is the manifest as read once by
+    * the caller. Returns the join and the non-key column names. */
+  private def diffJoin(spark: SparkSession, path: String,
+      rows: Seq[ManifestRow], keyCol: String, fromVersion: Int,
+      toVersion: Int): (DataFrame, Seq[String]) = {
+    import org.apache.spark.sql.functions.{col, struct}
+    val from = readCommits(spark, path, liveCommits(rows, path, fromVersion))
+    val to = readCommits(spark, path, liveCommits(rows, path, toVersion))
+    val valCols = to.columns.filter(_ != keyCol).toIndexedSeq
+    require(from.columns.sorted.sameElements(to.columns.sorted),
+      s"snapshot schemas diverge between v$fromVersion and v$toVersion")
+    def pack(df: DataFrame, side: String) = df.select(col(keyCol),
+      struct(valCols.map(col): _*).as(s"__$side"))
+    (pack(from, "f").join(pack(to, "t"), Seq(keyCol), "full_outer"), valCols)
   }
 
   /** Delta-CDF-style change feed (io25) — [[snapshotChanges]] with
@@ -940,18 +929,18 @@ object Sources {
     * never a log replay — with the image split done by a bounded
     * explode (≤2 rows per changed key) in the same scan stage. */
   def snapshotChangesCdf(spark: SparkSession, path: String,
-      keyCol: String, fromVersion: Int, toVersion: Int): DataFrame = {
+      keyCol: String, fromVersion: Int, toVersion: Int): DataFrame =
+    changesCdf(spark, path, manifestRows(spark, path), keyCol, fromVersion,
+      toVersion)
+
+  /** [[snapshotChangesCdf]] over a manifest the caller already read. */
+  private[sources] def changesCdf(spark: SparkSession, path: String,
+      rows: Seq[ManifestRow], keyCol: String, fromVersion: Int,
+      toVersion: Int): DataFrame = {
     import org.apache.spark.sql.functions.{array, col, explode, lit,
       struct, when}
-    val from = snapshotRead(spark, path, fromVersion)
-    val to = snapshotRead(spark, path, toVersion)
-    val valCols = to.columns.filter(_ != keyCol).toIndexedSeq
-    require(from.columns.sorted.sameElements(to.columns.sorted),
-      s"snapshot schemas diverge between v$fromVersion and v$toVersion")
-    def pack(df: DataFrame, side: String) = df.select(col(keyCol),
-      struct(valCols.map(col): _*).as(s"__$side"))
-    val joined = pack(from, "f").join(pack(to, "t"), Seq(keyCol),
-      "full_outer")
+    val (joined, valCols) = diffJoin(spark, path, rows, keyCol, fromVersion,
+      toVersion)
     joined
       .select(col(keyCol), explode(
         when(col("__f").isNull,

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,26 +16,6 @@ class ArtifactReadSpec extends SparkSpec {
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
-
-  /** Spark jobs started by `body` on this thread (counted by job group). */
-  private def jobsIn(body: => Unit): Int = {
-    val group = s"artifact-read-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "artifact read job count")
-      try body finally spark.sparkContext.clearJobGroup()
-      // the listener bus is asynchronous: wait until the count settles
-      var last = -1
-      while (last != jobs.get) { last = jobs.get; Thread.sleep(500) }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
 
   private def corpus(n: Int) = spark.range(n).selectExpr("id AS doc_id",
     "concat('w', id, 'a w', id, 'b w', id, 'c shared term', id % 7, " +

@@ -1387,4 +1387,53 @@ class SourcesSpec extends SparkSpec {
     assert(scansOf(q4).forall(_.contains("mvfr_base")))
     MvRewrite.clear(spark)
   }
+
+  test("MV query rewrite: optimizing a rewritten query launches no Spark job") {
+    import spark.implicits._
+    import graft.sources.{MaterializedView, Sources}
+    import graft.plans.MvRewrite
+    val t = s"$tmp/mvjobs_base"
+    val mv = s"$tmp/mvjobs_view"
+    Sources.snapshotCommit(
+      Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
+        .toDF("id", "g", "x"), t)
+    MaterializedView.build(spark, t, mv, rowKey = "id",
+      keyCols = Seq("g"), sumCols = Seq("x"))
+    MaterializedView.registerForRewrite(spark, t, mv)
+    val q = Sources.snapshotRead(spark, t, 1).groupBy("g")
+      .agg(count(lit(1)).as("n"), sum("x").as("sum_x"))
+    // the rule resolves the view's schema from its footers on the driver
+    assert(jobsIn(q.queryExecution.optimizedPlan) == 0)
+    val scans = q.queryExecution.optimizedPlan.collect {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+          fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) =>
+        fs.location.rootPaths.map(_.toString)
+    }.flatten
+    assert(scans.nonEmpty && scans.forall(_.contains("mvjobs_view")))
+    assert(q.orderBy("g").as[(String, Long, Long)].collect().toSeq ==
+      Seq(("a", 2L, 30L), ("b", 1L, 30L)))
+    MvRewrite.clear(spark)
+  }
+
+  test("snapshot-table job counts: view refresh reads each manifest and the state once; a txn commit scans the manifest once") {
+    import spark.implicits._
+    import graft.sources.{MaterializedView, Sources}
+    val t = s"$tmp/jobs_base"
+    val mv = s"$tmp/jobs_view"
+    def rows(r: (Long, String, Long)*) = r.toDF("id", "g", "x")
+    Sources.snapshotCommit(rows((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L)), t)
+    MaterializedView.build(spark, t, mv, rowKey = "id",
+      keyCols = Seq("g"), sumCols = Seq("x"))
+    Sources.snapshotCommit(rows((4L, "b", 5L), (5L, "c", 7L)), t)
+    val append = jobsIn(MaterializedView.refresh(spark, t, mv))
+    Sources.snapshotCommit(rows((1L, "a", 100L), (2L, "a", 20L),
+      (3L, "b", 30L), (4L, "b", 5L), (6L, "d", 1L)), t, overwrite = true)
+    val diff = jobsIn(MaterializedView.refresh(spark, t, mv))
+    val txn = jobsIn(Sources.snapshotCommit(rows((7L, "e", 9L)), t,
+      txn = Some(("app", 1L))))
+    assert((append, diff, txn) == ((8, 10, 3)))
+    assert(Sources.snapshotRead(spark, mv, Sources.snapshotLatestVersion(spark, mv))
+      .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap ==
+      Map("a" -> ((2L, 120L)), "b" -> ((2L, 35L)), "d" -> ((1L, 1L))))
+  }
 }
