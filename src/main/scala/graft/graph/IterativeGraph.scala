@@ -1,7 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.GraftExpressionBridge.localCheckpointPartitioned
+import org.apache.spark.sql.GraftExpressionBridge.{Planned, checkpoint, plan}
 import org.apache.spark.sql.functions._
 
 /** Deterministic fixed-iteration graph algorithms as pure DataFrame
@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * to Catalyst and their tol-based stopping makes outputs
   * platform-sensitive. A FIXED iteration count over DataFrame joins is
   * (a) bit-deterministic → DuckDB-oracle-checkable, and (b) fully
-  * visible to Catalyst/AQE — each superstep is a keyed equi-join +
-  * aggregate that inherits skew handling and broadcast decisions.
-  * `localCheckpoint` per superstep cuts the exponential lineage.
+  * visible to Catalyst — each superstep is a keyed equi-join +
+  * aggregate. A local checkpoint per superstep cuts the exponential
+  * lineage.
   *
   * SUPERSTEP SHAPE. Every vertex-state loop here — PageRank (plain and
   * weighted), BFS/SSSP, landmark distances, personalized PageRank,
@@ -31,14 +31,19 @@ import org.apache.spark.sql.functions._
   * co-partitioned sides — no exchange, no broadcast of the edge side).
   * The messages and every vertex's own state row meet in ONE aggregate
   * after ONE exchange (`repartition(n, id)`), so no superstep joins
-  * back to the vertex set, and one checkpoint keeps that partitioning
-  * (`localCheckpointPartitioned`; plain `localCheckpoint` forgets it
-  * under AQE). Under AQE every exchange and every broadcast is its own
-  * job, and on small stages the per-job overhead, not compute, is the
-  * superstep's cost — so the job count per superstep is the figure
-  * this shape minimizes. An explicit `repartition(n, key)` is never
-  * coalesced by AQE, which is what keeps the two sides' partitionings
-  * equal from superstep to superstep.
+  * back to the vertex set, and one checkpoint keeps that partitioning.
+  *
+  * EXECUTION. The data a superstep moves is small, so its cost is the
+  * driver's: analyzing, optimizing and planning the step's frames, and
+  * scheduling jobs. Each loop therefore plans its step ONCE, without
+  * adaptive execution (`GraftExpressionBridge.plan`), and runs every
+  * later superstep by swapping the new state's blocks into that plan;
+  * only the first superstep, which reads the un-checkpointed `init`,
+  * is planned on its own. Each superstep is ONE Spark job — its
+  * exchange is a stage of the job that materializes the checkpoint —
+  * where adaptive execution ran every exchange as a job of its own.
+  * The converged min-label halt counts its changed rows in that same
+  * job. The walks run their whole hop chain as one such job.
   *
   * Off the driver, because their shapes differ: HITS (two normalized
   * half-steps per superstep), k-core peeling and large-star/small-star
@@ -135,23 +140,26 @@ object IterativeGraph {
   /** The superstep driver: `iters` checkpointed rounds of `step` from
     * `init` over the src-partitioned artifact `e`. `init` is repartitioned
     * by id; each new state is checkpointed keeping that partitioning.
-    * With `changed`, the loop also ends after a superstep whose new
-    * state has no `changed` row. Holds nothing outside its locals, so
-    * two loops can run at once (g34/g35 overlap theirs). Returns the
-    * last state. */
+    * With `changed`, the name of a boolean state column, the loop also
+    * ends after a superstep whose new state has no row where it is
+    * true. Holds nothing outside its locals, so two loops can run at
+    * once (g34/g35 overlap theirs). Returns the last state. */
   private def superstep(init: DataFrame, e: DataFrame, iters: Int,
-      step: Step, changed: Option[Column] = None): DataFrame =
+      step: Step, changed: Option[String] = None): DataFrame =
     supersteps(init, e, iters, step, changed).reduceLeft((_, s) => s)
 
   /** [[superstep]]'s states as they are computed: the state before the
     * first superstep, then the state after each one. Each superstep
     * runs when its state is asked for, and the iterator holds only the
     * latest, so a caller that keeps one state at a time lets the
-    * earlier checkpoints be reclaimed. */
+    * earlier checkpoints be reclaimed (the planned step holds none).
+    * The first superstep is planned on its own; the second plans the
+    * step over its checkpoint, and every later one runs that plan. */
   private def supersteps(init: DataFrame, e: DataFrame, iters: Int,
-      step: Step, changed: Option[Column] = None): Iterator[DataFrame] =
+      step: Step, changed: Option[String] = None): Iterator[DataFrame] =
     new Iterator[DataFrame] {
       private var state: DataFrame = null
+      private var planned: Planned = null
       private var done = 0
       private var moving = true
       def hasNext: Boolean = state == null || (moving && done < iters)
@@ -159,9 +167,14 @@ object IterativeGraph {
         state =
           if (state == null) init.repartition(parts(e.sparkSession), col("id"))
           else {
-            val s = localCheckpointPartitioned(step(e, state))
+            val (s, n) =
+              if (done == 0) checkpoint(step(e, state), changed)
+              else {
+                if (planned == null) planned = plan(step(e, _), state)
+                planned.run(state, changed)
+              }
             done += 1
-            moving = changed.forall(c => s.filter(c).limit(1).count() > 0)
+            moving = changed.isEmpty || n > 0
             s
           }
         state
@@ -406,9 +419,11 @@ object IterativeGraph {
     // arbitrary buffers) would otherwise externally sort every message
     // WITH its register payload; the raised threshold (256k × 641 B ≈
     // 168 MB/task at lgK = 10) is arithmetic, not hope, because the
-    // buffers are fixed-size. Restored after the loop.
+    // buffers are fixed-size. Restored after the loop: to its explicit
+    // value, or unset (`getOption` would report the default, and
+    // restoring that would leave it set).
     val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val prevFallback = spark.conf.getOption(fallbackKey)
+    val prevFallback = spark.conf.getAll.get(fallbackKey)
     try {
       spark.conf.set(fallbackKey, (256 * 1024).toString)
       supersteps(
@@ -536,13 +551,13 @@ object IterativeGraph {
     * when the near-dup graph's cluster diameter isn't known a priori —
     * a chain of near-dups longer than a fixed `iters` would otherwise
     * stay split across several survivors. The change flag `chg` comes
-    * out of the superstep's own aggregate and rides its checkpoint, so
-    * detection costs one `limit(1)`-early-exit scan of the
-    * just-materialized blocks. Output: (id, label). */
+    * out of the superstep's own aggregate, and the job that
+    * materializes the checkpoint counts its true rows, so detection
+    * costs no job of its own. Output: (id, label). */
   def minLabelComponents(vertices: DataFrame, edges: DataFrame, iters: Int): DataFrame =
     superstep(vertices.select(col("id"), col("id").as("label")),
       undirected(edges), if (iters < 0) 64 else iters, minLabelStep,
-      changed = if (iters < 0) Some(col("chg")) else None)
+      changed = if (iters < 0) Some("chg") else None)
       .select("id", "label")
 
   /** The min-label superstep of [[minLabelComponents]]. */
@@ -737,8 +752,10 @@ object IterativeGraph {
     * |starts|-sized frontier against it (the frontier's exchange by its
     * current node is the superstep's only data movement) — the
     * frontier never grows, and the edge list never re-materializes
-    * (the g21 lesson). Starts with no edges emit nothing (a walk needs
-    * a first hop).
+    * (the g21 lesson). The hop chain is planned once and runs as ONE
+    * Spark job, each hop's exchange a stage of it, and the call returns
+    * that job's checkpoint. Starts with no edges emit nothing (a walk
+    * needs a first hop).
     * Output: (walk_id, seq) — seq the space-joined node-id path of
     * `steps`+1 nodes. */
   def walkCorpus(edges: DataFrame, starts: DataFrame, steps: Int,
@@ -750,7 +767,7 @@ object IterativeGraph {
       state = withNeighbours(state, adj)
         .withColumn("__next", uniformPick(salt, i))
         .select(col("walk_id"), col("__next").as("cur"), extendSeq)
-    state.select("walk_id", "seq")
+    checkpoint(state.select("walk_id", "seq"))._1
   }
 
   /** Every vertex's neighbours in the symmetrized graph as one
@@ -819,9 +836,17 @@ object IterativeGraph {
     * and the first rank past u·total. The distance-1 test is a hash
     * intersection of the two lists, walked in step with the fold —
     * linear in deg(cur) + deg(prev), with no window and no
-    * per-candidate row. */
+    * per-candidate row. Like walkCorpus, the hop chain runs as one job
+    * and the call returns its checkpoint. */
   def node2vecWalks(edges: DataFrame, starts: DataFrame, steps: Int,
-      returnWeight: Double, outWeight: Double, salt: String): DataFrame = {
+      returnWeight: Double, outWeight: Double, salt: String): DataFrame =
+    checkpoint(node2vecChain(edges, starts, steps, returnWeight, outWeight,
+      salt))._1
+
+  /** The hop chain [[node2vecWalks]] runs, as one frame. */
+  private[graft] def node2vecChain(edges: DataFrame, starts: DataFrame,
+      steps: Int, returnWeight: Double, outWeight: Double,
+      salt: String): DataFrame = {
     require(steps > 0, "steps must be positive")
     require(returnWeight > 0 && outWeight > 0, "weights must be positive")
     val adj = adjacencyLists(edges)

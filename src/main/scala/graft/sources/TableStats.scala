@@ -77,7 +77,7 @@ object TableStats {
   }
 
   def stats(spark: SparkSession, statsPath: String): DataFrame =
-    spark.read.parquet(statsPath)
+    graft.Fs.readParquet(spark, statsPath)
 
   /** The table version the artifact reflects. */
   def statsVersion(spark: SparkSession, statsPath: String): Int =

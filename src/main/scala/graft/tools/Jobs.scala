@@ -12,7 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * the optimization rounds commit where an explain dump says nothing
   * (VERDICT r15 item 4) — and how many generated classes Janino
   * compiled for it and in how many milliseconds (0 when every class
-  * came from the JVM's compiled-class cache). */
+  * came from the JVM's compiled-class cache). Read `stages=` beside
+  * `jobs=`: a job of an adaptive plan runs one stage, but a superstep
+  * or walk job (`GraftExpressionBridge.checkpoint`) runs every
+  * exchange of its plan as a stage of the one job, so a job count
+  * alone no longer tracks the shuffles. */
 object Jobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

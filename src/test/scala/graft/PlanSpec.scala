@@ -760,40 +760,39 @@ class PlanSpec extends SparkSpec {
     assert(spark.catalog.tableExists("graft_planspec_part"))
   }
 
-  /** Shuffle and broadcast exchanges of the final (post-AQE) plan,
-    * query stages included. The cached plans under an
-    * InMemoryTableScan are not its children, so an artifact's own
-    * build exchange is not counted. */
-  private def exchangesOf(df: DataFrame): (Int, Int) = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+  /** Shuffle and broadcast exchanges of a plan the superstep driver
+    * runs as it is (no adaptive wrapper, no query stages). */
+  private def exchangesIn(plan: org.apache.spark.sql.execution.SparkPlan): (Int, Int) = {
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-    df.collect()
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case other => other.children.flatMap(nodes)
-    })
-    val all = nodes(df.queryExecution.executedPlan)
-    (all.count(_.isInstanceOf[ShuffleExchangeLike]),
-      all.count(_.isInstanceOf[BroadcastExchangeLike]))
+    (plan.collect { case s: ShuffleExchangeLike => s }.size,
+      plan.collect { case b: BroadcastExchangeLike => b }.size)
   }
 
   /** A checkpointed, id-partitioned superstep state over the
     * customer-part graph's vertices, as the superstep driver keeps it. */
   private def superstepState(g: graft.graph.PropertyGraph,
       cols: org.apache.spark.sql.Column*): DataFrame =
-    org.apache.spark.sql.GraftExpressionBridge.localCheckpointPartitioned(
+    org.apache.spark.sql.GraftExpressionBridge.checkpoint(
       g.vertices.select(col("id") +: cols: _*)
-        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("id")))
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("id")))._1
+
+  /** The plan the superstep driver runs for `step` over `state` from
+    * its second superstep on, when the first has materialized the graph
+    * artifact `e` (a cached plan reports its partitioning once it has
+    * run). */
+  private def stepPlan(e: DataFrame, step: DataFrame => DataFrame,
+      state: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
+    e.count()
+    org.apache.spark.sql.GraftExpressionBridge.plan(step, state).executedPlan
+  }
 
   test("a PageRank superstep plans one exchange and no broadcast: the state join is narrow") {
     import graft.graph.{IterativeGraph, PropertyGraph}
     val g = PropertyGraph.customerPartGraph(spark, sf)
-    val step = IterativeGraph.pageRankStep(col("rank") / col("outdeg"), 0.15)(
-      IterativeGraph.pageRankEdges(g.edges), superstepState(g, lit(1.0).as("rank")))
-    assert(exchangesOf(step) == ((1, 0)),
-      s"expected only the message exchange:\n${step.queryExecution.executedPlan}")
+    val e = IterativeGraph.pageRankEdges(g.edges)
+    val step = stepPlan(e, IterativeGraph.pageRankStep(col("rank") / col("outdeg"), 0.15)(
+      e, _), superstepState(g, lit(1.0).as("rank")))
+    assert(exchangesIn(step) == ((1, 0)), s"expected only the message exchange:\n$step")
   }
 
   test("min-label and keyed landmark supersteps plan one exchange and no broadcast") {
@@ -801,15 +800,15 @@ class PlanSpec extends SparkSpec {
     val g = PropertyGraph.customerPartGraph(spark, sf)
     val e = IterativeGraph.undirected(g.edges)
     val steps = Seq(
-      "min-label" -> IterativeGraph.minLabelStep(e,
-        superstepState(g, col("id").as("label"))),
+      "min-label" -> stepPlan(e, IterativeGraph.minLabelStep(e, _),
+        superstepState(g, col("id").as("label"), lit(false).as("chg"))),
       // a key column and an active frontier: still the one exchange
-      "landmarks" -> IterativeGraph.relaxStep(Seq("landmark"))(e,
+      "landmarks" -> stepPlan(e, IterativeGraph.relaxStep(Seq("landmark"))(e, _),
         superstepState(g, (col("id") % 3).as("landmark"), lit(0L).as("dist"),
           (col("id") % 2 === 0).as("improved"))))
     steps.foreach { case (name, step) =>
-      assert(exchangesOf(step) == ((1, 0)),
-        s"$name: expected only the message exchange:\n${step.queryExecution.executedPlan}")
+      assert(exchangesIn(step) == ((1, 0)),
+        s"$name: expected only the message exchange:\n$step")
     }
   }
 
@@ -817,11 +816,14 @@ class PlanSpec extends SparkSpec {
     import graft.graph.{IterativeGraph, PropertyGraph}
     val g = PropertyGraph.customerPartGraph(spark, sf)
     val starts = g.vertices.filter(col("id") % 50 === 7).select("id")
-    val walks = IterativeGraph.node2vecWalks(g.edges, starts, steps = 3,
+    // a first walk materializes the adjacency artifact, as in a warm run
+    IterativeGraph.node2vecWalks(g.edges, starts, steps = 1,
       returnWeight = 0.5, outWeight = 0.25, salt = "walk")
-    val (shuffles, broadcasts) = exchangesOf(walks)
-    val plan = walks.queryExecution.executedPlan.toString
-    assert(shuffles == 3 && broadcasts == 0 && !plan.contains("Window"),
+    val plan = org.apache.spark.sql.GraftExpressionBridge.executedPlan(
+      IterativeGraph.node2vecChain(g.edges, starts, steps = 3,
+        returnWeight = 0.5, outWeight = 0.25, salt = "walk"))
+    val (shuffles, broadcasts) = exchangesIn(plan)
+    assert(shuffles == 3 && broadcasts == 0 && !plan.toString.contains("Window"),
       s"expected one frontier exchange per hop:\n$plan")
   }
 }

@@ -1036,6 +1036,20 @@ class SourcesSpec extends SparkSpec {
     MvRewrite.clear(spark)
   }
 
+  test("TableStats reads its artifact without a schema-inference job") {
+    import spark.implicits._
+    import graft.sources.{Sources, TableStats}
+    val t = s"$tmp/stats_jobs_base"
+    val sp = s"$tmp/stats_jobs_art"
+    Sources.snapshotCommit(Seq((1L, "a"), (2L, "b")).toDF("id", "g"), t)
+    assert(TableStats.analyze(spark, t, sp, Seq("g")) == 1)
+    assert(jobsIn(TableStats.stats(spark, sp)) == 0)
+    // the same aggregate over a plain read pays Spark's inference job too
+    val plain = jobsIn(spark.read.parquet(sp).select(max(col("version"))).head)
+    val n = jobsIn(TableStats.statsVersion(spark, sp))
+    assert(n > 0 && n < plain, s"statsVersion ran $n jobs, a plain read $plain")
+  }
+
   test("TableStats: one-pass ANALYZE records exact counts; broadcastIfSmall picks the join strategy from the artifact") {
     import spark.implicits._
     import graft.sources.{Sources, TableStats}

@@ -395,6 +395,28 @@ class SuperstepSpec extends SparkSpec {
     })
   }
 
+  test("a loop leaves every session conf as it found it; two loops under par2 return what each returns alone") {
+    val vs = (1L to 9L).toDF("id")
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (5L, 6L), (6L, 7L),
+      (8L, 8L)).toDF("src", "dst")
+    val starts = Seq(1L, 5L, 6L).toDF("id")
+    val before = spark.conf.getAll
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    def pr = ranks(IterativeGraph.pageRankFixed(vs, es, iters = 4))
+    def cc = rows(IterativeGraph.minLabelComponents(vs, es, iters = -1))
+    def n2v = rows(IterativeGraph.node2vecWalks(es, starts, 3, 0.5, 0.25, "s"))
+    def hb = rows(IterativeGraph.hyperBallSketches(es, iters = 2)
+      .select(col("id"), hex(col("sk"))))
+    val (pr1, cc1, n2v1, hb1) = (pr, cc, n2v, hb)
+    assert(spark.conf.getAll == before)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
+    val (pr2, cc2) = Par.par2("superstep-spec-a")(() => pr, () => cc)
+    val (hb2, n2v2) = Par.par2("superstep-spec-b")(() => hb, () => n2v)
+    assert(close(pr1, pr2) && cc1 == cc2 && n2v1 == n2v2 && hb1 == hb2)
+    assert(spark.conf.getAll == before)
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
+  }
+
   /** Spark jobs of a query's second run at sf0.01 — the first builds
     * the graph and the superstep artifacts. */
   private def warmJobs(name: String): Int = {
@@ -421,14 +443,24 @@ class SuperstepSpec extends SparkSpec {
     jobs.get
   }
 
-  test("g10 at sf0.01 runs at most 13 Spark jobs once its artifacts are built") {
+  test("g10 at sf0.01 runs at most 6 Spark jobs once its artifacts are built") {
     val n = warmJobs("g10_pagerank_fixed")
-    assert(n > 0 && n <= 13, s"g10 ran $n jobs")
+    assert(n > 0 && n <= 6, s"g10 ran $n jobs")
   }
 
-  test("g11 at sf0.01 runs at most 18 Spark jobs once its artifacts are built") {
+  test("g11 at sf0.01 runs at most 8 Spark jobs once its artifacts are built") {
     val n = warmJobs("g11_minlabel_components")
-    assert(n > 0 && n <= 18, s"g11 ran $n jobs")
+    assert(n > 0 && n <= 8, s"g11 ran $n jobs")
+  }
+
+  test("g33 at sf0.01 runs at most 5 Spark jobs once its artifacts are built") {
+    val n = warmJobs("g33_sssp_weighted")
+    assert(n > 0 && n <= 5, s"g33 ran $n jobs")
+  }
+
+  test("g28 at sf0.01 runs at most 4 Spark jobs once its artifacts are built") {
+    val n = warmJobs("g28_node2vec_walks")
+    assert(n > 0 && n <= 4, s"g28 ran $n jobs")
   }
 
   test("g18 at sf0.01 runs at most 11 Spark jobs once its artifacts are built") {
