@@ -39,9 +39,12 @@ import org.apache.spark.sql.functions._
   * adaptive execution (`GraftExpressionBridge.plan`), and runs every
   * later superstep by swapping the new state's blocks into that plan;
   * only the first superstep, which reads the un-checkpointed `init`,
-  * is planned on its own. Each superstep is ONE Spark job — its
-  * exchange is a stage of the job that materializes the checkpoint —
-  * where adaptive execution ran every exchange as a job of its own.
+  * is planned on its own. A graph artifact that has not run yet is
+  * built before any plan over it is made, so the plan sees its
+  * partitioning and does not shuffle it again. Each superstep is ONE
+  * Spark job — its exchange is a stage of the job that materializes
+  * the checkpoint — where adaptive execution ran every exchange as a
+  * job of its own.
   * The converged min-label halt counts its changed rows in that same
   * job. The walks run their whole hop chain as one such job.
   *
@@ -759,6 +762,12 @@ object IterativeGraph {
     * Output: (walk_id, seq) — seq the space-joined node-id path of
     * `steps`+1 nodes. */
   def walkCorpus(edges: DataFrame, starts: DataFrame, steps: Int,
+      salt: String): DataFrame =
+    checkpoint(walks(edges, starts, steps, salt))._1
+
+  /** [[walkCorpus]]'s hop chain as one lazy frame, which
+    * [[writeWalkCorpus]] writes as it runs. */
+  private def walks(edges: DataFrame, starts: DataFrame, steps: Int,
       salt: String): DataFrame = {
     require(steps > 0, "steps must be positive")
     val adj = adjacencyLists(edges)
@@ -767,7 +776,7 @@ object IterativeGraph {
       state = withNeighbours(state, adj)
         .withColumn("__next", uniformPick(salt, i))
         .select(col("walk_id"), col("__next").as("cur"), extendSeq)
-    checkpoint(state.select("walk_id", "seq"))._1
+    state.select("walk_id", "seq")
   }
 
   /** Every vertex's neighbours in the symmetrized graph as one
@@ -839,14 +848,7 @@ object IterativeGraph {
     * per-candidate row. Like walkCorpus, the hop chain runs as one job
     * and the call returns its checkpoint. */
   def node2vecWalks(edges: DataFrame, starts: DataFrame, steps: Int,
-      returnWeight: Double, outWeight: Double, salt: String): DataFrame =
-    checkpoint(node2vecChain(edges, starts, steps, returnWeight, outWeight,
-      salt))._1
-
-  /** The hop chain [[node2vecWalks]] runs, as one frame. */
-  private[graft] def node2vecChain(edges: DataFrame, starts: DataFrame,
-      steps: Int, returnWeight: Double, outWeight: Double,
-      salt: String): DataFrame = {
+      returnWeight: Double, outWeight: Double, salt: String): DataFrame = {
     require(steps > 0, "steps must be positive")
     require(returnWeight > 0 && outWeight > 0, "weights must be positive")
     val adj = adjacencyLists(edges)
@@ -857,7 +859,7 @@ object IterativeGraph {
         col("__next").as("cur"), extendSeq)
     for (i <- 2 to steps)
       state = node2vecHop(state, adj, i, returnWeight, outWeight, salt)
-    state.select("walk_id", "seq")
+    checkpoint(state.select("walk_id", "seq"))._1
   }
 
   /** One biased node2vec hop (step `i` ≥ 2) of a (walk_id, prev, pnb,
@@ -1063,7 +1065,7 @@ object IterativeGraph {
   def writeWalkCorpus(edges: DataFrame, starts: DataFrame, steps: Int,
       salt: String, path: String): Unit = {
     val s = edges.sparkSession
-    walkCorpus(edges, starts, steps, salt)
+    walks(edges, starts, steps, salt)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/walks")
     import s.implicits._

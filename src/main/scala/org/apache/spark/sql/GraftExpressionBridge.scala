@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, RDDScanExec,
   SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery
 import org.apache.spark.sql.types.DataType
 
@@ -49,12 +50,6 @@ object GraftExpressionBridge {
   def checkpoint(df: DataFrame, count: Option[String] = None): (DataFrame, Long) = {
     val (session, optimized) = optimizedOf(df)
     Planned.execute(session, planned(session, optimized), optimized.stats, count)
-  }
-
-  /** The physical plan [[checkpoint]] runs for `df`. */
-  def executedPlan(df: DataFrame): SparkPlan = {
-    val (session, optimized) = optimizedOf(df)
-    planned(session, optimized)
   }
 
   /** `step` over the checkpoint `state` (a frame [[checkpoint]] or
@@ -175,11 +170,23 @@ object GraftExpressionBridge {
     (ds.sparkSession, ds.queryExecution.optimizedPlan)
   }
 
+  /** The non-adaptive physical plan of `optimized`. Every cached
+    * frame it scans that has not run yet is built first: a cached
+    * plan reports its partitioning only once it has run, so a plan
+    * made over an unbuilt graph artifact would shuffle the whole
+    * artifact again to co-partition it with the state. */
   private def planned(session: classic.SparkSession,
       optimized: LogicalPlan): SparkPlan =
-    session.withActive(ReuseExchangeAndSubquery(
-      QueryExecution.prepareExecutedPlan(session,
-        QueryExecution.createSparkPlan(session.sessionState.planner, optimized))))
+    session.withActive {
+      optimized.foreach {
+        case r: InMemoryRelation if !r.cacheBuilder.isCachedColumnBuffersLoaded =>
+          SQLExecution.withSQLConfPropagated(session)(
+            r.cacheBuilder.cachedColumnBuffers.count())
+        case _ =>
+      }
+      ReuseExchangeAndSubquery(QueryExecution.prepareExecutedPlan(session,
+        QueryExecution.createSparkPlan(session.sessionState.planner, optimized)))
+    }
 
   private def checkpointOf(state: DataFrame): LogicalRDD =
     state.asInstanceOf[classic.Dataset[_]].logicalPlan match {

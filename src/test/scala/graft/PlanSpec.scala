@@ -777,22 +777,37 @@ class PlanSpec extends SparkSpec {
         .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("id")))._1
 
   /** The plan the superstep driver runs for `step` over `state` from
-    * its second superstep on, when the first has materialized the graph
-    * artifact `e` (a cached plan reports its partitioning once it has
-    * run). */
-  private def stepPlan(e: DataFrame, step: DataFrame => DataFrame,
-      state: DataFrame): org.apache.spark.sql.execution.SparkPlan = {
-    e.count()
+    * its second superstep on. */
+  private def stepPlan(step: DataFrame => DataFrame,
+      state: DataFrame): org.apache.spark.sql.execution.SparkPlan =
     org.apache.spark.sql.GraftExpressionBridge.plan(step, state).executedPlan
-  }
+
+  /** Whether the cached frame `df` scans has been built. */
+  private def built(df: DataFrame): Boolean =
+    df.queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+        r.cacheBuilder.isCachedColumnBuffersLoaded
+    }.get
 
   test("a PageRank superstep plans one exchange and no broadcast: the state join is narrow") {
     import graft.graph.{IterativeGraph, PropertyGraph}
     val g = PropertyGraph.customerPartGraph(spark, sf)
     val e = IterativeGraph.pageRankEdges(g.edges)
-    val step = stepPlan(e, IterativeGraph.pageRankStep(col("rank") / col("outdeg"), 0.15)(
+    val step = stepPlan(IterativeGraph.pageRankStep(col("rank") / col("outdeg"), 0.15)(
       e, _), superstepState(g, lit(1.0).as("rank")))
     assert(exchangesIn(step) == ((1, 0)), s"expected only the message exchange:\n$step")
+  }
+
+  test("a superstep planned before its graph artifact has run still plans one exchange") {
+    import graft.graph.{IterativeGraph, PropertyGraph}
+    val g = PropertyGraph.customerPartGraph(spark, sf)
+    // edges without a content key get a fresh artifact per call
+    val e = IterativeGraph.pageRankEdges(g.edges.localCheckpoint())
+    assert(!built(e))
+    val step = stepPlan(IterativeGraph.pageRankStep(col("rank") / col("outdeg"), 0.15)(
+      e, _), superstepState(g, lit(1.0).as("rank")))
+    assert(exchangesIn(step) == ((1, 0)), s"expected only the message exchange:\n$step")
+    assert(built(e))
   }
 
   test("min-label and keyed landmark supersteps plan one exchange and no broadcast") {
@@ -800,10 +815,10 @@ class PlanSpec extends SparkSpec {
     val g = PropertyGraph.customerPartGraph(spark, sf)
     val e = IterativeGraph.undirected(g.edges)
     val steps = Seq(
-      "min-label" -> stepPlan(e, IterativeGraph.minLabelStep(e, _),
+      "min-label" -> stepPlan(IterativeGraph.minLabelStep(e, _),
         superstepState(g, col("id").as("label"), lit(false).as("chg"))),
       // a key column and an active frontier: still the one exchange
-      "landmarks" -> stepPlan(e, IterativeGraph.relaxStep(Seq("landmark"))(e, _),
+      "landmarks" -> stepPlan(IterativeGraph.relaxStep(Seq("landmark"))(e, _),
         superstepState(g, (col("id") % 3).as("landmark"), lit(0L).as("dist"),
           (col("id") % 2 === 0).as("improved"))))
     steps.foreach { case (name, step) =>
@@ -812,18 +827,52 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** The Spark jobs `body` starts, in order, each as the operator
+    * scopes of every stage it ran (a stage whose shuffle output
+    * already exists is skipped, not run) and whether it builds a
+    * broadcast. Every job is counted, whatever its thread: a broadcast
+    * runs its job from one of its own. */
+  private def jobsRun(body: => Unit): Seq[(Seq[Set[String]], Boolean)] = {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
+    val ran = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j)
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        ran.put(s.stageInfo.stageId,
+          s.stageInfo.rddInfos.flatMap(_.scope).map(_.name).toSet)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // the listener bus is asynchronous: wait until the counts settle
+      var last = -1
+      while (last != jobs.size + ran.size) {
+        last = jobs.size + ran.size; Thread.sleep(500)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.asScala.toSeq.sortBy(_.jobId).map { j =>
+      (j.stageIds.sorted.flatMap(id => Option(ran.get(id))),
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .exists(_.contains("broadcast exchange")))
+    }
+  }
+
   test("node2vec hops plan one exchange each: no window, no broadcast") {
     import graft.graph.{IterativeGraph, PropertyGraph}
     val g = PropertyGraph.customerPartGraph(spark, sf)
     val starts = g.vertices.filter(col("id") % 50 === 7).select("id")
-    // a first walk materializes the adjacency artifact, as in a warm run
-    IterativeGraph.node2vecWalks(g.edges, starts, steps = 1,
-      returnWeight = 0.5, outWeight = 0.25, salt = "walk")
-    val plan = org.apache.spark.sql.GraftExpressionBridge.executedPlan(
-      IterativeGraph.node2vecChain(g.edges, starts, steps = 3,
-        returnWeight = 0.5, outWeight = 0.25, salt = "walk"))
-    val (shuffles, broadcasts) = exchangesIn(plan)
-    assert(shuffles == 3 && broadcasts == 0 && !plan.toString.contains("Window"),
-      s"expected one frontier exchange per hop:\n$plan")
+    // edges without a content key get a fresh adjacency artifact, so
+    // the walk builds it before its own job, the call's last
+    val edges = g.edges.localCheckpoint()
+    val jobs = jobsRun(IterativeGraph.node2vecWalks(edges, starts, steps = 3,
+      returnWeight = 0.5, outWeight = 0.25, salt = "walk"))
+    val walk = jobs.last._1
+    assert(jobs.size > 1 && walk.size == 4 && !jobs.exists(_._2) &&
+      !jobs.exists(_._1.exists(_.contains("Window"))),
+      s"expected one frontier exchange per hop and a result stage:\n${jobs.mkString("\n")}")
   }
 }
